@@ -1,6 +1,7 @@
 package graft.exec
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Spark-backed warehouse: the role the external database plays for the
   * reference (its `adapter`), played here by versioned parquet
@@ -19,6 +20,22 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *
   * Relations are exposed to SQL as temp views named `name` so rendered
   * model SQL can reference them like warehouse tables.
+  *
+  * Each stored relation's `$root/$name/_commits` manifest holds optional
+  * header lines, then its live version dir names (`v<N>`), oldest
+  * first:
+  *   - `format=<fmt>`: storage format; absent = parquet;
+  *   - `hide=<c1,c2>`: engine-internal physical columns dropped at every
+  *     read boundary (the snapshot layout's `dbt_part`);
+  *   - `schema=<json>`: the data schema Spark reads from the files (the
+  *     written DataFrame's schema minus partition columns, as Spark's
+  *     StructType JSON). Every read passes it to `.schema(...)`, so no
+  *     read runs Spark's footer-inference job; partition columns still
+  *     come from partition discovery. A manifest without the line
+  *     (older writer) reads through inference and gains the line at its
+  *     next replace; an append keeps the oldest commit's schema.
+  * [[Warehouse.writeCommitsFile]] and [[Warehouse.readCommitsFile]] are
+  * the one writer and the one parser of this format.
   */
 final class Warehouse(val spark: SparkSession, val root: String,
     /** Auto-compaction threshold: when an append pushes a relation's
@@ -35,7 +52,10 @@ final class Warehouse(val spark: SparkSession, val root: String,
         * `dbt_part` partition key) dropped at every read boundary —
         * consumers see exactly the logical schema. Recorded in the
         * `_commits` header so recovery hides them too. */
-      hide: Seq[String] = Nil)
+      hide: Seq[String] = Nil,
+      /** Data schema of the stored files (partition columns excluded);
+        * None = unknown, reads infer it from the footers. */
+      schema: Option[StructType] = None)
 
   /** Formats a table materialization may use (dbt-spark `file_format`):
     * the self-describing columnar pair only — csv/json would lose
@@ -65,42 +85,50 @@ final class Warehouse(val spark: SparkSession, val root: String,
     val rootDir = new java.io.File(root)
     val dirs = Option(rootDir.listFiles()).getOrElse(Array.empty)
       .filter(_.isDirectory)
-    for (d <- dirs) {
-      val cf = new java.io.File(d, "_commits")
-      if (cf.isFile) {
-        val lines = scala.jdk.CollectionConverters.IteratorHasAsScala(
-          java.nio.file.Files.readAllLines(cf.toPath).iterator()).asScala.toSeq
-        // optional "format=<fmt>" header line (older manifests = parquet)
-        val fmt = lines.headOption.filter(_.startsWith("format="))
-          .map(_.stripPrefix("format=")).getOrElse("parquet")
-        val hide = lines.find(_.startsWith("hide="))
-          .map(_.stripPrefix("hide=").split(",").toSeq.filter(_.nonEmpty))
-          .getOrElse(Nil)
-        val versions = lines.filterNot(l =>
-          l.startsWith("format=") || l.startsWith("hide="))
-        val live = versions
-          .map(v => s"$root/${d.getName}/$v")
-          .filter(p => new java.io.File(p).isDirectory)
-        if (live.nonEmpty) {
-          val nextV = live.map(_.split('/').last.stripPrefix("v").toInt).max + 1
-          relations(d.getName) = RelState(live, nextV, isView = false,
-            fmt = fmt, hide = hide)
-          registerRead(d.getName, fmt, live, hide)
-        }
+    for (d <- dirs; c <- Warehouse.readCommitsFile(root, d.getName)) {
+      val live = c.versions
+        .map(v => s"$root/${d.getName}/$v")
+        .filter(p => new java.io.File(p).isDirectory)
+      if (live.nonEmpty) {
+        val nextV = live.map(_.split('/').last.stripPrefix("v").toInt).max + 1
+        val st = RelState(live, nextV, isView = false, fmt = c.fmt, hide = c.hide,
+          schema = c.schema.map(DataType.fromJson(_).asInstanceOf[StructType]))
+        relations(d.getName) = st
+        registerRead(d.getName, st)
       }
     }
   }
 
-  private def writeCommits(name: String, paths: Seq[String],
-      fmt: String = "parquet", hide: Seq[String] = Nil): Unit =
-    Warehouse.writeCommitsFile(root, name, paths, fmt, hide)
-
-  /** (Re-)register the relation's temp view with hidden columns dropped. */
-  private def registerRead(name: String, fmt: String, paths: Seq[String],
-      hide: Seq[String]): Unit = {
-    val df = spark.read.format(fmt).load(paths: _*)
-    (if (hide.isEmpty) df else df.drop(hide: _*)).createOrReplaceTempView(name)
+  /** Install `st` as the relation's state, register its temp view and
+    * persist its manifest. */
+  private def commit(name: String, st: RelState): Unit = lock.synchronized {
+    relations(name) = st
+    registerRead(name, st)
+    Warehouse.writeCommitsFile(root, name, st.paths, st.fmt, st.hide,
+      st.schema.map(_.json))
   }
+
+  /** The one loader of stored files: the recorded data schema when
+    * known, else Spark's inference; partition columns from discovery. */
+  private def load(st: RelState, paths: Seq[String]): DataFrame = {
+    val reader = spark.read.format(st.fmt)
+    st.schema.fold(reader)(reader.schema).load(paths: _*)
+  }
+
+  /** What a write records as the data schema: Spark writes the
+    * DataFrame's columns minus the partition columns into the files. */
+  private def dataSchema(df: DataFrame, partitionBy: Seq[String]): StructType =
+    StructType(df.schema.filterNot(f => partitionBy.exists(_.equalsIgnoreCase(f.name))))
+
+  /** The stored relation as consumers see it: hidden columns dropped. */
+  private def visible(st: RelState): DataFrame = {
+    val df = load(st, st.paths)
+    if (st.hide.isEmpty) df else df.drop(st.hide: _*)
+  }
+
+  /** (Re-)register the relation's temp view. */
+  private def registerRead(name: String, st: RelState): Unit =
+    visible(st).createOrReplaceTempView(name)
 
   def exists(name: String): Boolean = lock.synchronized(relations.contains(name))
 
@@ -121,11 +149,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
   def read(name: String): DataFrame = {
     val st = lock.synchronized(relations.getOrElse(name,
       throw new IllegalArgumentException(s"unknown relation: $name")))
-    if (st.isView || st.isCatalog) spark.table(name)
-    else {
-      val df = spark.read.format(st.fmt).load(st.paths: _*)
-      if (st.hide.isEmpty) df else df.drop(st.hide: _*)
-    }
+    if (st.isView || st.isCatalog) spark.table(name) else visible(st)
   }
 
   /** Read INCLUDING hidden physical columns (the snapshot merge prunes
@@ -134,7 +158,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
     val st = lock.synchronized(relations.getOrElse(name,
       throw new IllegalArgumentException(s"unknown relation: $name")))
     if (st.isView || st.isCatalog) spark.table(name)
-    else spark.read.format(st.fmt).load(st.paths: _*)
+    else load(st, st.paths)
   }
 
   /** Replace the relation's content atomically (new version dir).
@@ -160,12 +184,8 @@ final class Warehouse(val spark: SparkSession, val root: String,
     val writer = clustered.write.mode(SaveMode.Overwrite).format(fmt)
     (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
       .save(path)
-    lock.synchronized {
-      relations(name) = RelState(Seq(path), v + 1, isView = false, fmt = fmt,
-        hide = hideCols)
-      registerRead(name, fmt, Seq(path), hideCols)
-      writeCommits(name, Seq(path), fmt, hideCols)
-    }
+    commit(name, RelState(Seq(path), v + 1, isView = false, fmt = fmt,
+      hide = hideCols, schema = Some(dataSchema(df, partitionBy))))
   }
 
   /** Partition-pruned replace: write ONLY the `touchedVals` partitions'
@@ -288,12 +308,8 @@ final class Warehouse(val spark: SparkSession, val root: String,
         linked += 1
       }
     }
-    lock.synchronized {
-      relations(name) = RelState(Seq(path), v + 1, isView = false, fmt = st.fmt,
-        hide = st.hide)
-      registerRead(name, st.fmt, Seq(path), st.hide)
-      writeCommits(name, Seq(path), st.fmt, st.hide)
-    }
+    commit(name, st.copy(paths = Seq(path), nextVersion = v + 1,
+      schema = Some(dataSchema(touched, partitionBy))))
     (carried.size, linked)
   }
 
@@ -306,13 +322,9 @@ final class Warehouse(val spark: SparkSession, val root: String,
     }
     val path = s"$root/$name/v${st.nextVersion}"
     df.write.mode(SaveMode.Overwrite).format(st.fmt).save(path)
-    lock.synchronized {
-      val newPaths = st.paths :+ path
-      relations(name) = RelState(newPaths, st.nextVersion + 1,
-        isView = false, fmt = st.fmt, hide = st.hide)
-      registerRead(name, st.fmt, newPaths, st.hide)
-      writeCommits(name, newPaths, st.fmt, st.hide)
-    }
+    // the schema stays: Spark reads a commit list with the schema of its
+    // oldest commit's files (an unrecorded one stays inferred)
+    commit(name, st.copy(paths = st.paths :+ path, nextVersion = st.nextVersion + 1))
     if (maxCommits > 0 && commitCount(name) > maxCommits) compact(name)
   }
 
@@ -400,7 +412,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
       _.split('/').last.stripPrefix("v").toInt <= maxVersion)
     require(prefix.nonEmpty,
       s"$name: no commits at or before v$maxVersion (live: ${versions(name).mkString(",")})")
-    spark.read.format(st.fmt).load(prefix: _*)
+    load(st, prefix)
   }
 
   /** Delete on-disk version dirs no longer in the live commit list
@@ -436,28 +448,39 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * the driver-side metadata read that plays the role of the
     * warehouse cursor's `rows_affected` (reference adapter response).
     * No Spark job: O(#files) footer reads, so it stays cheap even when
-    * the data itself is huge. Views fall back to -1 (unknown) rather
-    * than triggering a scan.
+    * the data itself is huge. Data files are found under every
+    * partition level (`col=val/` dirs); `_`/`.` names are Spark's
+    * markers and checksums. Views and non-parquet relations fall back
+    * to -1 (unknown) rather than triggering a scan.
     */
   def rowCount(name: String): Long = {
     val st = lock.synchronized(relations.getOrElse(name,
       throw new IllegalArgumentException(s"unknown relation: $name")))
-    if (st.isView || st.isCatalog || st.paths.isEmpty) -1L
+    if (st.isView || st.isCatalog || st.paths.isEmpty || st.fmt != "parquet") -1L
     else {
       val conf = spark.sparkContext.hadoopConfiguration
-      st.paths.iterator.map { p =>
-        val path = new org.apache.hadoop.fs.Path(p)
-        val fs = path.getFileSystem(conf)
-        val files = fs.listStatus(path).iterator
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        files.map { f =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf)
-          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try reader.getRecordCount finally reader.close()
-        }.sum
-      }.sum
+      def footerRows(dir: org.apache.hadoop.fs.Path): Long =
+        dir.getFileSystem(conf).listStatus(dir).iterator
+          .filterNot(f => f.getPath.getName.startsWith("_") ||
+            f.getPath.getName.startsWith("."))
+          .map { f =>
+            if (f.isDirectory) footerRows(f.getPath)
+            else if (!f.getPath.getName.endsWith(".parquet")) 0L
+            else {
+              val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf)
+              val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in, footerOptions)
+              try reader.getRecordCount finally reader.close()
+            }
+          }.sum
+      st.paths.iterator.map(p => footerRows(new org.apache.hadoop.fs.Path(p))).sum
     }
   }
+
+  /** Footer read options, built once from the session's Hadoop conf
+    * (`ParquetFileReader.open(file)` alone builds and parses a fresh
+    * Hadoop `Configuration` per file). */
+  private lazy val footerOptions =
+    org.apache.parquet.HadoopReadOptions.builder(spark.sparkContext.hadoopConfiguration).build()
 
   /** Register an external parquet path as a source relation view. */
   def registerSource(name: String, df: DataFrame): Unit = lock.synchronized {
@@ -632,12 +655,14 @@ object Warehouse {
     * Spark-free so the crash harness drives the REAL protocol from a
     * plain JVM. */
   def writeCommitsFile(root: String, name: String, paths: Seq[String],
-      fmt: String = "parquet", hide: Seq[String] = Nil): Unit = {
+      fmt: String = "parquet", hide: Seq[String] = Nil,
+      schemaJson: Option[String] = None): Unit = {
     import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
     val f = Paths.get(root, name, "_commits")
     Files.createDirectories(f.getParent)
     val header = (if (fmt == "parquet") Nil else Seq(s"format=$fmt")) ++
-      (if (hide.isEmpty) Nil else Seq(s"hide=${hide.mkString(",")}"))
+      (if (hide.isEmpty) Nil else Seq(s"hide=${hide.mkString(",")}")) ++
+      schemaJson.map(j => s"schema=$j")
     val tmp = f.resolveSibling("_commits.tmp")
     val ch = java.nio.channels.FileChannel.open(tmp,
       StandardOpenOption.CREATE, StandardOpenOption.WRITE,
@@ -661,5 +686,29 @@ object Warehouse {
       try dir.force(true) finally dir.close()
     } catch { case _: java.io.IOException => () }
     ()
+  }
+
+  /** A parsed `_commits` manifest (format in the [[Warehouse]] doc):
+    * storage format, hidden columns, data schema as StructType JSON, and
+    * the live version dir names, oldest first. */
+  final case class Commits(fmt: String, hide: Seq[String],
+      schema: Option[String], versions: Seq[String])
+
+  /** Parse `$root/$name/_commits`; None when the relation has none.
+    * Spark-free, like [[writeCommitsFile]]. */
+  def readCommitsFile(root: String, name: String): Option[Commits] = {
+    val f = java.nio.file.Paths.get(root, name, "_commits")
+    if (!java.nio.file.Files.isRegularFile(f)) None
+    else {
+      val lines = scala.jdk.CollectionConverters.ListHasAsScala(
+        java.nio.file.Files.readAllLines(f)).asScala.toSeq
+      def header(key: String): Option[String] =
+        lines.find(_.startsWith(s"$key=")).map(_.stripPrefix(s"$key="))
+      Some(Commits(
+        fmt = header("format").getOrElse("parquet"),
+        hide = header("hide").toSeq.flatMap(_.split(",")).filter(_.nonEmpty),
+        schema = header("schema"),
+        versions = lines.filterNot(l => Seq("format=", "hide=", "schema=").exists(l.startsWith))))
+    }
   }
 }

@@ -259,9 +259,9 @@ object Multimodal {
       * decode itself is the loop over samples. Returns (sampleRate,
       * bitsPerSample, channels, dataOffset, dataLen) for 16-bit PCM;
       * None sends the caller to the javax.sound fallback (non-PCM,
-      * truncated, or exotic chunk layouts). Chunk lengths are clamped
-      * to the buffer and chunks are word-aligned per the RIFF spec —
-      * the same fields AudioSystem reads from the same bytes.
+      * a data chunk truncated by the end of the buffer, or exotic chunk
+      * layouts). Chunks are word-aligned per the RIFF spec — the same
+      * fields AudioSystem reads from the same bytes.
       */
     private def parseWavPcm(b: Array[Byte]): Option[(Int, Int, Int, Int)] = {
       def u32(o: Int): Long = (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
@@ -286,7 +286,8 @@ object Multimodal {
           } else if (b(off) == 'd' && b(off + 1) == 'a' &&
             b(off + 2) == 't' && b(off + 3) == 'a') {
             dataOff = off + 8
-            dataLen = math.max(0, math.min(len, b.length - dataOff))
+            if (len > b.length - dataOff) return None // truncated — fall back
+            dataLen = len
           }
           off += 8 + len + (len & 1)
         }

@@ -1097,8 +1097,9 @@ object Ext2 {
       // each round exactly once and the per-round persist + count()
       // materialization round-trips (2 extra jobs/round, measured 23
       // jobs/run) are pure scheduling overhead. An UNBOUNDED iteration
-      // would still persist per round to cut lineage (Iterative.fixpoint
-      // keeps doing exactly that); 3 fixed rounds is a depth-3 plan.
+      // would still persist per round to cut lineage (Iterative.
+      // fixpointRoundCounts does exactly that); 3 fixed rounds is a
+      // depth-3 plan.
       var rank = deg.select(col("src").as("node"),
         lit(100000000L / n).as("r"))
       for (_ <- 1 to 3) {

@@ -1318,8 +1318,8 @@ object Ext3 {
     },
 
     // RECURSIVE CTE equivalence (B14 completion): Spark 4 has no
-    // WITH RECURSIVE; the engine's answer is Iterative.fixpoint —
-    // bounded frontier iteration with per-round persist/unpersist (the
+    // WITH RECURSIVE; the engine's answer is Iterative.fixpointRoundCounts
+    // — bounded frontier iteration with per-round persist/unpersist (the
     // pattern q48/q140 hand-roll, packaged). Oracle-gated against
     // DuckDB's REAL recursive CTE on the same decade-tree over order
     // keys (parent = k div 10), so the equivalence is hash-checked,
@@ -1375,51 +1375,31 @@ object Ext3 {
   */
 object Iterative {
   import org.apache.spark.sql.DataFrame
-  def fixpoint(init: DataFrame, maxRounds: Int)(
-      step: DataFrame => DataFrame): DataFrame = {
-    var frontier = init.persist()
-    var n = frontier.count()
-    val rounds = scala.collection.mutable.Buffer[DataFrame](frontier)
-    var i = 0
-    while (n > 0 && i < maxRounds) {
-      val next = step(frontier).persist()
-      n = next.count()
-      if (n > 0) rounds += next
-      frontier = next
-      i += 1
-    }
-    require(n == 0, s"fixpoint did not converge within $maxRounds rounds")
-    val out = rounds.reduce(_ unionByName _)
-    // pin the (already-materialized) union before releasing the rounds
-    val result = out.persist()
-    result.count()
-    rounds.foreach(_.unpersist())
-    result
-  }
 
-  /** Same bounded frontier iteration, but the caller only needs each
-    * round's ROW COUNT (q174: every row of round r is depth r, so the
-    * counts ARE the depth histogram). The convergence-test count per
-    * round is the only action; no union, no recount, no lingering
-    * cache — each round unpersists as soon as the next is
-    * materialized. Returns the per-round counts (round 0 = init).
+  /** The caller only needs each round's ROW COUNT (q174: every row of
+    * round r is depth r, so the counts ARE the depth histogram). The
+    * convergence-test count per round is the only action; no union, no
+    * recount, no lingering cache — each round unpersists as soon as the
+    * next is materialized, and the last one on every exit, a failed
+    * step or a non-converging loop included. Returns the per-round
+    * counts (round 0 = init).
     */
   def fixpointRoundCounts(init: DataFrame, maxRounds: Int)(
       step: DataFrame => DataFrame): Seq[Long] = {
     var frontier = init.persist()
-    var n = frontier.count()
-    val counts = scala.collection.mutable.Buffer[Long](n)
-    var i = 0
-    while (n > 0 && i < maxRounds) {
-      val next = step(frontier).persist()
-      n = next.count()
-      frontier.unpersist()
-      if (n > 0) counts += n
-      frontier = next
-      i += 1
-    }
-    require(n == 0, s"fixpoint did not converge within $maxRounds rounds")
-    frontier.unpersist()
-    counts.toSeq
+    try {
+      var n = frontier.count()
+      val counts = scala.collection.mutable.Buffer[Long](n)
+      var i = 0
+      while (n > 0 && i < maxRounds) {
+        val next = step(frontier).persist()
+        try n = next.count()
+        finally { frontier.unpersist(); frontier = next }
+        if (n > 0) counts += n
+        i += 1
+      }
+      require(n == 0, s"fixpoint did not converge within $maxRounds rounds")
+      counts.toSeq
+    } finally frontier.unpersist()
   }
 }

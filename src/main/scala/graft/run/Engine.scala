@@ -696,7 +696,11 @@ final class Engine(
       case t: TestNode => (t.rawSql, t.refs)
       case other => throw new IllegalArgumentException(s"not compilable: ${other.uniqueId}")
     }
+    // CTEs in post-order: an ephemeral's own ephemeral refs render (and
+    // enter the map) before it, so each CTE follows the ones it uses;
+    // `rendering` guards a cycle
     val ephemeralDeps = scala.collection.mutable.LinkedHashMap[String, String]()
+    val rendering = scala.collection.mutable.Set[String]()
 
     def resolveRef(name: String): String = {
       // reference-time advisories (reference providers.py ref checks):
@@ -745,10 +749,8 @@ final class Engine(
             node.uniqueId, m.uniqueId, "protected", m.packageName)
         case Some(m: ModelNode) if m.config.materialized == "ephemeral" =>
           val cteName = s"__dbt__cte__$name"
-          if (!ephemeralDeps.contains(cteName)) {
-            ephemeralDeps(cteName) = "" // reserve slot (cycle-safe ordering)
+          if (!ephemeralDeps.contains(cteName) && rendering.add(cteName))
             ephemeralDeps(cteName) = renderBody(m.rawSql, relationName(m), m)
-          }
           cteName
         case Some(n) =>
           val rel = relationName(n)
@@ -835,8 +837,15 @@ final class Engine(
       resourceTypes: Set[String] = Set("model", "seed", "snapshot"),
       failFast: Boolean = false,
       fullRefresh: Boolean = false,
-      indirectSelection: String = "eager"): Seq[Materializer.Result] = {
+      indirectSelection: String = "eager"): Seq[Materializer.Result] =
+    schedule(dag, select, exclude, threads, resourceTypes, failFast, fullRefresh,
+      indirectSelection)
 
+  /** [[run]] with `queueDag` ordering the execution; selection always
+    * walks the plain dependency graph. */
+  private def schedule(queueDag: Dag, select: Seq[String], exclude: Seq[String],
+      threads: Int, resourceTypes: Set[String], failFast: Boolean,
+      fullRefresh: Boolean, indirectSelection: String): Seq[Materializer.Result] = {
     currentFullRefresh = fullRefresh
     uniqueRelationsChecked
     val selected0 = Selector.select(manifest, dag, select, exclude, indirectSelection)
@@ -886,7 +895,7 @@ final class Engine(
     val runT0 = System.nanoTime()
     // on-run-start hooks (reference `task/run.py:434-440`)
     runHooks(runStartHooks)
-    val queue = new GraphQueue(dag, selected)
+    val queue = new GraphQueue(queueDag, selected)
     val results = new ConcurrentLinkedQueue[Materializer.Result]()
     val pool = Executors.newFixedThreadPool(threads)
     val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -1655,49 +1664,35 @@ final class Engine(
     * gating downstream nodes (reference test-edge augmentation,
     * `core/dbt/compilation.py:193-244`): a test runs as soon as its
     * inputs exist, and a *failing* (error-severity) test stops
-    * descendants because the test node raises.
+    * descendants because the test node raises. Runs on this engine, so
+    * its warehouse sees every relation the build writes.
     */
   def build(select: Seq[String] = Nil, threads: Int = 4,
       indirectSelection: String = "eager",
-      fullRefresh: Boolean = false): Seq[Materializer.Result] = {
-    // augment: each non-test child of a tested node also depends on the test
-    val testsByParent = manifest.tests.values.flatMap(t =>
-      t.dependsOn.map(p => p -> t.uniqueId)).groupBy(_._1)
-    val augmented = Manifest(manifest.nodes.map {
-      case (id, n) if n.resourceType != "test" && n.resourceType != "source" =>
-        val extra = n.dependsOn.flatMap(p => testsByParent.getOrElse(p, Nil).map(_._2))
-        id -> (n match {
-          case m: ModelNode => m.copy(dependsOn = (m.dependsOn ++ extra).distinct)
-          case s: SnapshotNode => s.copy(dependsOn = (s.dependsOn ++ extra).distinct)
-          case p: PythonModelNode => p.copy(dependsOn = (p.dependsOn ++ extra).distinct)
-          case sc: ScalaModelNode => sc.copy(dependsOn = (sc.dependsOn ++ extra).distinct)
-          case other => other
-        })
-      case kv => kv
+      fullRefresh: Boolean = false): Seq[Materializer.Result] =
+    schedule(testGatedDag, select, Nil, threads,
+      Set("model", "seed", "snapshot", "test", "unit_test"),
+      failFast = false, fullRefresh, indirectSelection)
+
+  /** The build queue's graph: each model or snapshot child of a tested
+    * node also waits on the test, when every node the test reads is
+    * upstream of the child (dbt's rule: a relationships test on a child
+    * that also reads the parent would otherwise gate its own input).
+    * Like dbt, only the queue's graph is augmented, not any node's
+    * `depends_on`. */
+  private lazy val testGatedDag: Dag = {
+    val testsOf = manifest.tests.values.toSeq
+      .flatMap(t => t.dependsOn.map(_ -> t)).groupMap(_._1)(_._2)
+    Dag(dag.parents.map { case (id, ps) =>
+      manifest.nodes(id) match {
+        case n @ (_: ModelNode | _: SnapshotNode | _: PythonModelNode | _: ScalaModelNode) =>
+          lazy val upstream = dag.ancestors(id)
+          id -> (ps ++ n.dependsOn.flatMap(testsOf.getOrElse(_, Nil))
+            .filter(_.dependsOn.filter(dag.parents.contains).forall(upstream))
+            .map(_.uniqueId))
+        case _ => id -> ps
+      }
     })
-    // EVERY constructor param carries over — build() differs from the
-    // outer engine ONLY in its test-gating-augmented manifest (a
-    // dropped param here silently changes build semantics: r14's
-    // review caught typedVars, then target/emptyMode/templateDirs/
-    // queryComment/quoting/targetDir)
-    val eng = new Engine(spark, augmented, warehouseRoot, vars, clock,
-      typedVars = typedVars, emptyMode = emptyMode,
-      runStartHooks = runStartHooks, runEndHooks = runEndHooks,
-      namespace = namespace, macros = macros,
-      macrosByPackage = macrosByPackage,
-      target = target,
-      warnError = warnError, warnErrorOptions = warnErrorOptions,
-      templateDirs = templateDirs, queryComment = queryComment,
-      quoting = quoting, targetDir = targetDir)
-    eng.currentWhich = currentWhich
-    eng.favorState = favorState
-    eng.forceStoreFailures = forceStoreFailures
-    eng.deferEngine = deferEngine
-    eng.deferArtifact = deferArtifact
-    eng.run(select, threads = threads,
-      resourceTypes = Set("model", "seed", "snapshot", "test", "unit_test"),
-      fullRefresh = fullRefresh,
-      indirectSelection = indirectSelection)
   }
 
   /** `dbt show --inline` (reference `core/dbt/task/show.py:22-62`). */

@@ -23,16 +23,9 @@ object CrashCommitChild {
 
     // resume after a kill: next version = committed max + 1 (exactly
     // what Warehouse recovery computes)
-    val cf = Paths.get(root, name, "_commits")
-    val start =
-      if (!Files.exists(cf)) 0
-      else {
-        val vs = scala.jdk.CollectionConverters.ListHasAsScala(
-          Files.readAllLines(cf)).asScala
-          .filterNot(_.startsWith("format="))
-          .map(_.stripPrefix("v").toInt)
-        if (vs.isEmpty) 0 else vs.max + 1
-      }
+    val start = graft.exec.Warehouse.readCommitsFile(root, name)
+      .map(_.versions.map(_.stripPrefix("v").toInt))
+      .filter(_.nonEmpty).fold(0)(_.max + 1)
 
     var k = start
     while (true) {

@@ -1352,8 +1352,8 @@ class EngineSpec extends SparkSpec {
     assert(spark.table("snap_hook_yml").count() === 1)
     assert(spark.table("snap_hook_file").count() === 1)
     // the strategy resolved: row_changed used both list elements
-    // (read through a fresh engine — build() materializes via its
-    // inner engine, so recovery-from-disk is the read path)
+    // (read through a fresh engine, so recovery-from-disk is the read
+    // path)
     val snap = new Engine(spark, graft.core.Manifest(Map.empty), whRoot).wh.read("hs")
     assert(snap.count() === 1)
     spark.sql("DROP VIEW IF EXISTS dash_seed_hook")
@@ -1425,8 +1425,8 @@ class EngineSpec extends SparkSpec {
       results.find(_.uniqueId == id).map(_.status).getOrElse("missing")
     assert(statusOf("seed.graft.typed") === "success")
     assert(statusOf("snapshot.graft.snap_rows") === "success")
-    // read through a FRESH engine: build() materializes via its inner
-    // engine, so recovery-from-disk is the read path (the m-gate idiom)
+    // read through a FRESH engine, so recovery-from-disk is the read
+    // path (the m-gate idiom)
     val wh = new Engine(spark, graft.core.Manifest(Map.empty), whRoot).wh
     // column_types applied: pop is bigint, empty cell -> null
     val typed = wh.read("typed")
@@ -1495,7 +1495,7 @@ class EngineSpec extends SparkSpec {
     val whRoot = tmpDir("wh")
     val eng = Engine.fromProject(spark, writeProject(proj), whRoot)
     eng.currentWhich = "build" // what Cli sets for the build command
-    val results = eng.build() // the INNER engine must inherit both
+    val results = eng.build() // the build must see both
     assert(results.forall(r => r.status == "success" || r.status == "pass"),
       results.filterNot(r => r.status == "success" || r.status == "pass")
         .mkString("; "))
@@ -1613,5 +1613,90 @@ class EngineSpec extends SparkSpec {
     assert(summary.contains("a:success;"))
     assert(summary.contains("b:success;"))
     assert(probe.getInt(2) === 2)
+  }
+
+  test("catalog.json after build lists every relation the build created, with its columns") {
+    val proj = Map(
+      "dbt_project.yml" -> "name: catbuild\n",
+      "seeds/regions.csv" -> "region_code,region_label\n1,east\n2,west\n",
+      "models/stg_regions.sql" -> "SELECT * FROM {{ ref('regions') }}",
+      "models/fct_regions.sql" ->
+        "{{ config(materialized='table') }}\nSELECT region_code, upper(region_label) AS label FROM {{ ref('stg_regions') }}",
+      "models/schema.yml" ->
+        """models:
+          |  - name: fct_regions
+          |    columns:
+          |      - name: region_code
+          |        tests: [unique]
+          |""".stripMargin,
+      "snapshots/region_snap.sql" ->
+        """{{ config(strategy='check', unique_key='region_code', check_cols=['region_label']) }}
+          |SELECT * FROM {{ ref('regions') }}""".stripMargin)
+    val eng = Engine.fromProject(spark, writeProject(proj), tmpDir("wh"))
+    val results = eng.build()
+    assert(results.forall(r => r.status == "success" || r.status == "pass"), results.mkString("; "))
+    val target = tmpDir("target")
+    eng.writeArtifacts(target, results)
+    val nodes = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(Paths.get(target, "catalog.json").toFile).get("nodes")
+    val expected = Map(
+      "regions" -> Seq("region_code", "region_label"),
+      "stg_regions" -> Seq("region_code", "region_label"),
+      "fct_regions" -> Seq("region_code", "label"),
+      "region_snap" -> Seq("region_code", "region_label", "dbt_scd_id",
+        "dbt_updated_at", "dbt_valid_from", "dbt_valid_to"))
+    for ((rel, cols) <- expected) {
+      assert(nodes.has(rel), s"$rel missing from catalog.json")
+      val listed = scala.jdk.CollectionConverters.SetHasAsScala(
+        nodes.get(rel).get("columns").properties()).asScala.map(_.getKey).toSet
+      assert(cols.toSet.subsetOf(listed), s"$rel columns: $listed")
+    }
+  }
+
+  test("an ephemeral model that refs another ephemeral model compiles its CTEs in dependency order") {
+    val proj = Map(
+      "dbt_project.yml" -> "name: ephchain\n",
+      "models/eph2.sql" -> "{{ config(materialized='ephemeral') }}\nSELECT 1 AS x",
+      "models/eph1.sql" ->
+        "{{ config(materialized='ephemeral') }}\nSELECT x + 1 AS y FROM {{ ref('eph2') }}",
+      "models/a.sql" ->
+        "{{ config(materialized='table') }}\nSELECT y * 10 AS z FROM {{ ref('eph1') }}")
+    val eng = Engine.fromProject(spark, writeProject(proj), tmpDir("wh"))
+    val results = eng.run()
+    assert(results.forall(_.status == "success"), results.mkString("; "))
+    assert(eng.wh.read("a").collect().map(_.getInt(0)).toSeq === Seq(20))
+    val sql = eng.compile(eng.manifest.resolveRef("a").get)
+    assert(sql.indexOf("__dbt__cte__eph2 AS") < sql.indexOf("__dbt__cte__eph1 AS"), sql)
+  }
+
+  test("build gates a model on a relationships test only when the test's inputs are all upstream") {
+    // fct refs dim, and fct's relationships test refs dim too: the test
+    // depends on fct, so it must not gate fct (dbt adds a test edge only
+    // when every node the test reads is upstream of the gated node)
+    val proj = Map(
+      "dbt_project.yml" -> "name: relgate\n",
+      "seeds/dim.csv" -> "id,label\n1,a\n2,b\n",
+      "models/fct.sql" ->
+        "{{ config(materialized='table') }}\nSELECT id AS dim_id, 10 * id AS v FROM {{ ref('dim') }}",
+      "models/rpt.sql" ->
+        "{{ config(materialized='table') }}\nSELECT sum(v) AS total FROM {{ ref('fct') }}",
+      "models/schema.yml" ->
+        """models:
+          |  - name: fct
+          |    columns:
+          |      - name: dim_id
+          |        tests:
+          |          - relationships:
+          |              to: ref('dim')
+          |              field: id
+          |""".stripMargin)
+    val eng = Engine.fromProject(spark, writeProject(proj), tmpDir("wh"))
+    val results = eng.build(threads = 1)
+    assert(results.forall(r => r.status == "success" || r.status == "pass"), results.mkString("; "))
+    val order = results.map(_.uniqueId)
+    val rel = order.indexWhere(_.startsWith("test.graft.relationships_fct"))
+    assert(rel >= 0, order.mkString(", "))
+    // the test still gates what is downstream of everything it reads
+    assert(rel < order.indexOf("model.graft.rpt"), order.mkString(", "))
   }
 }

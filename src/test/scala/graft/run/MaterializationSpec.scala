@@ -127,4 +127,24 @@ class MaterializationSpec extends SparkSpec {
     assert(spark.table("mat_audit_log").collect().head
       .getAs[Number](0).longValue === 3L)
   }
+
+  test("rows_affected counts every partition of a partitioned table and of a snapshot") {
+    val root = graft.SparkSpec.registerScratch(Files.createTempDirectory("mat_rows"))
+    baseProject(root)
+    write(root, "models/orders_by_status.sql",
+      """{{ config(materialized='table', partition_by='o_orderstatus') }}
+        |SELECT o_orderkey, o_orderstatus FROM {{ source('main', 'orders') }}""".stripMargin)
+    write(root, "snapshots/orders_snap.sql",
+      """{{ config(strategy='check', unique_key='o_orderkey', check_cols=['o_orderstatus']) }}
+        |SELECT o_orderkey, o_orderstatus FROM {{ source('main', 'orders') }}""".stripMargin)
+    val eng = Engine.fromProject(spark, root.toString, tmpDir("wh"))
+    val results = eng.run()
+    assert(results.forall(_.status == "success"), results.mkString("; "))
+    for (name <- Seq("orders_by_status", "orders_snap")) {
+      val r = results.find(_.uniqueId.endsWith(s".$name")).get
+      val n = eng.wh.read(name).count()
+      assert(n > 0)
+      assert(r.rowsAffected === n, name)
+    }
+  }
 }
