@@ -22,7 +22,8 @@ object Materializer {
       status: String, // success | error | skipped | pass | warn | fail
       message: String = "",
       rowsAffected: Long = -1,
-      elapsedSec: Double = 0.0)
+      elapsedSec: Double = 0.0,
+      threadId: String = "main") // the scheduler worker that ran the node
 
   /** Injected clock (SURVEY §7 hard-part 2: snapshot determinism). */
   type Clock = () => java.sql.Timestamp

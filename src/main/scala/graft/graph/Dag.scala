@@ -623,41 +623,45 @@ object Selector {
 }
 
 /** Thread-safe release-on-done scheduler queue — the reference's
-  * `GraphQueue` (`core/dbt/graph/queue.py:19-207`): nodes become
-  * available when all parents completed; priority = depth score
-  * (deeper first is the reference's ordering via topological
-  * generation).
+  * `GraphQueue` (`core/dbt/graph/queue.py:19-207`): a node becomes
+  * ready once all its selected parents are done, and among ready nodes
+  * the lowest depth score goes first (then the name), as the
+  * reference's priority queue orders them. Workers block in [[take]]
+  * and are released by [[markDone]] / [[markFailed]].
   */
 final class GraphQueue(dag: Dag, selected: Set[String]) {
   private val scores = dag.depthScores
   private val lock = new Object
+  /** Nodes not yet taken, with their unfinished parents. */
   private val remainingParents = scala.collection.mutable.Map(
     selected.toSeq.map(id =>
       id -> dag.parents.getOrElse(id, Set.empty).intersect(selected)
         .to(scala.collection.mutable.Set)): _*)
   private val inProgress = scala.collection.mutable.Set[String]()
-  private val done = scala.collection.mutable.Set[String]()
+  private var stopped = false
 
-  /** Pop one ready node (lowest depth score first, then name), or None
-    * if nothing is ready right now; blocks=false semantics.
+  /** Wait until a node is ready and claim it. None once nothing is
+    * pending or in progress, or after [[stop]].
     */
-  def poll(): Option[String] = lock.synchronized {
-    val ready = remainingParents.collect {
-      case (id, ps) if ps.isEmpty && !inProgress(id) && !done(id) => id
+  def take(): Option[String] = lock.synchronized {
+    var next: Option[String] = None
+    while (next.isEmpty && !stopped && !isComplete) {
+      val ready = remainingParents.collect { case (id, ps) if ps.isEmpty => id }
+      if (ready.isEmpty) lock.wait()
+      else {
+        val id = ready.minBy(id => (scores.getOrElse(id, 0), id))
+        remainingParents.remove(id)
+        inProgress += id
+        next = Some(id)
+      }
     }
-    if (ready.isEmpty) None
-    else {
-      val next = ready.minBy(id => (scores.getOrElse(id, 0), id))
-      inProgress += next
-      Some(next)
-    }
+    next
   }
 
   def markDone(id: String): Unit = lock.synchronized {
     inProgress -= id
-    done += id
-    remainingParents.remove(id)
     remainingParents.values.foreach(_ -= id)
+    lock.notifyAll()
   }
 
   /** Mark failed: downstream nodes are skipped (reference skip cascade,
@@ -666,16 +670,20 @@ final class GraphQueue(dag: Dag, selected: Set[String]) {
     */
   def markFailed(id: String): Set[String] = lock.synchronized {
     inProgress -= id
-    done += id
-    remainingParents.remove(id)
-    val skipped = dag.descendants(id).intersect(remainingParents.keySet.toSet)
-    skipped.foreach { s => remainingParents.remove(s); done += s }
+    val skipped = dag.descendants(id).intersect(remainingParents.keySet)
+    remainingParents --= skipped
+    lock.notifyAll()
     skipped
+  }
+
+  /** Fail-fast: no node is handed out from now on, and blocked
+    * [[take]] calls return None. */
+  def stop(): Unit = lock.synchronized {
+    stopped = true
+    lock.notifyAll()
   }
 
   def isComplete: Boolean = lock.synchronized {
     remainingParents.isEmpty && inProgress.isEmpty
   }
-
-  def pending: Int = lock.synchronized(remainingParents.size)
 }

@@ -58,11 +58,11 @@ object Artifacts {
             obj(Seq("rows_affected" -> r.rowsAffected.toString))
           else obj(Nil)),
         "timing" -> arr(Nil),
-        "thread_id" -> q("main"),
+        "thread_id" -> q(r.threadId),
         "compiled" -> (if (r.status == "skipped") "null" else "true"),
         "compiled_code" -> "null",
         "relation_name" -> "null",
-        "failures" -> (if (r.status == "fail") "1" else "null")))
+        "failures" -> failures(r)))
     }
     val doc = obj(Seq(
       "metadata" -> obj(Seq(
@@ -75,6 +75,18 @@ object Artifacts {
       "args" -> obj(Nil)))
     write(path, doc)
   }
+
+  /** A test's failing-row count (reference `RunResult.failures`): 0 on
+    * pass, N on warn or fail (a failing unit test counts 1); null for
+    * other nodes and for a test that errored before its verdict. */
+  private def failures(r: Materializer.Result): String =
+    if (!r.uniqueId.startsWith("test.") && !r.uniqueId.startsWith("unit_test.")) "null"
+    else if (r.rowsAffected >= 0) r.rowsAffected.toString
+    else r.status match {
+      case "pass" => "0"
+      case "fail" => "1"
+      case _ => "null"
+    }
 
   private def sha256(s: String): String =
     java.security.MessageDigest.getInstance("SHA-256")

@@ -442,22 +442,8 @@ object Cli {
       case c => c
     }
     command match {
-      case "run" => report(inState(engine.run(select, exclude, threads,
-        fullRefresh = opts.contains("full-refresh"),
-        failFast = opts.contains("fail-fast"),
-        indirectSelection = indirect)))
-      case "seed" => report(inState(engine.run(select, exclude, threads,
-        resourceTypes = Set("seed"),
-        fullRefresh = opts.contains("full-refresh"))))
-      case "snapshot" => report(inState(engine.run(select, exclude, threads,
-        resourceTypes = Set("snapshot"))))
-      case "test" => report(inState(engine.test(select, threads,
-        storeFailures = opts.contains("store-failures"))))
-      case "build" =>
-        engine.forceStoreFailures = opts.contains("store-failures")
-        report(inState(engine.build(select, threads,
-          indirectSelection = indirect,
-          fullRefresh = opts.contains("full-refresh"))))
+      case c if Engine.commandTypes.contains(c) =>
+        report(inState(runNodes(engine, c, opts, select, exclude, threads)))
       case "ls" =>
         // reference `dbt ls` (core/dbt/task/list.py): --resource-type
         // filters; --output selector|name|path|json (default selector,
@@ -680,6 +666,19 @@ object Cli {
         println(s"unknown command: $other\n$usage"); sys.exit(2)
     }
     spark.stop()
+  }
+
+  /** `run`, `seed`, `snapshot`, `test` and `build`: one engine run over
+    * the command's resource types, every selection and execution flag
+    * honoured alike (reference `GraphRunnableTask` behind all five). */
+  private[run] def runNodes(engine: Engine, command: String,
+      opts: Map[String, String], select: Seq[String], exclude: Seq[String],
+      threads: Int): Seq[graft.exec.Materializer.Result] = {
+    engine.forceStoreFailures = opts.contains("store-failures")
+    engine.run(select, exclude, threads, Engine.commandTypes(command),
+      failFast = opts.contains("fail-fast"),
+      fullRefresh = opts.contains("full-refresh"),
+      indirectSelection = opts.getOrElse("indirect-selection", "eager"))
   }
 
   /** Reference spellings: `list` is the primary name (`ls` the

@@ -125,7 +125,7 @@ final class Engine(
     */
   @volatile var favorState: Boolean = false
   /** `--store-failures` (reference cli/params.py): force the config on
-    * for every test this invocation (test + build paths). */
+    * for every test this invocation runs. */
   @volatile var forceStoreFailures: Boolean = false
 
   /** Ids selected by the in-flight run (reference
@@ -808,10 +808,6 @@ final class Engine(
 
   // ---------------------------------------------------------------- run
 
-  /** Execute selected nodes over `threads` workers. Returns results in
-    * completion order. `resourceTypes` filters what executes (run vs
-    * test vs build); dependencies still gate scheduling.
-    */
   /** AmbiguousAliasError (reference `exceptions.py:1138-1156`, raised
     * by the manifest duplicate check at parse): two enabled
     * materializable nodes whose database representation (relationName)
@@ -830,22 +826,19 @@ final class Engine(
       }
   }
 
+  /** Execute the selected nodes of `resourceTypes` over `threads`
+    * workers: the one path behind `run`, `seed`, `snapshot`, `test` and
+    * `build` (reference `GraphRunnableTask`, `task/runnable.py`).
+    * Returns results in completion order; dependencies gate scheduling.
+    */
   def run(
       select: Seq[String] = Nil,
       exclude: Seq[String] = Nil,
       threads: Int = 4,
-      resourceTypes: Set[String] = Set("model", "seed", "snapshot"),
+      resourceTypes: Set[String] = Engine.commandTypes("run"),
       failFast: Boolean = false,
       fullRefresh: Boolean = false,
-      indirectSelection: String = "eager"): Seq[Materializer.Result] =
-    schedule(dag, select, exclude, threads, resourceTypes, failFast, fullRefresh,
-      indirectSelection)
-
-  /** [[run]] with `queueDag` ordering the execution; selection always
-    * walks the plain dependency graph. */
-  private def schedule(queueDag: Dag, select: Seq[String], exclude: Seq[String],
-      threads: Int, resourceTypes: Set[String], failFast: Boolean,
-      fullRefresh: Boolean, indirectSelection: String): Seq[Materializer.Result] = {
+      indirectSelection: String = "eager"): Seq[Materializer.Result] = {
     currentFullRefresh = fullRefresh
     uniqueRelationsChecked
     val selected0 = Selector.select(manifest, dag, select, exclude, indirectSelection)
@@ -895,133 +888,127 @@ final class Engine(
     val runT0 = System.nanoTime()
     // on-run-start hooks (reference `task/run.py:434-440`)
     runHooks(runStartHooks)
+    // selection walks the plain dependency graph; when tests execute
+    // beside the nodes they test (`build`), the queue's graph also
+    // gates each child on its parents' tests
+    val queueDag =
+      if (resourceTypes("test") && resourceTypes.exists(Set("model", "seed", "snapshot")))
+        testGatedDag
+      else dag
     val queue = new GraphQueue(queueDag, selected)
     val results = new ConcurrentLinkedQueue[Materializer.Result]()
-    val pool = Executors.newFixedThreadPool(threads)
-    val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
 
-    def worker(): Unit = {
-      var continue = true
-      while (continue && !(failFast && failed.get())) {
-        queue.poll() match {
-          case Some(id) =>
-            val t0 = System.nanoTime()
-            val node = manifest.nodes(id)
-            spark.sparkContext.setJobGroup(id, s"graft: $id", interruptOnCancel = true)
-            applyQueryComment(node)
-            val idx = nodeIndex.incrementAndGet()
-            EventLog.info("node_started", "code" -> "Q024", "unique_id" -> id,
-              "index" -> idx, "total" -> nTotal,
-              "invocation_id" -> invocationId)
-            // reference Q011 LogStartLine: the "i of N START ..." line
-            EventLog.info("log_start_line", "code" -> "Q011",
-              "unique_id" -> id, "index" -> idx, "total" -> nTotal)
-            compileNanosTL.set(0L)
-            // reference Z010 TimingInfoCollected: one line per timing
-            // entry; compile time accumulates across the node's renders
-            def emitTiming(totalNanos: Long): Unit = {
-              val compileSec = compileNanosTL.get() / 1e9
-              EventLog.emit("timing_info_collected", "debug",
-                "code" -> "Z010", "unique_id" -> id,
-                "timing_name" -> "compile", "elapsed_sec" -> compileSec)
-              EventLog.emit("timing_info_collected", "debug",
-                "code" -> "Z010", "unique_id" -> id,
-                "timing_name" -> "execute",
-                "elapsed_sec" -> math.max(0.0, totalNanos / 1e9 - compileSec))
-            }
-            try {
-              val r0 = runNode(node, fullRefresh)
-              val dt = (System.nanoTime() - t0) / 1e9
-              emitTiming(System.nanoTime() - t0)
-              val r = r0.copy(elapsedSec = dt)
-              results.add(r)
-              if (r.status == "fail") {
-                // failing test (dbt parity: status=fail, not a runtime
-                // error): cascade-skip dependents, honor fail-fast
-                failed.set(true)
-                EventLog.error("node_finished", "code" -> "Q025", "unique_id" -> id,
-                  "status" -> r.status, "elapsed_sec" -> dt,
-                  "message" -> r.message, "invocation_id" -> invocationId)
-                resultLine(id, r.status, idx, dt)
-                if (node.resourceType == "test" || node.resourceType == "unit_test")
-                  // reference Z027 CheckNodeTestFailure: how to inspect
-                  // the failing rows (store_failures audit relation)
-                  EventLog.info("check_node_test_failure", "code" -> "Z027",
-                    "relation_name" -> s"${node.name}__audit",
-                    "msg" -> (s"compiled test SQL kept the failing rows; " +
-                      s"with store_failures they persist as ${node.name}__audit"))
-                val skipped = queue.markFailed(id)
-                skipped.foreach { sid =>
-                  results.add(Materializer.Result(sid, "skipped",
-                    message = s"upstream failure: $id"))
-                  EventLog.warn("node_finished", "code" -> "Q025", "unique_id" -> sid,
-                    "status" -> "skipped", "message" -> s"upstream failure: $id",
-                    "invocation_id" -> invocationId)
-                  EventLog.error("log_skip_because_error", "code" -> "Z034",
-                    "unique_id" -> sid, "status" -> "skipped",
-                    "msg" -> s"SKIP relation $sid due to ancestor failure $id")
-                  EventLog.info("skipping_details", "code" -> "Q034",
-                    "unique_id" -> sid, "index" -> nodeIndex.incrementAndGet(),
-                    "total" -> nTotal)
-                }
-              } else {
-                EventLog.info("node_finished", "code" -> "Q025", "unique_id" -> id,
-                  "status" -> r.status, "elapsed_sec" -> dt,
-                  "invocation_id" -> invocationId)
-                resultLine(id, r.status, idx, dt)
-                queue.markDone(id)
-              }
-            } catch {
-              case e: Throwable =>
-                failed.set(true)
-                val dt = (System.nanoTime() - t0) / 1e9
-                emitTiming(System.nanoTime() - t0)
-                results.add(Materializer.Result(id, "error",
-                  message = String.valueOf(e.getMessage),
-                  elapsedSec = dt))
-                // reference W004 GenericExceptionOnRun + Z011 debug
-                // stack trace (the error channel a log consumer parses)
-                EventLog.error("generic_exception_on_run", "code" -> "W004",
-                  "unique_id" -> id, "exc" -> String.valueOf(e.getMessage))
-                EventLog.emit("log_debug_stack_trace", "debug",
-                  "code" -> "Z011",
-                  "exc_info" -> e.getStackTrace.take(12).mkString(" <- "))
-                EventLog.error("node_finished", "code" -> "Q025", "unique_id" -> id,
-                  "status" -> "error", "elapsed_sec" -> dt,
-                  "message" -> String.valueOf(e.getMessage),
-                  "invocation_id" -> invocationId)
-                resultLine(id, "error", idx, dt)
-                val skipped = queue.markFailed(id)
-                skipped.foreach { sid =>
-                  results.add(Materializer.Result(sid, "skipped",
-                    message = s"upstream failure: $id"))
-                  EventLog.warn("node_finished", "code" -> "Q025", "unique_id" -> sid,
-                    "status" -> "skipped", "message" -> s"upstream failure: $id",
-                    "invocation_id" -> invocationId)
-                  EventLog.error("log_skip_because_error", "code" -> "Z034",
-                    "unique_id" -> sid, "status" -> "skipped",
-                    "msg" -> s"SKIP relation $sid due to ancestor failure $id")
-                  EventLog.info("skipping_details", "code" -> "Q034",
-                    "unique_id" -> sid, "index" -> nodeIndex.incrementAndGet(),
-                    "total" -> nTotal)
-                }
-            } finally {
-              spark.sparkContext.clearJobGroup()
-              clearQueryComment()
-            }
-          case None =>
-            if (queue.isComplete) continue = false
-            else Thread.sleep(5)
+    // reference Z010 TimingInfoCollected: one line per timing entry;
+    // compile time accumulates across the node's renders
+    def emitTiming(id: String, totalNanos: Long): Unit = {
+      val compileSec = compileNanosTL.get() / 1e9
+      EventLog.emit("timing_info_collected", "debug",
+        "code" -> "Z010", "unique_id" -> id,
+        "timing_name" -> "compile", "elapsed_sec" -> compileSec)
+      EventLog.emit("timing_info_collected", "debug",
+        "code" -> "Z010", "unique_id" -> id,
+        "timing_name" -> "execute",
+        "elapsed_sec" -> math.max(0.0, totalNanos / 1e9 - compileSec))
+    }
+
+    /** Record a node's result, emit its result events and release it in
+      * the queue. An error or fail skips its pending descendants and,
+      * under fail-fast, starts no further node. */
+    def finish(node: Node, idx: Int, t0: Long, r0: Materializer.Result): Unit = {
+      val id = node.uniqueId
+      val failed = r0.status == "error" || r0.status == "fail"
+      if (failed && failFast) queue.stop()
+      val thread = Thread.currentThread().getName
+      try {
+        val nanos = System.nanoTime() - t0
+        val dt = nanos / 1e9
+        emitTiming(id, nanos)
+        val r = r0.copy(elapsedSec = dt, threadId = thread)
+        results.add(r)
+        if (failed)
+          EventLog.error("node_finished", "code" -> "Q025", "unique_id" -> id,
+            "status" -> r.status, "elapsed_sec" -> dt,
+            "message" -> r.message, "invocation_id" -> invocationId)
+        else
+          EventLog.info("node_finished", "code" -> "Q025", "unique_id" -> id,
+            "status" -> r.status, "elapsed_sec" -> dt,
+            "invocation_id" -> invocationId)
+        resultLine(id, r.status, idx, dt)
+        if (r.status == "fail" && Set("test", "unit_test")(node.resourceType))
+          // reference Z027 CheckNodeTestFailure: how to inspect the
+          // failing rows (store_failures audit relation)
+          EventLog.info("check_node_test_failure", "code" -> "Z027",
+            "relation_name" -> s"${node.name}__audit",
+            "msg" -> (s"compiled test SQL kept the failing rows; " +
+              s"with store_failures they persist as ${node.name}__audit"))
+      } finally {
+        if (!failed) queue.markDone(id)
+        else queue.markFailed(id).foreach { sid =>
+          results.add(Materializer.Result(sid, "skipped",
+            message = s"upstream failure: $id", threadId = thread))
+          EventLog.warn("node_finished", "code" -> "Q025", "unique_id" -> sid,
+            "status" -> "skipped", "message" -> s"upstream failure: $id",
+            "invocation_id" -> invocationId)
+          EventLog.error("log_skip_because_error", "code" -> "Z034",
+            "unique_id" -> sid, "status" -> "skipped",
+            "msg" -> s"SKIP relation $sid due to ancestor failure $id")
+          EventLog.info("skipping_details", "code" -> "Q034",
+            "unique_id" -> sid, "index" -> nodeIndex.incrementAndGet(),
+            "total" -> nTotal)
         }
       }
     }
 
-    val futures = (1 to threads).map(_ => pool.submit(new Runnable {
-      def run(): Unit = worker()
-    }))
-    futures.foreach(_.get())
-    pool.shutdown()
-    pool.awaitTermination(60, TimeUnit.SECONDS)
+    def worker(): Unit = {
+      var next = queue.take()
+      while (next.nonEmpty) {
+        val id = next.get
+        val node = manifest.nodes(id)
+        val t0 = System.nanoTime()
+        val idx = nodeIndex.incrementAndGet()
+        compileNanosTL.set(0L)
+        // reported as is only if the error handling below itself throws
+        var result = Materializer.Result(id, "error")
+        try {
+          spark.sparkContext.setJobGroup(id, s"graft: $id", interruptOnCancel = true)
+          applyQueryComment(node)
+          EventLog.info("node_started", "code" -> "Q024", "unique_id" -> id,
+            "index" -> idx, "total" -> nTotal,
+            "invocation_id" -> invocationId)
+          // reference Q011 LogStartLine: the "i of N START ..." line
+          EventLog.info("log_start_line", "code" -> "Q011",
+            "unique_id" -> id, "index" -> idx, "total" -> nTotal)
+          result = runNode(node, fullRefresh)
+        } catch {
+          case e: Throwable =>
+            result = Materializer.Result(id, "error", String.valueOf(e.getMessage))
+            // reference W004 GenericExceptionOnRun + Z011 debug stack
+            // trace (the error channel a log consumer parses)
+            EventLog.error("generic_exception_on_run", "code" -> "W004",
+              "unique_id" -> id, "exc" -> String.valueOf(e.getMessage))
+            EventLog.emit("log_debug_stack_trace", "debug",
+              "code" -> "Z011",
+              "exc_info" -> e.getStackTrace.take(12).mkString(" <- "))
+        } finally {
+          spark.sparkContext.clearJobGroup()
+          clearQueryComment()
+          finish(node, idx, t0, result)
+        }
+        next = queue.take()
+      }
+    }
+
+    // dbt names its pool's threads `Thread-N (worker)`; the name is
+    // each result's thread_id
+    val nWorkers = new java.util.concurrent.atomic.AtomicInteger(0)
+    val pool = Executors.newFixedThreadPool(threads, (r: Runnable) =>
+      new Thread(r, s"Thread-${nWorkers.incrementAndGet()} (worker)"))
+    try (1 to threads).map(_ => pool.submit((() => worker()): Runnable)).foreach(_.get())
+    finally {
+      queue.stop() // a worker that died must not leave the others waiting
+      pool.shutdown()
+      pool.awaitTermination(60, TimeUnit.SECONDS): Unit
+    }
     // on-run-end hooks (reference `task/run.py:442-463`) — the context
     // binds `results`: one dict per executed node (status/message/
     // execution_time/node.unique_id), the audit-table upload idiom
@@ -1033,7 +1020,7 @@ final class Engine(
           "status" -> JS(r.status),
           "message" -> JS(r.message),
           "execution_time" -> JN(BigDecimal(r.elapsedSec), isInt = false),
-          "thread_id" -> JS("main"),
+          "thread_id" -> JS(r.threadId),
           "adapter_response" ->
             (if (r.rowsAffected >= 0)
               JM(Map("rows_affected" -> (jint(r.rowsAffected): JV)))
@@ -1460,71 +1447,9 @@ final class Engine(
         "execution_time" -> (System.nanoTime() - t0) / 1e9)
     }
 
-  /** `dbt test`: data tests (+ unit tests) only. */
-  def test(select: Seq[String] = Nil, threads: Int = 4,
-      storeFailures: Boolean = false): Seq[Materializer.Result] = {
-    val selected = Selector.select(manifest, dag, select)
-      .filter(id => manifest.nodes.get(id).exists(n =>
-        n.resourceType == "test" || n.resourceType == "unit_test"))
-    val total = selected.size
-    // tests are independent — fan out over the worker pool like the
-    // reference's test task (threads was previously ignored here);
-    // results keep selection order via the future list
-    val pool = Executors.newFixedThreadPool(math.max(1, threads))
-    val out = try {
-      val futures = selected.toSeq.sorted.zipWithIndex.map { case (id, i) =>
-        pool.submit(new java.util.concurrent.Callable[Materializer.Result] {
-          def call(): Materializer.Result = runOneTest(id, i, total, storeFailures)
-        })
-      }
-      futures.map(_.get())
-    } finally {
-      // non-daemon workers: without this, a throwing future leaves the
-      // pool alive and the CLI JVM never exits
-      pool.shutdown()
-      pool.awaitTermination(60, TimeUnit.SECONDS): Unit
-    }
-    out.filter(r => r.status == "error" || r.status == "fail").foreach(r =>
-      EventLog.error("run_result_error", "code" -> "Z024",
-        "unique_id" -> r.uniqueId, "message" -> r.message))
-    out
-  }
-
-  private def runOneTest(id: String, i: Int, total: Int,
-      storeFailures: Boolean = false): Materializer.Result = {
-      val t0 = System.nanoTime()
-      applyQueryComment(manifest.nodes(id))
-      val r = try manifest.nodes(id) match {
-        case t0n: TestNode =>
-          // --store-failures (reference cli/params.py store_failures):
-          // the CLI flag forces the config on for every selected test
-          val t = if (storeFailures || forceStoreFailures)
-            t0n.copy(config = t0n.config.copy(storeFailures = true)) else t0n
-          try {
-            val (raw, failures) = Materializer.runTest(wh, t.copy(rawSql = compile(t)))
-            val status = if (promoteTestWarn && raw == "warn") "error" else raw
-            Materializer.Result(id, status, s"$failures failures",
-              rowsAffected = failures, elapsedSec = (System.nanoTime() - t0) / 1e9)
-          } catch {
-            case e: Throwable =>
-              Materializer.Result(id, "error", String.valueOf(e.getMessage))
-          }
-        case u: UnitTestNode =>
-          try {
-            runUnitTestNode(u)
-            Materializer.Result(id, "pass", elapsedSec = (System.nanoTime() - t0) / 1e9)
-          } catch {
-            case e: Throwable => Materializer.Result(id, "fail", String.valueOf(e.getMessage))
-          }
-        case other => Materializer.Result(id, "error", s"not a test: ${other.uniqueId}")
-      } finally clearQueryComment()
-      // reference Q007 LogTestResult: one line per finished test, same
-      // shape as the run loop's result lines
-      EventLog.info("log_test_result", "code" -> "Q007", "unique_id" -> id,
-        "status" -> r.status, "index" -> (i + 1), "total" -> total,
-        "execution_time" -> r.elapsedSec)
-      r
-  }
+  /** `dbt test`: data tests and unit tests. */
+  def test(select: Seq[String] = Nil, threads: Int = 4): Seq[Materializer.Result] =
+    run(select, threads = threads, resourceTypes = Engine.commandTypes("test"))
 
   private def runUnitTestNode(u: UnitTestNode): Unit = {
     val model = manifest.resolveRef(u.model).getOrElse(
@@ -1663,15 +1588,13 @@ final class Engine(
   /** `dbt build`: seeds+models+snapshots+tests in one DAG, with tests
     * gating downstream nodes (reference test-edge augmentation,
     * `core/dbt/compilation.py:193-244`): a test runs as soon as its
-    * inputs exist, and a *failing* (error-severity) test stops
-    * descendants because the test node raises. Runs on this engine, so
-    * its warehouse sees every relation the build writes.
+    * inputs exist, and a *failing* (error-severity) test skips the
+    * nodes it gates. [[run]] over every node type.
     */
   def build(select: Seq[String] = Nil, threads: Int = 4,
       indirectSelection: String = "eager",
       fullRefresh: Boolean = false): Seq[Materializer.Result] =
-    schedule(testGatedDag, select, Nil, threads,
-      Set("model", "seed", "snapshot", "test", "unit_test"),
+    run(select, Nil, threads, Engine.commandTypes("build"),
       failFast = false, fullRefresh, indirectSelection)
 
   /** The build queue's graph: each model or snapshot child of a tested
@@ -1819,7 +1742,7 @@ final class Engine(
       case (id, st) if Set("error", "fail", "skipped")(st) => id }.toSeq
     if (rerun.isEmpty) Nil
     else run(select = rerun, threads = threads,
-      resourceTypes = Set("model", "seed", "snapshot", "test", "unit_test"))
+      resourceTypes = Engine.commandTypes("build"))
   }
 
   /** `state:modified`-style selection against a state manifest
@@ -1862,6 +1785,14 @@ final class Engine(
 }
 
 object Engine {
+  /** The resource types each node-executing command runs. */
+  val commandTypes: Map[String, Set[String]] = Map(
+    "run" -> Set("model", "seed", "snapshot"),
+    "seed" -> Set("seed"),
+    "snapshot" -> Set("snapshot"),
+    "test" -> Set("test", "unit_test"),
+    "build" -> Set("model", "seed", "snapshot", "test", "unit_test"))
+
   /** Load a project directory and build an engine over it. `target`
     * picks a profiles.yml output (default: the profile's own default);
     * its `schema` becomes the relation namespace unless the caller set

@@ -192,22 +192,66 @@ class DagSpec extends AnyFunSuite {
     assert(sel === Set("a", "b", "c", "d", "e"))
   }
 
-  test("graph queue releases nodes in dependency order") {
-    val q = new GraphQueue(dag, dag.nodes)
-    val first = q.poll().get
-    assert(first === "model.graft.a")
-    assert(q.poll() === None) // b,c blocked until a done
-    q.markDone(first)
-    val next = Set(q.poll().get, q.poll().get)
-    assert(next === Set("model.graft.b", "model.graft.c"))
+  private def id(n: String) = s"model.graft.$n"
+
+  /** `q.take()` on another thread; blocked while the future is pending. */
+  private def takeAsync(q: GraphQueue): scala.concurrent.Future[Option[String]] =
+    scala.concurrent.Future(q.take())(scala.concurrent.ExecutionContext.global)
+
+  private def await[T](f: scala.concurrent.Future[T]): T =
+    scala.concurrent.Await.result(f, scala.concurrent.duration.Duration(10, "s"))
+
+  private def assertBlocked(f: scala.concurrent.Future[_]): Unit = {
+    Thread.sleep(100)
+    assert(!f.isCompleted)
   }
 
+  test("graph queue releases nodes in dependency order") {
+    val q = new GraphQueue(dag, dag.nodes)
+    assert(q.take() === Some(id("a")))
+    val blocked = takeAsync(q) // b, c wait on a
+    assertBlocked(blocked)
+    q.markDone(id("a"))
+    assert(await(blocked) === Some(id("b")))
+    assert(q.take() === Some(id("c")))
+  }
+
+  test("a blocked take wakes on markDone of its last parent") {
+    val q = new GraphQueue(dag, dag.nodes)
+    q.markDone(q.take().get)
+    val (b, c) = (q.take().get, q.take().get)
+    q.markDone(b)
+    val d = takeAsync(q)
+    assertBlocked(d) // d still waits on c
+    q.markDone(c)
+    assert(await(d) === Some(id("d")))
+    q.markDone(id("d"))
+    assert(q.take() === Some(id("e")))
+    q.markDone(id("e"))
+    assert(q.take() === None)
+    assert(q.isComplete)
+  }
+
+  // the markFailed cascade completes the queue: a blocked take returns None
   test("graph queue failure skips descendants") {
     val q = new GraphQueue(dag, dag.nodes)
-    val a = q.poll().get
-    val skipped = q.markFailed(a)
-    assert(skipped === Set("model.graft.b", "model.graft.c", "model.graft.d", "model.graft.e"))
+    val a = q.take().get
+    val waiting = takeAsync(q)
+    assertBlocked(waiting)
+    assert(q.markFailed(a) === Set("b", "c", "d", "e").map(id))
+    assert(await(waiting) === None)
     assert(q.isComplete)
+  }
+
+  test("fail-fast stop releases blocked workers and hands out nothing more") {
+    val q = new GraphQueue(dag, dag.nodes)
+    val a = q.take().get
+    val waiting = Seq(takeAsync(q), takeAsync(q))
+    waiting.foreach(assertBlocked)
+    q.stop()
+    waiting.foreach(w => assert(await(w) === None))
+    q.markDone(a) // b and c are ready now, but the queue is stopped
+    assert(q.take() === None)
   }
 
   test("depth scores") {

@@ -374,4 +374,37 @@ class CliSpec extends AnyFunSuite {
     assert(opts("resource-type") === "model,seed")
     assert(opts("exclude-resource-type") === "test")
   }
+
+  test("every node command honours --exclude and --fail-fast (build and test too)") {
+    val proj = graft.SparkSpec.registerScratch(java.nio.file.Files.createTempDirectory("cli_nodes"))
+    def write(rel: String, content: String): Unit = {
+      val p = proj.resolve(rel)
+      java.nio.file.Files.createDirectories(p.getParent)
+      java.nio.file.Files.writeString(p, content): Unit
+    }
+    write("dbt_project.yml", "name: clinodes\n")
+    // with one thread, a_bad runs first (lowest depth, then id)
+    write("models/a_bad.sql", "SELECT no_such_col FROM range(1)")
+    write("models/b.sql", "SELECT 1 AS id")
+    write("models/c.sql", "SELECT 2 AS id")
+    write("tests/a_fails.sql", "SELECT 1 AS id")
+    write("models/schema.yml",
+      """models:
+        |  - name: b
+        |    columns:
+        |      - name: id
+        |        tests: [not_null]
+        |""".stripMargin)
+    // Cli.main stops the session at its end, so drive the dispatch itself
+    val eng = Engine.fromProject(graft.SparkSpec.session, proj.toString,
+      graft.SparkSpec.registerScratch(java.nio.file.Files.createTempDirectory("cli_nodes_wh")).toString)
+    def ids(command: String, exclude: Seq[String], flags: String*): Set[String] =
+      Cli.runNodes(eng, command, Cli.parseOpts(flags.toList), Nil, exclude, threads = 1)
+        .map(_.uniqueId.split('.').last).toSet
+    assert(ids("build", Seq("c")) === Set("a_bad", "b", "not_null_b_id", "a_fails"))
+    assert(ids("build", Nil, "--fail-fast") === Set("a_bad"))
+    assert(ids("test", Seq("a_fails")) === Set("not_null_b_id"))
+    assert(ids("test", Nil, "--fail-fast") === Set("a_fails"))
+    assert(ids("run", Seq("a_bad"), "--fail-fast") === Set("b", "c"))
+  }
 }

@@ -1699,4 +1699,72 @@ class EngineSpec extends SparkSpec {
     // the test still gates what is downstream of everything it reads
     assert(rel < order.indexOf("model.graft.rpt"), order.mkString(", "))
   }
+
+  test("a throwing query comment fails its node, skips its dependents and leaves no worker alive") {
+    val proj = Map(
+      "dbt_project.yml" ->
+        """name: qcboom
+          |query-comment: "{{ exceptions.raise_compiler_error('boom') }}"
+          |""".stripMargin,
+      "models/a.sql" -> "SELECT 1 AS x",
+      "models/b.sql" -> "SELECT * FROM {{ ref('a') }}")
+    val eng = Engine.fromProject(spark, writeProject(proj), tmpDir("wh"))
+    import scala.jdk.CollectionConverters._
+    def workers: Set[Thread] = Thread.getAllStackTraces.keySet.asScala.toSet.filter(t =>
+      t.isAlive && !t.isDaemon &&
+        (t.getName.endsWith("(worker)") || t.getName.startsWith("pool-")))
+    val before = workers
+    // bounded: a node left in progress would keep the run waiting forever
+    val res = java.util.concurrent.CompletableFuture
+      .supplyAsync(() => eng.run(threads = 2))
+      .get(120, java.util.concurrent.TimeUnit.SECONDS)
+    assert(res.map(r => r.uniqueId -> r.status).toMap ===
+      Map("model.graft.a" -> "error", "model.graft.b" -> "skipped"))
+    assert(res.find(_.status == "error").get.message.contains("boom"))
+    // the pool's threads exit just after it terminates
+    val deadline = System.nanoTime() + 5000000000L
+    while ((workers -- before).nonEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    assert((workers -- before).isEmpty, (workers -- before).map(_.getName))
+  }
+
+  test("run_results.json: failures is a test's failing-row count; thread_id names the worker") {
+    val proj = Map(
+      "dbt_project.yml" ->
+        """name: rrfields
+          |on-run-end:
+          |  - "CREATE OR REPLACE TEMP VIEW rr_thread_probe AS SELECT '{% for r in results %}{{ r.thread_id }};{% endfor %}' AS t"
+          |""".stripMargin,
+      "models/a.sql" -> "SELECT * FROM VALUES (1), (1), (2), (3) AS t(id)",
+      "models/schema.yml" ->
+        """models:
+          |  - name: a
+          |    columns:
+          |      - name: id
+          |        tests:
+          |          - not_null
+          |          - unique
+          |          - accepted_values:
+          |              values: [1]
+          |              severity: warn
+          |""".stripMargin)
+    val eng = Engine.fromProject(spark, writeProject(proj), tmpDir("wh"))
+    val results = eng.build(threads = 2)
+    assert(results.map(_.status).sorted === Seq("fail", "pass", "success", "warn"),
+      results.mkString("; "))
+    val target = tmpDir("target")
+    eng.writeArtifacts(target, results)
+    val rr = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(Paths.get(s"$target/run_results.json").toFile).get("results")
+    import scala.jdk.CollectionConverters._
+    val byStatus = rr.elements().asScala.map(r => r.get("status").asText -> r).toMap
+    val worker = "Thread-[12] \\(worker\\)"
+    byStatus.values.foreach(r => assert(r.get("thread_id").asText.matches(worker), r))
+    assert(byStatus("success").get("failures").isNull)
+    assert(byStatus("pass").get("failures").asLong === 0L)
+    // unique: the duplicated id; accepted_values: the values 2 and 3
+    assert(byStatus("fail").get("failures").asLong === 1L)
+    assert(byStatus("warn").get("failures").asLong === 2L)
+    val probe = spark.table("rr_thread_probe").collect()(0).getString(0)
+    assert(probe.split(";").toSeq.size === 4 && probe.split(";").forall(_.matches(worker)), probe)
+  }
 }

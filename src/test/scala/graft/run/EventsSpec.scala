@@ -124,4 +124,48 @@ class EventsSpec extends AnyFunSuite {
     val unregistered = codes -- Events.emittedCodes
     assert(unregistered.isEmpty, s"unregistered codes observed: $unregistered")
   }
+
+  test("graft test runs the run hooks and emits the per-node lifecycle codes") {
+    val root = graft.SparkSpec.registerScratch(java.nio.file.Files.createTempDirectory("events_test"))
+    def write(rel: String, content: String): Unit = {
+      val p = root.resolve(rel)
+      java.nio.file.Files.createDirectories(p.getParent)
+      java.nio.file.Files.writeString(p, content): Unit
+    }
+    write("dbt_project.yml",
+      """name: testcmd
+        |on-run-start: "SELECT 1"
+        |on-run-end: "SELECT 2"
+        |""".stripMargin)
+    write("models/base.sql", "SELECT 1 AS id")
+    write("models/schema.yml",
+      """models:
+        |  - name: base
+        |    columns:
+        |      - name: id
+        |        data_tests: [not_null]
+        |""".stripMargin)
+    // a test that errors at execution (W004), beside one that passes
+    write("tests/broken.sql", "SELECT no_such_col FROM {{ ref('base') }}")
+    val spark = graft.SparkSpec.session
+    val eng = Engine.fromProject(spark, root.toString,
+      graft.SparkSpec.registerScratch(java.nio.file.Files.createTempDirectory("events_test_wh")).toString)
+    assert(eng.run().forall(_.status == "success"))
+    val captured = scala.collection.mutable.ArrayBuffer.empty[String]
+    val (f0, s0, l0) = (EventLog.format, EventLog.sink, EventLog.minLevel)
+    val (results, codes) = try {
+      EventLog.format = "json"
+      EventLog.minLevel = "debug"
+      EventLog.sink = s => captured.synchronized { captured += s; () }
+      val res = eng.test()
+      val re = """"code": "([A-Z]\d{3})"""".r
+      (res, captured.flatMap(l => re.findFirstMatchIn(l).map(_.group(1))).toSet)
+    } finally { EventLog.format = f0; EventLog.sink = s0; EventLog.minLevel = l0 }
+    assert(results.map(_.status).sorted === Seq("error", "pass"), results.mkString("; "))
+    val expected = Set("Q032", "Q033", "Q024", "Q011", "Q025", "Z010", "W004",
+      "Q007", "Z023", "Z030")
+    val missing = expected -- codes
+    assert(missing.isEmpty, s"lifecycle codes not observed: $missing " +
+      s"(saw ${codes.toSeq.sorted})")
+  }
 }
