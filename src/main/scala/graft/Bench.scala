@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
@@ -93,7 +92,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val concurrency = sys.env.getOrElse("SPARK_GRAFT_BENCH_CONCURRENCY", "4").toInt
     val mode = sys.env.getOrElse("SPARK_GRAFT_BENCH_MODE", "full") // full | batch
 
@@ -133,56 +131,7 @@ object Bench {
         f"$loadMax%.2f at start — ratios published from interleaved " +
         "same-window medians, flagged load_ok:false")
 
-    // Data-proportional parallelism (VERDICT r11 item 1b): the ~227
-    // sub-second queries pay fixed task-launch cost per stage, and at
-    // sf0.1 (17 MB) 32-way shuffles and 32-task scans are pure
-    // scheduling overhead — AQE coalesces reducers post-hoc but the
-    // initial partition counts still launch. Size initial parallelism
-    // to the DATA (bytes/16MB, floor 8, cap 4x cores) the same way a
-    // cluster deployment sizes initialPartitionNum — at sf10+ this is
-    // back to >= core count, so nothing is tuned FOR the toy scale.
-    // Measured (BenchTune matrix, 239-query pass): 179.5 s -> 171.2 s
-    // with AQE kept ON; AQE-off variants saved no more and give up the
-    // runtime re-planning the 100 TB posture rests on.
-    def dirBytes(f: java.io.File): Long =
-      if (f.isFile) f.length
-      else Option(f.listFiles()).getOrElse(Array.empty).map(dirBytes).sum
-    val dataBytes = dirBytes(new java.io.File(sfDir))
-    val shufParts = math.max(8L,
-      math.min(cpus.toInt * 4L, dataBytes / (16L << 20)))
-    val minPartNum = math.min(8, cpus.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufParts.toString)
-      .config("spark.sql.files.minPartitionNum", minPartNum.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.sql.session.timeZone", "UTC")
-      // generated-class cache (STATIC conf, default 100 entries): a
-      // 239-query suite compiles far more than 100 codegen units, so
-      // at the default every pass re-Janino-compiles every query —
-      // pure fixed overhead on a suite any production query service
-      // would size this cache for. Scale-independent (it caches
-      // compiled code, not data).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Silence the allowlisted bounded-domain WindowExec warnings
-    // (VERDICT r12 item 1c): at WARN level they flood stderr thousands
-    // of times per pass, so the driver's 2000-char capture tail carried
-    // log spam instead of the result line. The windows themselves are
-    // gate-audited (ExplainAudit + BoundedWindowSpec); the log line
-    // adds nothing here. Must run AFTER session init + setLogLevel —
-    // Spark (re)initializes the log4j2 configuration then, which drops
-    // any per-logger level set earlier.
-    scala.util.Try {
-      org.apache.logging.log4j.core.config.Configurator.setLevel(
-        "org.apache.spark.sql.execution.window",
-        org.apache.logging.log4j.Level.ERROR)
-    }
+    val spark = Session.build(Session.dirBytes(sfDir))
 
     val headline = SparkEntry.allQueries.filter(_.isThroughput)
 
@@ -567,7 +516,7 @@ object Bench {
            |"per_query_warm_solo":${qmap(solo)},
            |"per_query_cold":${qmap(cold)},
            |"failed":$failed,
-           |"sf":"$sfDir","concurrency":$concurrency,"cpus":"$cpus","mode":"$mode","n_batch_runs":${batchRuns.size},
+           |"sf":"$sfDir","concurrency":$concurrency,"cpus":"${Session.cpus}","mode":"$mode","n_batch_runs":${batchRuns.size},
            |"note":"value=LOWER-MEDIAN concurrent batch wall of n_batch_runs passes after cold+solo passes; per_query_warm_solo=PER-QUERY LOWER-MEDIAN of n_solo_runs sequential passes (warm_solo_wall=lower-median pass wall); duckdb_sequential_sec=LOWER-MEDIAN of oracle passes INTERLEAVED with the Spark solo passes (same load windows); strict_sequential_ratio=LOWER-MEDIAN over strict_wall_pool/duckdb median, where the pool holds every post-prewarm solo wall: the merged first pass raw when the JIT prewarm COMPLETED (it is warm-class and already contains the full index builds) plus each warm solo wall+amortized builds; strict_pair_ratio=LOWER-MEDIAN over per-cycle ratios (spark wall [+amortized builds unless it is the merged cold pass] / duck wall measured immediately after that same spark wall) — numerator and denominator share one load window per pair, so weather drifting BETWEEN cycles cancels; strict_query_ratio=median over queries of (spark warm-solo lower-median / duckdb per-query lower-median) with sub-50ms duck denominators floored out (they time fixed per-job overhead at toy SF, not throughput; _all=unfloored); ratios are ALWAYS published (r16) — a loaded window sets load_ok:false plus load_advisory instead of nulling them (BENCH_r14/r15: the driver's own windows ran at loadavg 3-8 and the official artifact carried no number at all); pass counts sized to budget_sec (<=0 = unbudgeted); stage=last completed stage; sink=noop write (order-preserving)"}
            |""".stripMargin
       java.nio.file.Files.write(outPath, fullJson.getBytes("UTF-8"))

@@ -17,7 +17,7 @@ object Tables {
   /** Analyzed-plan cache: `spark.read.parquet` re-lists the dir and
     * re-reads parquet footers on EVERY call, which across a 239-query
     * bench pass is pure per-query fixed overhead (~0.1 s each at
-    * sf0.1, measured by BenchTune TUNE_PROFILE). The driver test dirs
+    * sf0.1, measured in r12, NOTES_r12.md). The driver test dirs
     * are immutable within a JVM, so the DataFrame (an immutable
     * logical plan holding the file index + schema) is reusable per
     * (session, dir, table). Warehouse-managed relations do NOT load

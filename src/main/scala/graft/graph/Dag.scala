@@ -140,7 +140,10 @@ object Selector {
     val excluded =
       if (exclude.isEmpty) Set.empty[String]
       else exclude.map(term => selectUnion(manifest, dag, term)).reduce(_ union _)
-    expandIndirect(manifest, dag, base -- excluded, indirectSelection)
+    // excluded nodes stay out even when indirect selection would pull
+    // them back in through a selected parent (reference `selector.py`
+    // subtracts the excluded set from the indirect set too)
+    expandIndirect(manifest, dag, base -- excluded, indirectSelection) -- excluded
   }
 
   /** Indirect selection (reference `selector.py:220-280`): tests and

@@ -1842,13 +1842,20 @@ object ProjectLoader {
       case s: String => GenericTestRef(s)
       case m: java.util.Map[_, _] =>
         val (tname, args) = m.asScala.head
-        val kwargs = args match {
+        def strings(raw: Any): Map[String, String] = raw match {
           case am: java.util.Map[_, _] =>
             am.asScala.map { case (k, v) => k.toString -> stringify(v) }.toMap
           case _ => Map.empty[String, String]
         }
+        val kwargs = strings(args) - "config"
+        // the nested `config:` block overrides top-level config kwargs
+        // (reference TestBuilder, generic_test_builders.py)
+        val block = args match {
+          case am: java.util.Map[_, _] => strings(am.get("config"))
+          case _ => Map.empty[String, String]
+        }
         GenericTestRef(tname.toString, kwargs,
-          configFromKwargs(kwargs.filter { case (k, _) => configKeys(k) }))
+          configFromKwargs(kwargs.filter { case (k, _) => configKeys(k) } ++ block))
       case other => throw new IllegalArgumentException(s"bad test spec: $other")
     }.toSeq
 

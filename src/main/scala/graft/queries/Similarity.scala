@@ -64,7 +64,7 @@ object Similarity {
   /** embeddings as array<double> (float→double widening is exact on
     * both engines; kernels and the SQL twins all compute in double).
     */
-  private[queries] def embDouble(s: SparkSession, dir: String): DataFrame =
+  private[graft] def embDouble(s: SparkSession, dir: String): DataFrame =
     embParallel(s, dir)
       .select(col("vec_id"),
         col("embedding").cast("array<double>").as("embedding"))
@@ -101,8 +101,8 @@ object Similarity {
     * (centroids ≤ 4096 ≪ corpus) + one (cell, dim)-keyed mean — no
     * collect, no driver loop beyond the fixed iteration count.
     */
-  private[queries] val MaxCentroids = 4096L
-  private[queries] val TrainPerCell = 64L
+  private[graft] val MaxCentroids = 4096L
+  private[graft] val TrainPerCell = 64L
 
   private[queries] def kmeansCentroids(embD: DataFrame): DataFrame =
     kmeansCentroidsWith(embD, TrainPerCell)
@@ -112,7 +112,7 @@ object Similarity {
     * N where the sample stride actually binds (with the production
     * cap that takes ~524k vectors); production always uses
     * [[TrainPerCell]]/[[MaxCentroids]]. */
-  private[queries] def kmeansCentroidsWith(
+  private[graft] def kmeansCentroidsWith(
       embD: DataFrame, trainPerCell: Long,
       maxCentroids: Long = MaxCentroids): DataFrame = {
     val n = embD.count()
@@ -400,7 +400,7 @@ object Similarity {
     * aggregates over the distance sweep — recomputing the sweep for
     * rank 2 trades cheap codegen'd arithmetic for not sorting or
     * collecting K-sized groups; both passes shuffle only N rows. */
-  private[queries] def cellRanks(embD: DataFrame, cents: DataFrame): DataFrame = {
+  private[graft] def cellRanks(embD: DataFrame, cents: DataFrame): DataFrame = {
     val first = sweepMin(cellSweep(embD, cents), 1)
     // rank 2: attach the rank-1 cell to the N-row VECTOR side before
     // the crossJoin — joining it onto the N×K sweep instead would

@@ -1,6 +1,6 @@
 package graft.run
 
-import org.apache.spark.sql.SparkSession
+import graft.Session
 
 /** Command-line entry point — the analog of the reference's CLI /
   * in-process `dbtRunner.invoke` (`core/dbt/cli/main.py:38-96`).
@@ -276,15 +276,7 @@ object Cli {
     }))
     val indirect = opts.getOrElse("indirect-selection", "eager")
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(Session.dirBytes(warehouseDir))
 
     // A31: partial parsing is ON by default like the reference;
     // --no-partial-parse forces a full parse (beats DBT_PARTIAL_PARSE

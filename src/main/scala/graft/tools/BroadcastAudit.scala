@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{Session, SparkEntry}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 
@@ -25,16 +24,7 @@ object BroadcastAudit {
   def main(args: Array[String]): Unit = {
     val dataDir = args.headOption.getOrElse("target/scale/scale10")
     val thresholdMB = args.lift(1).map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", "8")
-      // the generous threshold the bench/scale harnesses run with —
-      // the audit must see the same temptations the optimizer sees
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.build(Session.dirBytes(dataDir))
 
     def broadcastBuilds(p: SparkPlan): Seq[(BigInt, String)] =
       p.collect { case b: BroadcastExchangeExec =>

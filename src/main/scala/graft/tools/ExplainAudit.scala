@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{Session, SparkEntry}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.{GlobalLimitExec, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
@@ -105,15 +104,9 @@ object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = args.lift(1).getOrElse("target/plans")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      // static plans: the audit walks the pre-execution tree
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.build(Session.dirBytes(sfDir))
+    // static plans: the audit walks the pre-execution tree
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     val dir = java.nio.file.Paths.get(outDir)
     java.nio.file.Files.createDirectories(dir)
     // formatted mode marks codegen membership per-operator as

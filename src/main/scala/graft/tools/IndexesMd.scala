@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.SparkEntry
+import graft.{Session, SparkEntry}
 import graft.queries.{IndexCache, IndexRegistry}
-import org.apache.spark.sql.SparkSession
 
 /** Generates INDEXES.md — the built-once index ledger (VERDICT r10
   * item 1): for every registered index (IndexRegistry.all), its
@@ -39,15 +38,7 @@ object IndexesMd {
     val Array(mdPath, prefix, labelIdxS, qname, dirsS) = args
     val dirs = dirsS.split(",").toSeq
     val labelIdx = labelIdxS.toInt
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.build(dirs.map(Session.dirBytes).max)
     val q = SparkEntry.allQueries.find(_.name == qname).getOrElse(
       sys.error(s"no such query: $qname"))
     val built = dirs.find { dir =>
@@ -83,15 +74,8 @@ object IndexesMd {
       label -> dirs.split(",").toSeq
     }
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.build(
+      (consumersDir +: scaleArgs.flatMap(_._2)).map(Session.dirBytes).max)
 
     // audit trail: every drain outcome + per-dir build slice, so a
     // surprising ledger cell is diagnosable after the run

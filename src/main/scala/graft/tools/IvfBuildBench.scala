@@ -1,6 +1,7 @@
-package graft.queries
+package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Session
+import graft.queries.Similarity
 import org.apache.spark.sql.functions._
 
 /** IVF index-build scaling evidence (round 9): times the full build —
@@ -12,7 +13,7 @@ import org.apache.spark.sql.functions._
   * pinned at ~64 · K vectors, so doubling N should grow the build by
   * ~the assignment sweep only, NOT 2× the whole build).
   *
-  * Usage: sbt "runMain graft.queries.IvfBuildBench <outJson> <n1> <n2> ..."
+  * Usage: sbt "runMain graft.tools.IvfBuildBench <outJson> <n1> <n2> ..."
   * Default sizes: 200000 400000 800000.
   */
 object IvfBuildBench {
@@ -22,13 +23,10 @@ object IvfBuildBench {
     val sizeArgs =
       if (args.length > 1) args.drop(1).toSeq
       else Seq("200000", "400000", "800000")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // a synthetic corpus is generated in-session, so only `dir:` sizes
+    // read input from disk
+    val spark = Session.build(sizeArgs.filter(_.startsWith("dir:"))
+      .map(a => Session.dirBytes(a.stripPrefix("dir:"))).maxOption.getOrElse(0L))
 
     // a `dir:<path>` size arg times the build over that directory's
     // REAL embeddings table instead of a synthetic corpus — the

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.Session
 import org.apache.spark.sql.SparkSession
 import java.nio.file.Files
 
@@ -72,17 +73,10 @@ object RunScaleBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val threads = sys.env.getOrElse("SPARK_GRAFT_RUN_THREADS", "16").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.run.EventLog.minLevel = "error"
     val proj = genProject(1800, 100)
+    val spark = Session.build(Session.dirBytes(proj.toString))
+    graft.run.EventLog.minLevel = "error"
     try {
       val cycles = (1 to 2).map(_ => oneCycle(spark, proj, threads))
       def cj(c: Cycle): String =
@@ -94,7 +88,7 @@ object RunScaleBench {
       val json =
         s"""{"metric":"run_scale_2000_node_build","value":${f"$total2%.3f"},"unit":"sec",
            |"shape":"1800 chained views + 100 tables + 100 not_null tests",
-           |"threads":$threads,"cpus":"$cpus",
+           |"threads":$threads,"cpus":"${Session.cpus}",
            |"cycle_cold":${cj(cycles(0))},
            |"cycle_warm":${cj(cycles(1))},
            |"note":"value = warm-cycle total wall (parse+init+run+test); ParsePerfSpec pins the parse phase alone; RunScaleSpec enforces a 2x bound on this shape"}

@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{Session, SparkEntry}
 
 /** Scale-stress gate (VERDICT r5 item 1): run the named queries at the
   * sf0.1 baseline AND at the ScaleGen 10x dataset, and record
@@ -38,15 +37,7 @@ object ScaleBench {
         case many => sys.error(s"ambiguous query prefix $n: ${many.mkString(",")}")
       }
     }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(Session.dirBytes(scaleDir))
 
     val byName = SparkEntry.allQueries.map(q => q.name -> q).toMap
     val missing = names.filterNot(byName.contains)

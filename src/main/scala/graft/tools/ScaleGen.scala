@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.Session
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -28,13 +29,7 @@ object ScaleGen {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outDir = args.lift(1).getOrElse("target/scale")
     val replicas = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(Session.dirBytes(sfDir))
     // optional 4th arg: comma-separated subset of scale10,skew,boiler
     val parts = args.lift(3).map(_.split(',').toSet)
       .getOrElse(Set("scale10", "skew", "boiler"))

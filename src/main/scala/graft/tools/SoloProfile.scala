@@ -1,58 +1,26 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{Session, SparkEntry}
 
 /** Optimization-loop profiler (r15): time the named queries solo in ONE
-  * warm JVM under the exact Bench session configuration, print per-query
+  * warm JVM under Bench's session (graft.Session), print per-query
   * cold wall + warm medians, and (optionally) dump each query's
   * `.explain("formatted")` to PLAN_DIR. This is the measure-first tool
-  * the optimization guide §1 asks for — same noop sink, same
-  * data-proportional session as Bench.scala, so a per-query delta seen
-  * here predicts the bench delta without paying a full 17-minute
-  * driver-shaped run per iteration.
+  * the optimization guide §1 asks for — same noop sink, same session as
+  * Bench.scala, so a per-query delta seen here predicts the bench delta
+  * without paying a full 17-minute driver-shaped run per iteration.
   *
   * Usage:
   *   sbt "runMain graft.tools.SoloProfile <sfDir> <reps> <q1,q2,...|all|top:N>"
   * Env:
   *   PLAN_DIR   if set, write <query>.txt formatted plans there
-  *   SPARK_GRAFT_CPUS  core count (default 32), mirrors Bench
   */
 object SoloProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val reps = args(1).toInt
     val sel = args(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-
-    // session mirrors Bench.scala exactly (data-proportional parallelism)
-    def dirBytes(f: java.io.File): Long =
-      if (f.isFile) f.length
-      else Option(f.listFiles()).getOrElse(Array.empty).map(dirBytes).sum
-    val dataBytes = dirBytes(new java.io.File(sfDir))
-    val shufParts = math.max(8L,
-      math.min(cpus.toInt * 4L, dataBytes / (16L << 20)))
-    val minPartNum = math.min(8, cpus.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufParts.toString)
-      .config("spark.sql.files.minPartitionNum", minPartNum.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    scala.util.Try {
-      org.apache.logging.log4j.core.config.Configurator.setLevel(
-        "org.apache.spark.sql.execution.window",
-        org.apache.logging.log4j.Level.ERROR)
-    }
+    val spark = Session.build(Session.dirBytes(sfDir))
 
     val headline = SparkEntry.allQueries.filter(_.isThroughput)
     val qs =

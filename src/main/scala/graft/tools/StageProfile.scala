@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{Session, SparkEntry}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 
 /** Per-stage breakdown for ONE query (optimization-loop instrument,
@@ -18,26 +17,7 @@ object StageProfile {
     val sfDir = args(0)
     val qname = args(1)
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    def dirBytes(f: java.io.File): Long =
-      if (f.isFile) f.length
-      else Option(f.listFiles()).getOrElse(Array.empty).map(dirBytes).sum
-    val dataBytes = dirBytes(new java.io.File(sfDir))
-    val shufParts = math.max(8L,
-      math.min(cpus.toInt * 4L, dataBytes / (16L << 20)))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufParts.toString)
-      .config("spark.sql.files.minPartitionNum", math.min(8, cpus.toInt).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.build(Session.dirBytes(sfDir))
 
     val q = SparkEntry.allQueries.find(_.name == qname)
       .getOrElse(sys.error(s"unknown query $qname"))

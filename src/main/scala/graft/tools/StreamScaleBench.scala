@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.Session
 import graft.streaming.StreamMaterializer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -20,14 +21,7 @@ object StreamScaleBench {
     val baseDir = args(0)
     val scaleDir = args(1)
     val outJson = args(2)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.build(Session.dirBytes(scaleDir))
 
     def scratch(): String =
       java.nio.file.Files.createTempDirectory("ssb").toString

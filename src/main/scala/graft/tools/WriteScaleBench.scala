@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.Session
 import graft.exec.Materializer
-import org.apache.spark.sql.SparkSession
 
 /** 100x gate for the framework WRITE path (VERDICT r10 item 4): the
   * m40 O(delta) pruned-write claim, proven in SECONDS at scale rather
@@ -30,15 +30,7 @@ object WriteScaleBench {
     val baseDir = args(0)
     val scaleDir = args(1)
     val outJson = args(2)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.build(Session.dirBytes(scaleDir))
 
     def timed(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9

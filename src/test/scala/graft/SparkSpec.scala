@@ -23,13 +23,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  /** The engine's one session definition at a fixed 4 cores and no
+    * input data, so spec behaviour does not depend on the box. */
+  lazy val session: SparkSession = Session.build(dataBytes = 0, cpus = 4)
 
   private[graft] val scratch =
     new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()

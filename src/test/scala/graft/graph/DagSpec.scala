@@ -187,6 +187,18 @@ class DagSpec extends AnyFunSuite {
     assertThrows[IllegalArgumentException](sel("bogus", "b"))
   }
 
+  test("--exclude beats eager indirect selection") {
+    val nn = TestNode("not_null_b_id", "SELECT 1",
+      dependsOn = Seq("model.graft.b"), genericTest = Some("not_null"))
+    val m2 = Manifest(manifest.nodes + (nn.uniqueId -> (nn: Node)))
+    val d2 = Dag.fromManifest(m2)
+    assert(Selector.select(m2, d2, Nil).contains(nn.uniqueId))
+    // the test's parent stays selected, yet the excluded test stays out
+    val sel = Selector.select(m2, d2, Nil, exclude = Seq("not_null_b_id"))
+    assert(!sel.contains(nn.uniqueId))
+    assert(sel.contains("model.graft.b"))
+  }
+
   test("@ operator: descendants plus their ancestors") {
     val sel = Selector.select(manifest, dag, Seq("@c")).map(_.stripPrefix("model.graft."))
     assert(sel === Set("a", "b", "c", "d", "e"))

@@ -243,6 +243,31 @@ class EngineSpec extends SparkSpec {
     assert(strict.test().map(_.status) === Seq("error"))
   }
 
+  test("a generic test's nested config: block sets its severity") {
+    val proj = baseProject +
+      ("models/ord_status.sql" ->
+        "SELECT o_orderkey, o_orderstatus FROM {{ source('main', 'orders') }}") +
+      ("models/schema.yml" ->
+        """models:
+          |  - name: ord_status
+          |    columns:
+          |      - name: o_orderstatus
+          |        data_tests:
+          |          - accepted_values:
+          |              values: ['O', 'F']
+          |              severity: error
+          |              config:
+          |                severity: warn
+          |""".stripMargin)
+    val eng = Engine.fromProject(spark, writeProject(proj), tmpDir("wh"))
+    val t = eng.manifest.nodes.values.collectFirst { case t: TestNode => t }.get
+    assert(t.config.severity === "warn")
+    eng.run()
+    val res = eng.test()
+    assert(res.map(_.status) === Seq("warn"),
+      s"'P' rows exist, config severity warn → warn: ${res.mkString("; ")}")
+  }
+
   test("failing test reports fail and failing-rows sql works") {
     val proj = baseProject + ("models/schema.yml" ->
       """models:
