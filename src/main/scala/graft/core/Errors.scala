@@ -156,6 +156,22 @@ object Errors {
         s"single time. To fix this, $fix")
   }
 
+  /** RefBadContextError (exceptions.py): a ref resolved at render
+    * whose target is not in the node's depends_on — the parse-time
+    * capture never saw it, so the DAG lacks the edge. `spec` is `m` or
+    * a pinned `m.v2`. */
+  def refBadContext(node: Node, spec: String): CompilationError = {
+    val args = """^(.*)\.v(\d+)$""".r.findFirstMatchIn(spec)
+      .map(m => s"'${m.group(1)}',v='${m.group(2)}'").getOrElse(s"'$spec'")
+    new CompilationError(
+      s"""dbt was unable to infer all dependencies for the model "${node.name}".
+         |This typically happens when ref() is placed within a conditional block.
+         |
+         |To fix this, add the following hint to the top of the model "${node.name}":
+         |
+         |-- depends_on: {{ ref($args) }}""".stripMargin)
+  }
+
   /** DbtReferenceError (`core/dbt/exceptions.py:665-678`): a ref to a
     * node whose access level forbids it from this scope. `access` is
     * "private" (scope = group) or "protected" (scope = package). */

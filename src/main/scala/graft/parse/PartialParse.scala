@@ -17,17 +17,18 @@ import java.nio.file.{Files, Path}
   * the context string carries exactly the out-of-file inputs the parse
   * reads — a model file's context is its schema-yml patch + its
   * `versions:` entry + the dbt_project.yml config-tree slice for its
-  * directory. When a schema yml changes, the patched models' context
-  * hashes change and they reparse automatically; nothing else does.
-  * This is strictly finer-grained than the reference (which falls back
-  * to a full reparse on any dbt_project.yml change).
+  * directory, plus a digest of the vars. When a schema yml changes,
+  * the patched models' context hashes change and they reparse
+  * automatically; nothing else does. This is strictly finer-grained
+  * than the reference (which falls back to a full reparse on any
+  * dbt_project.yml change).
   *
-  * Two reference invalidation rules are unnecessary here BY
-  * CONSTRUCTION, not skipped: env vars and `vars:` are read at RENDER
-  * time (run time) in this engine, never during parse — parse output
-  * cannot depend on them, so `state_check.vars_hash` /
-  * `env_vars_changed_*` have no analog. `profiles.yml` likewise only
-  * feeds target resolution at engine construction.
+  * Vars: the parse-time walk (`Jinja.capture`) evaluates `var()` with
+  * the project vars overlaid by the CLI `--vars`, so their digest joins
+  * the context of every walked .sql file (model, snapshot, singular
+  * test) — the analog of the reference's `state_check.vars_hash`.
+  * `env_var()` values the walk reads are not part of any context.
+  * `profiles.yml` only feeds target resolution at engine construction.
   *
   * Kept faithful:
   *  - special override macros (`partial.py:52-59`): a changed macro
@@ -48,8 +49,11 @@ object PartialParse {
     * v4: UnitTestNode grew overrideMacros (r13) — v3 files would fail
     * arity decode anyway; the bump makes the miss a clean format check.
     * v5: SchemaOut grew seedPatches/snapshotPatches (r14, seed/snapshot
-    * yml properties). */
-  val Format = 5
+    * yml properties).
+    * v6: refs/sources/config come from the parse-time walk, not regexes,
+    * and .sql contexts carry the vars digest — a v5 state cold-parses
+    * once. */
+  val Format = 6
 
   val StateFileName = "partial_parse.bin"
 

@@ -1,7 +1,7 @@
 package graft.parse
 
 import graft.core._
-import graft.render.Template
+import graft.render.{Jinja, Template}
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -22,9 +22,10 @@ object ProjectLoader {
 
   final case class Project(
       name: String,
+      /** scalar vars: packages' < root project's < CLI `--vars`. */
       vars: Map[String, String],
-      /** list/dict `vars:` entries, typed (scalars live in [[vars]]). */
-      varsTyped: Map[String, graft.render.Jinja.JV] = Map.empty,
+      /** list/dict vars, typed (scalars live in [[vars]]). */
+      varsTyped: Map[String, Jinja.JV] = Map.empty,
       manifest: Manifest,
       onRunStart: Seq[String] = Nil,
       onRunEnd: Seq[String] = Nil,
@@ -99,8 +100,6 @@ object ProjectLoader {
 
   private final case class RawProject(
       name: String,
-      vars: Map[String, String],
-      varsTyped: Map[String, graft.render.Jinja.JV],
       nodes: Seq[Node],
       onRunStart: Seq[String],
       onRunEnd: Seq[String],
@@ -164,21 +163,25 @@ object ProjectLoader {
     * is a hard parse error, not a silent shadow). Root project vars
     * override same-named package vars.
     */
-  def load(projectDir: String): Project = loadWith(projectDir, None)
+  def load(projectDir: String): Project = load(projectDir, None, Map.empty, Map.empty)
 
-  /** A31 partial parsing entry point: resolves enablement (Options >
-    * DBT_PARTIAL_PARSE env > project `flags: partial_parse:` > on),
-    * loads `<target-path>/partial_parse.bin`, parses with per-file
-    * reuse, and saves the next state. Always returns `partialStats`. */
-  def load(projectDir: String, opts: PartialParse.Options): Project = {
+  def load(projectDir: String, opts: PartialParse.Options): Project =
+    load(projectDir, Some(opts), Map.empty, Map.empty)
+
+  /** `cliVars`/`cliVarsTyped` (the CLI `--vars`) overlay the project
+    * vars across both maps; the result is [[Project.vars]] and is what
+    * the parse-time walk's `var()` sees, as the render does.
+    *
+    * Some(opts) is the A31 partial parsing entry point: resolves
+    * enablement (Options > DBT_PARTIAL_PARSE env > project `flags:
+    * partial_parse:` > on), loads `<target-path>/partial_parse.bin`,
+    * parses with per-file reuse, and saves the next state. Always
+    * returns `partialStats`. */
+  def load(projectDir: String, opts: Option[PartialParse.Options],
+      cliVars: Map[String, String],
+      cliVarsTyped: Map[String, Jinja.JV]): Project = {
     val root = Paths.get(projectDir)
-    val projFile = root.resolve("dbt_project.yml")
-    val projCfg: Map[String, Any] =
-      if (Files.exists(projFile))
-        Option(new org.yaml.snakeyaml.Yaml()
-          .load[java.util.Map[String, Any]](Files.readString(projFile)))
-          .map(_.asScala.toMap).getOrElse(Map.empty)
-      else Map.empty
+    val projCfg = projectYml(root)
     val flagEnabled: Option[Boolean] = projCfg.get("flags") match {
       case Some(m: java.util.Map[_, _]) =>
         m.asScala.collectFirst {
@@ -186,24 +189,25 @@ object ProjectLoader {
         }
       case _ => None
     }
-    val enabled = opts.enabled
-      .orElse(opts.env.get("DBT_PARTIAL_PARSE")
+    opts.map(o => o -> o.enabled
+      .orElse(o.env.get("DBT_PARTIAL_PARSE")
         .map(v => v.equalsIgnoreCase("true") || v == "1"))
       .orElse(flagEnabled)
-      .getOrElse(true)
-    if (!enabled)
-      loadWith(projectDir, None).copy(partialStats = Some(PartialParse.Stats(
-        enabled = false, stateLoaded = false, fullReason = None,
-        parsed = 0, reused = 0, added = Nil, deleted = Nil, changed = Nil)))
-    else {
-      val statePath = root.resolve(resolveTargetPath(
-          opts.cliTargetPath, opts.env, projCfg.get("target-path").map(_.toString)))
-        .resolve(PartialParse.StateFileName)
-      val session = new PartialParse.Session(PartialParse.readState(statePath))
-      val proj = loadWith(projectDir, Some(session))
-      val (next, stats) = session.finish()
-      PartialParse.writeState(statePath, next)
-      proj.copy(partialStats = Some(stats))
+      .getOrElse(true)) match {
+      case None => loadWith(projectDir, None, cliVars, cliVarsTyped)
+      case Some((_, false)) =>
+        loadWith(projectDir, None, cliVars, cliVarsTyped).copy(partialStats = Some(PartialParse.Stats(
+          enabled = false, stateLoaded = false, fullReason = None,
+          parsed = 0, reused = 0, added = Nil, deleted = Nil, changed = Nil)))
+      case Some((o, true)) =>
+        val statePath = root.resolve(resolveTargetPath(
+            o.cliTargetPath, o.env, projCfg.get("target-path").map(_.toString)))
+          .resolve(PartialParse.StateFileName)
+        val session = new PartialParse.Session(PartialParse.readState(statePath))
+        val proj = loadWith(projectDir, Some(session), cliVars, cliVarsTyped)
+        val (next, stats) = session.finish()
+        PartialParse.writeState(statePath, next)
+        proj.copy(partialStats = Some(stats))
     }
   }
 
@@ -253,20 +257,30 @@ object ProjectLoader {
   }
 
   private def loadWith(projectDir: String,
-      psession: Option[PartialParse.Session]): Project = {
+      psession: Option[PartialParse.Session],
+      cliVars: Map[String, String],
+      cliVarsTyped: Map[String, Jinja.JV]): Project = {
     val root = Paths.get(projectDir)
+    val pkgDirs = Deps.installedPackageDirs(root)
     psession.foreach { s =>
       preScanSpecialMacros(root, "", s)
-      Deps.installedPackageDirs(root).foreach { case (dirName, dir) =>
-        preScanSpecialMacros(dir, dirName, s)
-      }
+      pkgDirs.foreach { case (dirName, dir) => preScanSpecialMacros(dir, dirName, s) }
     }
-    val rootRaw = loadRaw(root, rootKey = "", psession = psession)
-    val pkgRaws = Deps.installedPackageDirs(root).map { case (dirName, dir) =>
+    // vars merge across packages, then root, then the CLI: LAST wins
+    // per key ACROSS BOTH maps — a list/dict override must evict a
+    // scalar of the same name (and vice versa), or the string-map-first
+    // lookup would serve the shadowed value
+    val vars = (pkgDirs.map(d => projectVars(projectYml(d._2))) :+
+      projectVars(projectYml(root)) :+ ((cliVars, cliVarsTyped))).foldLeft(
+      (Map.empty[String, String], Map.empty[String, Jinja.JV])) {
+      case ((mv, mt), (v, vt)) => ((mv -- vt.keys) ++ v, (mt -- v.keys) ++ vt)
+    }
+    val rootRaw = loadRaw(root, vars, rootKey = "", psession = psession)
+    val pkgRaws = pkgDirs.map { case (dirName, dir) =>
       // root dbt_project.yml `models: <pkg>:` scoping applies over the
       // package's own defaults; the install dir name wins over the
       // package's own project name (reference: install path = pkg name)
-      dirName -> loadRaw(dir, rootScopeFor(root, dirName),
+      dirName -> loadRaw(dir, vars, rootScopeFor(root, dirName),
         rootKey = dirName, psession = psession)
     }
 
@@ -371,17 +385,6 @@ object ProjectLoader {
     }
     val flatMacros = globalMacros ++ pkgFlat ++ qualified ++ rootRaw.macros
 
-    // vars merge across packages then root, LAST project wins per key
-    // ACROSS BOTH maps — a root list/dict override must evict a
-    // package's scalar of the same name (and vice versa), or the
-    // string-map-first lookup would serve the shadowed value
-    val (mergedVars, mergedVarsTyped) =
-      (pkgRaws.map(_._2) :+ rootRaw).foldLeft(
-        (Map.empty[String, String], Map.empty[String, graft.render.Jinja.JV])) {
-        case ((mv, mt), r) =>
-          ((mv -- r.varsTyped.keys) ++ r.vars, (mt -- r.vars.keys) ++ r.varsTyped)
-      }
-
     // docs blocks: per-package maps for precedence, flat map for export
     val docsByPackage = pkgRaws.map { case (pkg, raw) => pkg -> raw.docs }.toMap +
       ("graft" -> rootRaw.docs)
@@ -416,7 +419,7 @@ object ProjectLoader {
     validateSemanticManifest(unlinked)
     val manifest = link(unlinked).copy(selectors = rootRaw.selectors,
       macroSources = flatMacros.map { case (k, d) => k -> d.body })
-    Project(rootRaw.name, mergedVars, mergedVarsTyped, manifest,
+    Project(rootRaw.name, vars._1, vars._2, manifest,
       onRunStart = rootRaw.onRunStart, onRunEnd = rootRaw.onRunEnd,
       macros = flatMacros,
       macrosByPackage = pkgMacros + ("graft" -> rootRaw.macros),
@@ -667,59 +670,60 @@ object ProjectLoader {
     * +keys plus the package's named scope subtree (root wins over the
     * package's own project defaults, reference precedence).
     */
-  private[parse] def rootScopeFor(rootDir: Path, pkg: String): ConfigTree = {
-    val yaml = new org.yaml.snakeyaml.Yaml()
-    val f = rootDir.resolve("dbt_project.yml")
-    if (!Files.exists(f)) ConfigTree()
-    else {
-      val cfg = Option(yaml.load[java.util.Map[String, Any]](Files.readString(f)))
-        .map(_.asScala.toMap).getOrElse(Map.empty)
-      scopeOf(parseConfigTree(cfg.getOrElse("models", null)), pkg)
-    }
+  private[parse] def rootScopeFor(rootDir: Path, pkg: String): ConfigTree =
+    scopeOf(parseConfigTree(projectYml(rootDir).getOrElse("models", null)), pkg)
+
+  /** Duplicate mapping keys are a hard parse error (reference
+    * DuplicateYamlKeyError via dbt_common's checked loader) — a yml
+    * with two `models:` sections silently loses the first one under a
+    * lenient loader. */
+  private def strictYaml(): org.yaml.snakeyaml.Yaml = {
+    val lo = new org.yaml.snakeyaml.LoaderOptions()
+    lo.setAllowDuplicateKeys(false)
+    new org.yaml.snakeyaml.Yaml(lo)
   }
 
+  /** A project's dbt_project.yml as a map (empty when absent). */
+  private def projectYml(root: Path): Map[String, Any] = {
+    val f = root.resolve("dbt_project.yml")
+    if (!Files.exists(f)) Map.empty
+    else Option(strictYaml().load[java.util.Map[String, Any]](Files.readString(f)))
+      .map(_.asScala.toMap).getOrElse(Map.empty)
+  }
+
+  /** A project's `vars:`. Scalars go to the STRING map (checked first,
+    * so unit-test overrides shadow them); list/dict vars go to the
+    * TYPED map only — their `toString` form ("[a, b]") is garbage for
+    * `{% for r in var('regions') %}`. */
+  private def projectVars(projCfg: Map[String, Any]): (Map[String, String], Map[String, Jinja.JV]) =
+    projCfg.get("vars") match {
+      case Some(m: java.util.Map[_, _]) =>
+        val (typed, scalar) = m.asScala.toSeq.map { case (k, v) => k.toString -> v }
+          .partition(e => e._2.isInstanceOf[java.util.Map[_, _]] ||
+            e._2.isInstanceOf[java.util.List[_]])
+        (scalar.map { case (k, v) => k -> String.valueOf(v) }.toMap,
+          typed.map { case (k, v) => k -> Jinja.fromAny(v) }.toMap)
+      case _ => (Map.empty, Map.empty)
+    }
+
+  /** One root's parse. `vars` are the merged project + CLI vars the
+    * walk of every `.sql` file sees. */
   private def loadRaw(root: Path,
+      vars: (Map[String, String], Map[String, Jinja.JV]),
       extraModelDefaults: ConfigTree = ConfigTree(),
       rootKey: String = "",
       psession: Option[PartialParse.Session] = None): RawProject = {
-    // duplicate mapping keys are a hard parse error (reference
-    // DuplicateYamlKeyError via dbt_common's checked loader) — a yml
-    // with two `models:` sections silently loses the first one under
-    // a lenient loader
-    val yaml = {
-      val lo = new org.yaml.snakeyaml.LoaderOptions()
-      lo.setAllowDuplicateKeys(false)
-      new org.yaml.snakeyaml.Yaml(lo)
-    }
+    val yaml = strictYaml()
     parseDeprecations.get().clear()
     parseWarnings.get().clear()
 
     // ---- dbt_project.yml
-    val projFile = root.resolve("dbt_project.yml")
-    val projCfg: Map[String, Any] =
-      if (Files.exists(projFile))
-        Option(yaml.load[java.util.Map[String, Any]](Files.readString(projFile)))
-          .map(_.asScala.toMap).getOrElse(Map.empty)
-      else Map.empty
+    val projCfg = projectYml(root)
     val projName = projCfg.getOrElse("name", "graft").toString
-    // scalar vars go to the STRING map (checked first, so CLI --vars
-    // and unit-test overrides shadow them); list/dict vars go to the
-    // TYPED map only — their previous `toString` form ("[a, b]") was
-    // garbage for `{% for r in var('regions') %}` anyway
-    val (vars, varsTyped) = projCfg.get("vars") match {
-      case Some(m: java.util.Map[_, _]) =>
-        val entries = m.asScala.toSeq.map { case (k, v) => k.toString -> v }
-        (entries.collect {
-          case (k, v) if !v.isInstanceOf[java.util.Map[_, _]] &&
-            !v.isInstanceOf[java.util.List[_]] => k -> String.valueOf(v)
-        }.toMap,
-          entries.collect {
-            case (k, v) if v.isInstanceOf[java.util.Map[_, _]] ||
-              v.isInstanceOf[java.util.List[_]] =>
-              k -> graft.render.Jinja.fromAny(v)
-          }.toMap)
-      case _ => (Map.empty[String, String], Map.empty[String, graft.render.Jinja.JV])
-    }
+    def walk(raw: String): Jinja.Captured = Jinja.capture(raw, vars._1, vars._2)
+    // the walk reads vars, so their digest is an out-of-file parse
+    // input of every walked .sql file
+    val varsCtx = PartialParse.sha256(stableStr(vars))
     // own tree (top +keys and own-name scope) < root-project scoping;
     // per-directory subtrees resolve per model file below
     val modelTree =
@@ -1064,10 +1068,9 @@ object ProjectLoader {
               }
             }
             // `input: ref('m')` / `input: source('s','t')` → fixture key
-            def inputKey(v: String): String = {
-              val srcs = Template.extractSources(s"{{ $v }}")
-              if (srcs.nonEmpty) s"${srcs.head._1}.${srcs.head._2}" else refName(v)
-            }
+            def inputKey(v: String): String =
+              Jinja.captureExpr(v).sources.headOption
+                .map { case (s, t) => s"$s.$t" }.getOrElse(refName(v))
             val given = um.getOrElse("given", new java.util.ArrayList[Any]())
               .asInstanceOf[java.util.List[_]].asScala.toSeq.map { g =>
                 val gm = g.asInstanceOf[java.util.Map[String, Any]].asScala
@@ -1196,15 +1199,15 @@ object ProjectLoader {
       val ctx = stableStr((
         (patchCols, patchTests, patchKw, patchDesc),
         modelVersions.get(name),
-        modelTree.kwargsFor(dirSegs)))
+        modelTree.kwargsFor(dirSegs), varsCtx))
       val fileNodes = cachedAs(f, ctx) { raw =>
-        val (kwargs, _) = Template.extractConfig(raw)
-        val cfg = configFromKwargs(
-          mergeKwargs(mergeKwargs(modelTree.kwargsFor(dirSegs), patchKw), kwargs))
+        val cap = walk(raw)
+        val cfg = configFromKwargs(mergeKwargs(
+          mergeKwargs(modelTree.kwargsFor(dirSegs), patchKw), configKwargs(cap)))
         val buf = scala.collection.mutable.ListBuffer[Node]()
         buf += ModelNode(
           name = name, rawSql = raw, config = cfg, columns = patchCols,
-          refs = Template.extractRefs(raw), sources = Template.extractSources(raw),
+          refs = cap.refs, sources = cap.sources,
           version = version,
           latestVersion = version.flatMap(_ => modelVersions(name)._2),
           deprecationDate = patchKw.get("deprecation_date"),
@@ -1333,7 +1336,7 @@ object ProjectLoader {
       // block names are only known after the parse, so the cache ctx
       // carries ALL snapshot patches (editing a snapshots: yml entry
       // reparses the snapshot files — they are few)
-      nodes ++= cachedAs(f, stableStr(snapshotPatches)) { fileRaw =>
+      nodes ++= cachedAs(f, stableStr((snapshotPatches, varsCtx))) { fileRaw =>
         val blocks = snapshotBlockRe.findAllMatchIn(fileRaw)
           .map(m => m.group(1) -> m.group(2).trim).toSeq
         val entries = if (blocks.nonEmpty) blocks else Seq(stripExt(f) -> fileRaw)
@@ -1343,12 +1346,12 @@ object ProjectLoader {
           val (patchCols, patchTests, patchKw, _) =
             snapshotPatches.getOrElse(snapName,
               (Nil, Nil, Map.empty[String, String], ""))
-          val (fileKw, _) = Template.extractConfig(raw)
+          val cap = walk(raw)
           // mergeKwargs, not `++`: hooks/tags APPEND across config
           // levels (reference MergeBehavior.Append) — a post_hook in
           // both the snapshots: yml and the in-file config block runs
           // both, yml level first (ADVICE r14)
-          val kwargs = mergeKwargs(patchKw, fileKw)
+          val kwargs = mergeKwargs(patchKw, configKwargs(cap))
           val strategy = kwargs.getOrElse("strategy", "timestamp") match {
             case "timestamp" => TimestampStrategy(kwargs("updated_at"))
             case "check" =>
@@ -1365,7 +1368,7 @@ object ProjectLoader {
             strategy = strategy,
             invalidateHardDeletes = kwargs.get("invalidate_hard_deletes").exists(_.toBoolean),
             config = configFromKwargs(kwargs).copy(materialized = "snapshot"),
-            refs = Template.extractRefs(raw), sources = Template.extractSources(raw),
+            refs = cap.refs, sources = cap.sources,
             originPath = relPath(f))
           Seq(snap) ++ patchCols.flatMap(c =>
             c.tests.map(t => buildGenericTest(snapName, Some(c.name), t))) ++
@@ -1392,22 +1395,23 @@ object ProjectLoader {
     // ---- analyses: compiled, never executed (reference NodeType.Analysis)
     for (f <- listFiles(root.resolve("analyses"), ".sql")) {
       val raw = Files.readString(f)
+      val cap = walk(raw)
       nodes += ModelNode(
         name = stripExt(f), rawSql = raw,
         config = NodeConfig(materialized = "analysis"),
-        refs = Template.extractRefs(raw), sources = Template.extractSources(raw))
+        refs = cap.refs, sources = cap.sources)
     }
 
     // ---- singular tests (tests/fixtures/*.sql are unit-test fixture
     // FILES, not tests — the reference's FixtureParser claims them)
     for (f <- listFiles(root.resolve("tests"), ".sql")
         if !f.startsWith(fixturesDir)) {
-      nodes += cachedAs(f, "") { raw =>
-        val (kwargs, _) = Template.extractConfig(raw)
+      nodes += cachedAs(f, varsCtx) { raw =>
+        val cap = walk(raw)
         TestNode(
           name = stripExt(f), rawSql = raw,
-          config = NodeConfig(materialized = "test").merge(configFromKwargs(kwargs)),
-          refs = Template.extractRefs(raw), sources = Template.extractSources(raw),
+          config = NodeConfig(materialized = "test").merge(configFromKwargs(configKwargs(cap))),
+          refs = cap.refs, sources = cap.sources,
           originPath = relPath(f))
       }
     }
@@ -1485,7 +1489,7 @@ object ProjectLoader {
         case _ => Map.empty[String, SelectorDef]
       }
 
-    RawProject(projName, vars, varsTyped, nodes.toSeq,
+    RawProject(projName, nodes.toSeq,
       onRunStart = hookList("on-run-start"), onRunEnd = hookList("on-run-end"),
       macros = macros, selectors = selectorDefs, docs = docs,
       sourcePatches = sourcePatches.toSeq, queryComment = queryComment,
@@ -1603,7 +1607,7 @@ object ProjectLoader {
 
   /** `m` or `ref('m')`/`ref('m', v=2)` (braces optional) → ref spec. */
   private def refName(v: String): String =
-    Template.extractRefs(s"{{ $v }}").headOption.getOrElse(v)
+    Jinja.captureExpr(v).refs.headOption.getOrElse(v)
 
   /** Ref/source name resolution → depends_on unique ids (reference
     * `process_refs`, `manifest.py:1274-1304`). Refs are specs — pinned
@@ -1906,16 +1910,9 @@ object ProjectLoader {
           }.mkString
         s"{{ ${pkgPrefix}test_$bare(model=ref('$model')$colArg$extra) }}"
       }
-    // refs: extractRefs only sees whole `{{ ref('x') }}` expressions —
-    // the custom-test macro call nests ref() inside a larger expression,
-    // so the model (and any ref-valued kwargs) register explicitly
-    val kwargRefRe = """(?s)ref\(\s*['"]([^'"]+)['"]""".r
-    val refs = (Template.extractRefs(sql) ++ Seq(model) ++
-      t.kwargs.values.flatMap(v =>
-        kwargRefRe.findAllMatchIn(v).map(_.group(1)))).distinct
     TestNode(name = parts.mkString("_"), rawSql = sql,
       config = NodeConfig(materialized = "test").merge(t.config),
-      refs = refs,
+      refs = (model +: Jinja.capture(sql).refs).distinct,
       genericTest = Some(t.testName))
   }
 
@@ -1923,10 +1920,12 @@ object ProjectLoader {
     "store_failures_as",
     "warn_if", "error_if", "fail_calc")
 
+  /** The config encoding of a YAML value or an evaluated `config()`
+    * kwarg: scalars as text; lists \u0001-joined (items may contain
+    * commas).
+    * Dict ITEMS (the list-of-dict hook form) recurse through the dict
+    * encoding so hookList can unwrap their sql. */
   private def stringify(v: Any): String = v match {
-    // \u0001-joined like parseKwargs lists: items may contain commas.
-    // Dict ITEMS (the list-of-dict hook form) recurse through the dict
-    // encoding so hookList can unwrap their sql.
     case l: java.util.List[_] => l.asScala.map {
       case m: java.util.Map[_, _] => stringify(m)
       case o => o.toString
@@ -1944,9 +1943,7 @@ object ProjectLoader {
     case other => String.valueOf(other)
   }
 
-  /** Decode the `k=v1|v2;k2=v3` dict encoding produced by stringify /
-    * Template.parseKwargs.
-    */
+  /** Decode the `k=v1|v2;k2=v3` dict encoding produced by stringify. */
   private[parse] def decodeDict(s: String): Seq[(String, Seq[String])] =
     s.split(";").toSeq.filter(_.nonEmpty).map { e =>
       e.split("=", 2) match {
@@ -1957,6 +1954,13 @@ object ProjectLoader {
 
   private def encodeDict(d: Seq[(String, Seq[String])]): String =
     d.map { case (k, v) => s"$k=${v.mkString("|")}" }.mkString(";")
+
+  /** A file's `config()` calls as one kwargs map: each call's values
+    * encoded like YAML configs, the calls merged in order like config
+    * levels (hooks append, tags union, grants/persist_docs merge). */
+  private[graft] def configKwargs(c: Jinja.Captured): Map[String, String] =
+    c.configs.map(_.map { case (k, v) => k -> stringify(Jinja.toAny(v)) })
+      .foldLeft(Map.empty[String, String])(mergeKwargs)
 
   /** kwargs (from `{{ config(...) }}` or YAML) → NodeConfig. */
   /** Hook config values: a LIST splits on the kwarg list separator

@@ -83,6 +83,48 @@ object Ext4 {
       .orderBy("event_type")
   }
 
+  /** q182's winsorized statistics from a (flag, price, c) value
+    * histogram, price in LONG ten-thousandths. percentile_disc(p) =
+    * min{v : cum(v) >= ceil(p·n)} — identical to the rank-k row value
+    * the oracle computes. Every output term is a function of (flag,
+    * price, c): sum(w) = Σ clamp(price)·c, clamp counts = Σ c over the
+    * tail buckets; the per-flag totals come from a ≤|flags|-row
+    * aggregate broadcast back instead of a whole-partition window.
+    * The weighted sum accumulates in DECIMAL(38,0), so it cannot wrap
+    * (a LONG wraps near 2.3e10 rows per flag at the top TPC-H price);
+    * it divides back by 1e4 exactly in decimal, and the cast to double
+    * is one correctly-rounded step, the value the oracle's
+    * CAST(SUM(DECIMAL) AS DOUBLE) gives.
+    */
+  private[graft] def winsorizedFromHistogram(hist: DataFrame): DataFrame = {
+    val totals = hist.groupBy("flag").agg(sum("c").as("n"))
+    val cum = hist.join(broadcast(totals), "flag")
+      .select(col("flag"), col("price"), col("n"),
+        sum("c").over(Window.partitionBy("flag").orderBy("price")).as("cum"))
+    val cuts = cum.groupBy("flag", "n")
+      .agg(
+        min(when(col("cum") >= expr("(n + 19) div 20"), col("price"))).as("p05"),
+        min(when(col("cum") >= expr("(19 * n + 19) div 20"), col("price"))).as("p95"))
+    hist.join(broadcast(cuts.withColumnRenamed("flag", "cflag")),
+        col("flag") === col("cflag"))
+      .select(col("flag"), col("n"), col("p05"), col("p95"),
+        (greatest(col("p05"), least(col("p95"), col("price")))
+          .cast(DecimalType(38, 0)) * col("c")).as("wsum"),
+        when(col("price") < col("p05"), col("c")).otherwise(0L).as("lo"),
+        when(col("price") > col("p95"), col("c")).otherwise(0L).as("hi"))
+      .groupBy("flag", "n", "p05", "p95")
+      .agg(round((sum("wsum") * lit(new java.math.BigDecimal("0.0001")))
+        .cast("double") / col("n"), 4).as("mean_winsorized"),
+        sum("lo").cast("long").as("n_clamped_low"),
+        sum("hi").cast("long").as("n_clamped_high"))
+      .select(col("flag"), col("n").cast("long").as("n"),
+        (col("p05").cast("double") / 10000.0).cast("double").as("p05"),
+        (col("p95").cast("double") / 10000.0).cast("double").as("p95"),
+        col("mean_winsorized").cast("double").as("mean_winsorized"),
+        col("n_clamped_low"), col("n_clamped_high"))
+      .orderBy("flag")
+  }
+
   /** The exact-Jaccard near-dup pair kernel (q175's PPJoin topology) as
     * a reusable oracle CTE block ending in `pairs(doc_a, doc_b,
     * common_tokens, union_tokens)` — shared by q175 and the q224 split
@@ -577,15 +619,11 @@ object Ext4 {
         |FROM wins GROUP BY flag, n, p05, p95
         |ORDER BY flag""".stripMargin) { (s, dir) =>
       // r16 (guide §2.3 "narrower types"): the histogram keys, window
-      // sums, clamp comparisons and weighted sums all run on LONG
-      // ten-thousandths-of-a-unit instead of DECIMAL(20,4). The
-      // conversion still goes THROUGH the decimal cast (decimal ×
-      // 10000 is exact, fits long: price ≤ ~1.1e5 → ≤ 1.1e9), so every
-      // group key, order statistic and clamp decision is the same
-      // exact rational as before; outputs divide back by 1e4 in double
-      // (one correctly-rounded step, same value as the decimal→double
-      // cast — both are nearest-double of the same rational; the long
-      // sums stay < 2^53 so toDouble is exact).
+      // sums and clamp comparisons run on LONG ten-thousandths-of-a-unit
+      // instead of DECIMAL(20,4). The conversion still goes THROUGH the
+      // decimal cast (decimal × 10000 is exact, fits long: price ≤
+      // ~1.1e5 → ≤ 1.1e9), so every group key, order statistic and
+      // clamp decision is the same exact rational as before.
       val base = Tables.load(s, dir, "lineitem")
         .select(col("l_returnflag").as("flag"),
           (col("l_extendedprice").cast(DecimalType(20, 4)) * 10000)
@@ -594,49 +632,17 @@ object Ext4 {
       // window runs over (flag, distinct price) rows — a bounded
       // domain (TPC-H prices) — never over raw rows, so the per-group
       // sort doesn't become a one-task straggler at scale.
-      // percentile_disc(p) = min{v : cum(v) >= ceil(p·n)} — identical
-      // to the rank-k row value the oracle computes.
-      // winsorize from the HISTOGRAM, not the raw rows (r15): every
-      // output term is a function of (flag, price, count) — sum(w) =
-      // Σ clamp(price)·c, clamp counts = Σ c over the tail buckets.
       // r15 optimization pass 2 (guide §1.2/§5): the cuts branch and
       // the winsorize branch are two CONSUMERS of the same histogram;
       // without a persist Catalyst re-derives the scan + groupBy for
       // each (the measured plan carried two full lineitem subtrees).
       // The hist is domain-bounded (|flags| × |distinct prices|), so
-      // it persists within the query, both branches read the cache,
-      // and the per-flag totals come from a 3-row aggregate broadcast
-      // back instead of a second whole-partition window frame. The
-      // ≤|flags|-row result pins locally so the cache releases before
-      // returning (q140's pattern). Decimal × long is exact; values
-      // are bit-identical to the per-row formulation.
+      // it persists within the query, both branches read the cache.
+      // The ≤|flags|-row result pins locally so the cache releases
+      // before returning (q140's pattern).
       val hist = base.groupBy("flag", "price").agg(count(lit(1)).as("c"))
         .persist()
-      val totals = hist.groupBy("flag").agg(sum("c").as("n"))
-      val cum = hist.join(broadcast(totals), "flag")
-        .select(col("flag"), col("price"), col("n"),
-          sum("c").over(Window.partitionBy("flag").orderBy("price")).as("cum"))
-      val cuts = cum.groupBy("flag", "n")
-        .agg(
-          min(when(col("cum") >= expr("(n + 19) div 20"), col("price"))).as("p05"),
-          min(when(col("cum") >= expr("(19 * n + 19) div 20"), col("price"))).as("p95"))
-      val res = hist.join(broadcast(cuts.withColumnRenamed("flag", "cflag")),
-          col("flag") === col("cflag"))
-        .select(col("flag"), col("n"), col("p05"), col("p95"),
-          (greatest(col("p05"), least(col("p95"), col("price"))) * col("c")).as("wsum"),
-          when(col("price") < col("p05"), col("c")).otherwise(0L).as("lo"),
-          when(col("price") > col("p95"), col("c")).otherwise(0L).as("hi"))
-        .groupBy("flag", "n", "p05", "p95")
-        .agg(round((sum("wsum").cast("double") / 10000.0) / col("n"), 4)
-          .as("mean_winsorized"),
-          sum("lo").cast("long").as("n_clamped_low"),
-          sum("hi").cast("long").as("n_clamped_high"))
-        .select(col("flag"), col("n").cast("long").as("n"),
-          (col("p05").cast("double") / 10000.0).cast("double").as("p05"),
-          (col("p95").cast("double") / 10000.0).cast("double").as("p95"),
-          col("mean_winsorized").cast("double").as("mean_winsorized"),
-          col("n_clamped_low"), col("n_clamped_high"))
-        .orderBy("flag")
+      val res = winsorizedFromHistogram(hist)
       val rows =
         try res.collect().toSeq
         finally hist.unpersist()
@@ -663,8 +669,10 @@ object Ext4 {
         |  FROM freq QUALIFY rn <= 1000
         |), pts AS (
         |  -- ln values scaled to 1e4 integers: every moment sum and the
-        |  -- closed-form numerators/denominators stay BIGINT-exact and
-        |  -- below 2^53, so the final double division is bit-identical
+        |  -- closed-form numerators/denominators stay BIGINT-exact (1000
+        |  -- points of |x|, |y| < 3e5 stay under 1e17, far inside
+        |  -- BIGINT), and both engines cast BIGINT to DOUBLE with one
+        |  -- correctly-rounded step, so the final division is bit-identical
         |  SELECT CAST(ROUND(LN(CAST(rn AS DOUBLE)) * 10000, 0) AS BIGINT) AS x,
         |         CAST(ROUND(LN(CAST(f AS DOUBLE)) * 10000, 0) AS BIGINT) AS y
         |  FROM top

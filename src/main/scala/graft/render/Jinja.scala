@@ -1,5 +1,7 @@
 package graft.render
 
+import scala.util.control.NonFatal
+
 /** Block-structured Jinja-subset engine — the A25 surface grown to what
   * community macro packages are actually written in (reference
   * `core/dbt/clients/jinja.py:191-210`, context dispatch
@@ -201,6 +203,11 @@ object Jinja {
     * `{% for r in var('regions') %}`). */
   def fromAny(o: Any): JV = fromJava(o)
 
+  /** The YAML-shaped object tree of a value — the inverse of
+    * [[fromAny]] (the loader encodes `config()` kwargs through the
+    * same encoder as YAML configs). */
+  def toAny(v: JV): Any = toJava(v, sortKeys = false)
+
   /** Jinja literal TEXT for a value — what run-operation's typed-arg
     * binding injects into `{% set name = … %}` preambles. Round-trips
     * through the expression parser (backslash escapes for quote and
@@ -365,7 +372,7 @@ object Jinja {
           case "{%" => "%}"
           case _ => "#}"
         }
-        val end = src.indexOf(close, i + 2)
+        val end = closeOf(src, i + 2, close)
         if (end < 0) { text += src(i); i += 1 } // unterminated: literal
         else {
           val rawFull = src.substring(i, end + 2)
@@ -417,6 +424,24 @@ object Jinja {
     }
     flushText()
     out.result()
+  }
+
+  /** Index of a tag's closing `close` at or after `from`, or -1. An
+    * expression or statement tag skips its string literals, so a `}}`
+    * inside `'…'` (a hook string holding `{{ this }}`) does not close
+    * it; a comment closes at its first `#}`. Literals that never
+    * balance fall back to the first occurrence. */
+  private def closeOf(src: String, from: Int, close: String): Int = {
+    var i = from
+    var q: Char = 0
+    while (close != "#}" && i < src.length - 1) {
+      val c = src(i)
+      if (q != 0) { if (c == '\\') i += 1 else if (c == q) q = 0 }
+      else if (c == '\'' || c == '"') q = c
+      else if (src.startsWith(close, i)) return i
+      i += 1
+    }
+    src.indexOf(close, from)
   }
 
   // ------------------------------------------------------------ parsing
@@ -757,34 +782,120 @@ object Jinja {
           case None => emit(els, ctx, scope, depth, sb)
         }
       case For(v, iterSrc, body) =>
-        val items = eval(iterSrc, ctx, scope, depth) match {
-          case JL(xs) => xs
-          // list compatibility: vars hold "a,b,c" strings; kwarg
-          // lists arrive joined on the \u0001 list separator
-          case JS(s) => s.split("[,\u0001]").toSeq.map(x => JS(x.trim))
-          case JM(m) => m.keys.toSeq.map(JS(_))
-          case other => throw new IllegalArgumentException(
-            s"jinja: cannot iterate ${show(other)}")
-        }
-        // tuple unpacking: {% for a, b in zip(xs, ys) %} / {% for k, v
-        // in d.items() %} — each item must be a sequence of the same
-        // arity as the name list
-        val names = v.split(",").map(_.trim).toSeq
-        items.zipWithIndex.foreach { case (item, idx) =>
-          val inner = new Scope(Some(scope))
-          if (names.length == 1) inner.vars(v) = item
-          else item match {
-            case JL(parts) if parts.length == names.length =>
-              names.zip(parts).foreach { case (n, p) => inner.vars(n) = p }
-            case other => throw new IllegalArgumentException(
-              s"jinja: cannot unpack ${show(other)} into (${names.mkString(", ")})")
-          }
-          inner.vars("loop") = JM(Map(
-            "index" -> jint(idx + 1), "index0" -> jint(idx),
-            "first" -> JB(idx == 0), "last" -> JB(idx == items.length - 1),
-            "length" -> jint(items.length)))
-          emit(body, ctx, inner, depth, sb)
-        }
+        forEachItem(v, eval(iterSrc, ctx, scope, depth), scope)(
+          emit(body, ctx, _, depth, sb))
+    }
+
+  /** Run `body` once per item of `iterable`, each in a child scope
+    * binding the loop name(s) and `loop`. */
+  private def forEachItem(v: String, iterable: JV, scope: Scope)(
+      body: Scope => Unit): Unit = {
+    val items = iterable match {
+      case JL(xs) => xs
+      // list compatibility: vars hold "a,b,c" strings; kwarg
+      // lists arrive joined on the \u0001 list separator
+      case JS(s) => s.split("[,\u0001]").toSeq.map(x => JS(x.trim))
+      case JM(m) => m.keys.toSeq.map(JS(_))
+      case other => throw new IllegalArgumentException(
+        s"jinja: cannot iterate ${show(other)}")
+    }
+    // tuple unpacking: {% for a, b in zip(xs, ys) %} / {% for k, v
+    // in d.items() %} — each item must be a sequence of the same
+    // arity as the name list
+    val names = v.split(",").map(_.trim).toSeq
+    items.zipWithIndex.foreach { case (item, idx) =>
+      val inner = new Scope(Some(scope))
+      if (names.length == 1) inner.vars(v) = item
+      else item match {
+        case JL(parts) if parts.length == names.length =>
+          names.zip(parts).foreach { case (n, p) => inner.vars(n) = p }
+        case other => throw new IllegalArgumentException(
+          s"jinja: cannot unpack ${show(other)} into (${names.mkString(", ")})")
+      }
+      inner.vars("loop") = JM(Map(
+        "index" -> jint(idx + 1), "index0" -> jint(idx),
+        "first" -> JB(idx == 0), "last" -> JB(idx == items.length - 1),
+        "length" -> jint(items.length)))
+      body(inner)
+    }
+  }
+
+  // ------------------------------------------------- parse-time capture
+
+  /** What a parse-time walk found: each `ref()` spec (`m`, `m.v2`) and
+    * `source()` pair in first-seen order, and the kwargs of each
+    * `config()` call in call order (a dict positional merges under
+    * them). */
+  final case class Captured(refs: Seq[String], sources: Seq[(String, String)],
+      configs: Seq[Map[String, JV]])
+
+  /** Parse-time capture (dbt renders each node at parse time to find
+    * its refs, sources and config): one walk over the template's tree,
+    * evaluating its expressions in a context where `ref`, `source` and
+    * `config` record their evaluated arguments and `var` sees `vars`.
+    *  - Every `{% if %}` branch is walked; no condition is evaluated.
+    *  - A `{% for %}` iterates when its iterable evaluates, and
+    *    otherwise walks its body once with the loop names unbound.
+    *  - An expression that throws (`run_query` has no runner here, and
+    *    no macro resolves) keeps what its arguments recorded before the
+    *    throw, and the walk goes on. Macro bodies are not entered.
+    *  - The `pre_hook`/`post_hook` strings of the template's own
+    *    `config()` calls are walked for refs and sources too.
+    * A template that does not parse captures nothing; its render
+    * reports the syntax error.
+    */
+  def capture(src: String, vars: Map[String, String] = Map.empty,
+      typedVars: Map[String, JV] = Map.empty): Captured =
+    captureTree(try parse(lex(src)) catch { case NonFatal(_) => Nil },
+      vars, typedVars)
+
+  /** [[capture]] of one expression — a YAML value such as
+    * `model: ref('m')` or `input: source('s', 't')`. */
+  def captureExpr(expr: String): Captured =
+    captureTree(Seq(Output(expr, expr)), Map.empty, Map.empty)
+
+  private def captureTree(nodes: Seq[Node], vars: Map[String, String],
+      typedVars: Map[String, JV]): Captured = {
+    val refs = scala.collection.mutable.LinkedHashSet[String]()
+    val sources = scala.collection.mutable.LinkedHashSet[(String, String)]()
+    val configs = scala.collection.mutable.ArrayBuffer[Map[String, JV]]()
+    // an unbound name renders "": nothing to record
+    val ctx = Template.Context(
+      resolveRef = r => { if (r.nonEmpty) refs += r; r },
+      resolveSource = (s, t) => { sources += ((s, t)); s"$s.$t" },
+      thisRelation = "", vars = vars, typedVars = typedVars,
+      configSink = Some(configs += _))
+    walk(nodes, ctx, new Scope(None), new StringBuilder)
+    def hookSql(v: JV): Seq[String] = v match {
+      case JS(s) => Seq(s)
+      case JL(xs) => xs.toSeq.flatMap(hookSql)
+      case JM(m) => m.get("sql").toSeq.flatMap(hookSql)
+      case _ => Nil
+    }
+    val hookCtx = ctx.copy(configSink = None)
+    for (c <- configs.toList; k <- Seq("pre_hook", "post_hook");
+         h <- c.get(k).toSeq.flatMap(hookSql))
+      walk(try parse(lex(h)) catch { case NonFatal(_) => Nil },
+        hookCtx, new Scope(None), new StringBuilder)
+    Captured(refs.toSeq, sources.toSeq, configs.toSeq)
+  }
+
+  private def walk(nodes: Seq[Node], ctx: Template.Context, scope: Scope,
+      sb: StringBuilder): Unit =
+    nodes.foreach {
+      case If(branches, els) =>
+        (branches.map(_._2) :+ els).foreach(walk(_, ctx, scope, sb))
+      case For(v, iterSrc, body) =>
+        try forEachItem(v, eval(iterSrc, ctx, scope, 0), scope)(walk(body, ctx, _, sb))
+        catch { case NonFatal(_) => walk(body, ctx, new Scope(Some(scope)), sb) }
+      case SetBlock(name, body) =>
+        val inner = new StringBuilder
+        walk(body, ctx, scope, inner)
+        scope.vars(name) = JS(inner.toString.trim)
+      case BlockNode(_, body, _) => walk(body, ctx, new Scope(Some(scope)), sb)
+      case FilterBlock(_, body) => walk(body, ctx, scope, new StringBuilder)
+      case node =>
+        try emit(Seq(node), ctx, scope, 0, sb) catch { case NonFatal(_) => () }
     }
 
   /** Evaluate; a bare unresolvable name yields JUndef instead of
@@ -1365,8 +1476,9 @@ object Jinja {
       case "false" | "False" => JB(false)
       case "none" | "None" | "null" => JNull
       case "this" => ctx.relationFor(ctx.thisRelation)
-      // render IS the execute phase here (no separate parse render);
-      // reference `execute` context flag
+      // reference `execute` context flag: render is the execute phase;
+      // the parse-time walk (capture) evaluates no `{% if %}` condition,
+      // so it walks both sides of `{% if execute %}` instead
       case "execute" => JB(true)
       // `thread_id` contextproperty (reference base.py:614-617)
       case "thread_id" => JS(Thread.currentThread().getName)
@@ -1442,11 +1554,15 @@ object Jinja {
         case "ref" =>
           // ref('m') | ref('m', v=2) | ref('pkg', 'm') — names are
           // globally unique, so the package qualifier only disambiguates
+          if (pos.isEmpty || pos.length > 2) throw new IllegalArgumentException(
+            s"ref() takes at most two arguments (${pos.length} given)")
           val base = if (pos.length == 2) str(pos(1)) else str(pos.head)
           val pinned = kw.get("v").orElse(kw.get("version"))
             .map(v => s"$base.v${str(v)}").getOrElse(base)
           ctx.relationFor(ctx.resolveRef(pinned))
         case "source" =>
+          if (pos.length != 2) throw new IllegalArgumentException(
+            s"source() takes exactly two arguments (${pos.length} given)")
           ctx.relationFor(ctx.resolveSource(str(pos.head), str(pos(1))))
         case "var" =>
           // string map first (scalars + unit-test overrides), then the
@@ -1677,7 +1793,11 @@ object Jinja {
             }
           }
           JM(out)
-        case "config" => JS("") // parse-time concern (Template.extractConfig)
+        // renders as ""; the parse-time walk records the call
+        case "config" =>
+          ctx.configSink.foreach(_(pos.collect { case JM(m) => m }
+            .foldLeft(Map.empty[String, JV])(_ ++ _) ++ kw))
+          JS("")
         case "exceptions" => JS("")
         case other =>
           scope.lookup(other) match {

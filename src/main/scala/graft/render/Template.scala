@@ -2,30 +2,15 @@ package graft.render
 
 import scala.util.matching.Regex
 
-/** Template front-end: parse-time static extraction (config/refs/
-  * sources/macros — mirroring the reference's `dbt_extractor` fast
-  * path, `core/dbt/parser/models.py:27,385-405`) plus runtime
+/** Template front-end: macro extraction (`{% macro %}`, `{% test %}`,
+  * `{% materialization %}` blocks), run-operation arg binding, and
   * rendering, which delegates to the block-structured [[Jinja]] engine
   * (nested if/for, filters, expression set, macro calls with lexical
-  * scoping — see Jinja's scaladoc for the declared subset).
+  * scoping — see Jinja's scaladoc for the declared subset). A node's
+  * refs, sources and config are found at parse time by
+  * [[Jinja.capture]], a walk over the same parse tree the render uses.
   */
 object Template {
-
-  /** `ref('m')`, pinned `ref('m', v=2)` / `ref('m', version=2)`
-    * (reference versioned-ref syntax — pinned refs pass the spec
-    * `m.v2` to the resolver), or two-arg `ref('pkg', 'm')` (package
-    * qualifier; names are globally unique so it extracts as `m`). */
-  private val refRe: Regex =
-    """\{\{\s*ref\(\s*['"]([^'"]+)['"]\s*(?:,\s*(?:v|version)\s*=\s*(\d+)\s*)?\)\s*\}\}""".r
-  private val refPkgRe: Regex =
-    """\{\{\s*ref\(\s*['"][^'"]+['"]\s*,\s*['"]([^'"]+)['"]\s*\)\s*\}\}""".r
-
-  private def refSpec(m: Regex.Match): String =
-    m.group(1) + Option(m.group(2)).map(v => s".v$v").getOrElse("")
-  private val sourceRe: Regex =
-    """\{\{\s*source\(\s*['"]([^'"]+)['"]\s*,\s*['"]([^'"]+)['"]\s*\)\s*\}\}""".r
-  private val configRe: Regex =
-    """(?s)\{\{\s*config\s*\((.*?)\)\s*\}\}""".r
 
   /** A25/A16 macro subset: `{% macro name(a, b='x') %}body{% endmacro %}`.
     * Bodies are SQL text whose `{{ param }}` placeholders bind at
@@ -179,16 +164,13 @@ object Template {
     out.toSeq
   }
 
-  /** Bind invocation args into a macro body: params become vars-style
-    * `{{ name }}` substitutions; unknown args and missing required
-    * params are errors (reference kwargs validation).
-    */
   /** Typed run-operation arg binding: a `{% set name = <literal> %}`
     * preamble prefixed to EVERY rendered segment of the macro body —
     * unlike textual `{{ name }}` substitution, set-bindings reach
     * for-loops/filters/indexing (`{% for s in schemas %}` with
     * `--args '{schemas: [a, b]}'`, the grant-sweep idiom). Unknown
-    * args and missing required params validate like bindMacro.
+    * args and missing required params are errors (reference kwargs
+    * validation).
     */
   def argPreamble(m: MacroDef, args: Map[String, Jinja.JV]): String = {
     val unknown = args.keySet -- m.params.map(_._1).toSet
@@ -208,157 +190,6 @@ object Template {
           throw new IllegalArgumentException(s"macro ${m.name}: missing arg $n"))
       s"{% set $n = $lit %}"
     }.mkString
-  }
-
-  def bindMacro(m: MacroDef, args: Map[String, String]): String = {
-    val unknown = args.keySet -- m.params.map(_._1).toSet
-    require(unknown.isEmpty, s"macro ${m.name}: unknown args ${unknown.mkString(",")}")
-    val bound = m.params.map { case (n, dflt) =>
-      n -> args.getOrElse(n, dflt.getOrElse(
-        throw new IllegalArgumentException(s"macro ${m.name}: missing arg $n")))
-    }
-    bound.foldLeft(m.body) { case (sql, (n, v)) =>
-      sql.replaceAll(s"""\\{\\{\\s*$n\\s*\\}\\}""", Regex.quoteReplacement(v))
-    }
-  }
-
-  /** Parse-time: every `ref(...)` as a spec — `x` or `x.v2`; two-arg
-    * package-qualified refs extract the model name. */
-  def extractRefs(sql: String): Seq[String] =
-    (refRe.findAllMatchIn(sql).map(refSpec) ++
-      refPkgRe.findAllMatchIn(sql).map(_.group(1))).toSeq.distinct
-
-  /** Parse-time: every `source('a','b')` pair. */
-  def extractSources(sql: String): Seq[(String, String)] =
-    sourceRe.findAllMatchIn(sql).map(m => (m.group(1), m.group(2))).toSeq.distinct
-
-  /** Parse-time: `{{ config(...) }}` kwargs, and the SQL with the
-    * config call removed. Values keep their literal text (quotes
-    * stripped); list values become comma-joined.
-    */
-  def extractConfig(sql: String): (Map[String, String], String) = {
-    val kwargs = configRe.findFirstMatchIn(sql)
-      .map(m => parseKwargs(m.group(1)))
-      .getOrElse(Map.empty)
-    (kwargs, configRe.replaceAllIn(sql, ""))
-  }
-
-  /** Tiny kwargs parser: `k='v', k2=123, k3=true, k4=['a','b']`. */
-  private[render] def parseKwargs(s: String): Map[String, String] = {
-    val out = scala.collection.mutable.LinkedHashMap[String, String]()
-    var i = 0
-    def skipWs(): Unit = while (i < s.length && s(i).isWhitespace) i += 1
-    while (i < s.length) {
-      skipWs()
-      val keyStart = i
-      while (i < s.length && s(i) != '=') i += 1
-      if (i >= s.length) return out.toMap
-      val key = s.substring(keyStart, i).trim
-      i += 1 // '='
-      skipWs()
-      val value = new StringBuilder
-      if (i < s.length && (s(i) == '\'' || s(i) == '"')) {
-        val q = s(i); i += 1
-        while (i < s.length && s(i) != q) { value += s(i); i += 1 }
-        i += 1
-      } else if (i < s.length && s(i) == '[') {
-        i += 1
-        val items = scala.collection.mutable.ArrayBuffer[String]()
-        while (i < s.length && s(i) != ']') {
-          skipWs()
-          if (s(i) == '\'' || s(i) == '"') {
-            val q = s(i); i += 1
-            val item = new StringBuilder
-            while (i < s.length && s(i) != q) { item += s(i); i += 1 }
-            i += 1
-            items += item.toString
-          } else if (s(i) == '{') {
-            // dict ITEM (the list-of-dicts hook form): encode through
-            // the dict entry shape `k=v;k2=v2` — hookList unwraps it
-            i += 1
-            val entries = scala.collection.mutable.ArrayBuffer[String]()
-            while (i < s.length && s(i) != '}') {
-              skipWs()
-              if (s(i) == '\'' || s(i) == '"') {
-                val dq = s(i); i += 1
-                val dk = new StringBuilder
-                while (i < s.length && s(i) != dq) { dk += s(i); i += 1 }
-                i += 1
-                skipWs()
-                if (i < s.length && s(i) == ':') i += 1
-                skipWs()
-                val dv = new StringBuilder
-                if (i < s.length && (s(i) == '\'' || s(i) == '"')) {
-                  val vq = s(i); i += 1
-                  while (i < s.length && s(i) != vq) { dv += s(i); i += 1 }
-                  i += 1
-                } else {
-                  while (i < s.length && s(i) != ',' && s(i) != '}') { dv += s(i); i += 1 }
-                }
-                entries += s"${dk.toString}=${dv.toString.trim}"
-              } else if (s(i) == ',') i += 1
-              else i += 1
-            }
-            i += 1
-            items += entries.mkString(";")
-          } else if (s(i) == ',') i += 1
-          else i += 1
-        }
-        i += 1
-        // \u0001-joined: a list item may itself contain commas (hook
-        // SQL does); consumers split on [,\u0001] (scalar compat)
-        value ++= items.mkString("\u0001")
-      } else if (i < s.length && s(i) == '{') {
-        // dict value (grants / persist_docs): {'k': ['a','b'], 'k2': v}
-        // → `k=a|b;k2=v` — the encoding ProjectLoader.decodeDict reads
-        i += 1
-        val entries = scala.collection.mutable.ArrayBuffer[String]()
-        while (i < s.length && s(i) != '}') {
-          skipWs()
-          if (s(i) == '\'' || s(i) == '"') {
-            val q = s(i); i += 1
-            val dk = new StringBuilder
-            while (i < s.length && s(i) != q) { dk += s(i); i += 1 }
-            i += 1
-            skipWs()
-            if (i < s.length && s(i) == ':') i += 1
-            skipWs()
-            val dv = new StringBuilder
-            if (i < s.length && s(i) == '[') {
-              i += 1
-              val items = scala.collection.mutable.ArrayBuffer[String]()
-              while (i < s.length && s(i) != ']') {
-                if (s(i) == '\'' || s(i) == '"') {
-                  val iq = s(i); i += 1
-                  val item = new StringBuilder
-                  while (i < s.length && s(i) != iq) { item += s(i); i += 1 }
-                  i += 1
-                  items += item.toString
-                } else i += 1
-              }
-              i += 1
-              dv ++= items.mkString("|")
-            } else if (i < s.length && (s(i) == '\'' || s(i) == '"')) {
-              val vq = s(i); i += 1
-              while (i < s.length && s(i) != vq) { dv += s(i); i += 1 }
-              i += 1
-            } else {
-              while (i < s.length && s(i) != ',' && s(i) != '}') { dv += s(i); i += 1 }
-            }
-            entries += s"${dk.toString}=${dv.toString.trim}"
-          } else if (s(i) == ',') i += 1
-          else i += 1
-        }
-        i += 1
-        value ++= entries.mkString(";")
-      } else {
-        while (i < s.length && s(i) != ',') { value += s(i); i += 1 }
-      }
-      out(key) = value.toString.trim
-      skipWs()
-      if (i < s.length && s(i) == ',') i += 1
-    }
-    out.toMap
   }
 
   /** Runtime render context (reference `RuntimeRefResolver`,
@@ -448,13 +279,16 @@ object Template {
         * `{% for r in var('regions') %}`. Scalars stay in the string
         * `vars` map (checked first, so unit-test overrides win).
         */
-      typedVars: Map[String, Jinja.JV] = Map.empty)
+      typedVars: Map[String, Jinja.JV] = Map.empty,
+      /** `config()` call sink: receives each call's evaluated kwargs.
+        * Only the parse-time walk ([[Jinja.capture]]) installs one; a
+        * render leaves it None and `config()` renders as "". */
+      configSink: Option[Map[String, Jinja.JV] => Unit] = None)
 
   /** Render a model body to executable Spark SQL — the full block
     * engine ([[Jinja]]): nested if/for, general expressions, filters,
-    * expression-valued set, macro calls. `{{ config(...) }}` is a
-    * parse-time concern and is stripped first (extractConfig reads it).
+    * expression-valued set, macro calls. `{{ config(...) }}` renders as
+    * "" (the parse-time walk read it).
     */
-  def render(sql: String, ctx: Context): String =
-    Jinja.render(configRe.replaceAllIn(sql, ""), ctx)
+  def render(sql: String, ctx: Context): String = Jinja.render(sql, ctx)
 }

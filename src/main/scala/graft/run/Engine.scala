@@ -702,7 +702,7 @@ final class Engine(
     val ephemeralDeps = scala.collection.mutable.LinkedHashMap[String, String]()
     val rendering = scala.collection.mutable.Set[String]()
 
-    def resolveRef(name: String): String = {
+    def resolveRef(from: Node)(name: String): String = {
       // reference-time advisories (reference providers.py ref checks):
       // I066/I067 deprecated-target warnings, I064 unpinned ref while
       // newer versions exist
@@ -747,6 +747,11 @@ final class Engine(
           // manifest.is_invalid_protected_ref, manifest.py:1451)
           throw graft.core.Errors.referenceNotAllowed(
             node.uniqueId, m.uniqueId, "protected", m.packageName)
+        // the parse-time walk missed this ref: the DAG (the manifest's
+        // copy of the node) lacks the edge
+        case Some(n) if !manifest.nodes.getOrElse(from.uniqueId, from)
+            .dependsOn.contains(n.uniqueId) =>
+          throw graft.core.Errors.refBadContext(from, name)
         case Some(m: ModelNode) if m.config.materialized == "ephemeral" =>
           val cteName = s"__dbt__cte__$name"
           if (!ephemeralDeps.contains(cteName) && rendering.add(cteName))
@@ -785,7 +790,7 @@ final class Engine(
 
     def renderBody(sql: String, thisRel: String, forNode: Node = node): String =
       Template.render(sql,
-        renderContext(resolveRef, resolveSource, thisRel, isIncremental,
+        renderContext(resolveRef(forNode), resolveSource, thisRel, isIncremental,
           callerPackage = node.packageName, node = Some(forNode)))
 
     val body = renderBody(raw, relationName(node))
@@ -1826,10 +1831,7 @@ object Engine {
         * `partial_parse.bin` state and emits the reference's I0xx
         * events; None (library default) is a plain full parse. */
       partialParse: Option[graft.parse.PartialParse.Options] = None): Engine = {
-    val proj = partialParse match {
-      case Some(o) => ProjectLoader.load(projectDir, o)
-      case None => ProjectLoader.load(projectDir)
-    }
+    val proj = ProjectLoader.load(projectDir, partialParse, vars, varsTyped)
     // partial-parse lifecycle events (reference events/types.py:
     // I028 PartialParsingNotEnabled, I024 UnableToPartialParse,
     // I017 PartialParsingSkipParsing, I040 PartialParsingEnabled)
@@ -1916,9 +1918,8 @@ object Engine {
       else targetDef.flatMap(_.schema).getOrElse("")
     val resolvedTarget = java.nio.file.Paths.get(projectDir).resolve(
       ProjectLoader.resolveTargetPath(targetPath, env, proj.targetPath)).toString
-    new Engine(spark, proj.manifest, warehouseRoot,
-      (proj.vars -- varsTyped.keys) ++ vars, clock,
-      typedVars = (proj.varsTyped -- vars.keys) ++ varsTyped,
+    new Engine(spark, proj.manifest, warehouseRoot, proj.vars, clock,
+      typedVars = proj.varsTyped,
       emptyMode = emptyMode,
       runStartHooks = proj.onRunStart, runEndHooks = proj.onRunEnd,
       namespace = ns, macros = proj.macros,

@@ -126,6 +126,17 @@ class ErrorsSpec extends AnyFunSuite {
       "depends on a node named 'x' in package or project 'pkg' which"))
   }
 
+  test("RefBadContextError text (exceptions.py)") {
+    val e = Errors.refBadContext(rpt, "stg_orders")
+    assert(e.getMessage ===
+      "dbt was unable to infer all dependencies for the model \"rpt\".\n" +
+        "This typically happens when ref() is placed within a conditional block.\n\n" +
+        "To fix this, add the following hint to the top of the model \"rpt\":\n\n" +
+        "-- depends_on: {{ ref('stg_orders') }}")
+    assert(Errors.refBadContext(rpt, "dim.v2").getMessage
+      .endsWith("-- depends_on: {{ ref('dim',v='2') }}"))
+  }
+
   test("DuplicateResourceNameError text (exceptions.py:1240-1289)") {
     val e = Errors.duplicateResourceName(model1, model2)
     assert(e.getMessage.startsWith("dbt found two models with the name \"orders\"."))

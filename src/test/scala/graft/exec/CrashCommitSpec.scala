@@ -29,6 +29,7 @@ class CrashCommitSpec extends SparkSpec {
   test(s"$N SIGKILLs mid-commit: recovery always reads a complete version") {
     val root = tmpDir("crash_wh")
     val staged = tmpDir("crash_staged")
+    val logs = tmpDir("crash_logs") // each child's output, removed with the scratch
     val table = "crash_t"
 
     // stage the version-content pool: file k holds 100 rows of val=k
@@ -59,8 +60,8 @@ class CrashCommitSpec extends SparkSpec {
     while (kills < N) {
       val proc = new ProcessBuilder(javaBin, "-cp", cp,
         "graft.tools.CrashCommitChild", root, staged, table, Pool.toString)
-        .redirectErrorStream(true).redirectOutput(
-          _root_.java.io.File.createTempFile("crash_child", ".log")).start()
+        .redirectErrorStream(true)
+        .redirectOutput(Paths.get(logs, s"child_$kills.log").toFile).start()
       // wait until the child is INSIDE the commit loop (the manifest
       // advanced past what we last saw), so the kill lands mid-protocol
       // instead of during JVM startup; then add a random skew so kills

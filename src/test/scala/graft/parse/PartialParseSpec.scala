@@ -49,6 +49,27 @@ class PartialParseSpec extends AnyFunSuite {
   private def stats(p: ProjectLoader.Project): PartialParse.Stats =
     p.partialStats.getOrElse(fail("partialStats missing"))
 
+  test("a CLI vars change re-walks the .sql files") {
+    val dir = mkProject()
+    Files.writeString(dir.resolve("models/m_1.sql"),
+      "{{ config(materialized=var('mat', 'table')) }}\nSELECT 1 AS id")
+    def loadWith(vars: Map[String, String]): ProjectLoader.Project =
+      ProjectLoader.load(dir.toString, Some(PartialParse.Options(env = Map.empty)),
+        vars, Map.empty)
+    def mat(p: ProjectLoader.Project): String =
+      p.manifest.nodes.values.collectFirst {
+        case m: graft.core.ModelNode if m.name == "m_1" => m.config.materialized
+      }.get
+    assert(mat(loadWith(Map.empty)) === "table")
+    assert(stats(loadWith(Map.empty)).parsed === 0, "same vars: everything reused")
+    val changed = loadWith(Map("mat" -> "view"))
+    assert(mat(changed) === "view", "the walk sees the CLI var")
+    // 6 models, 1 snapshot, 1 singular test re-walk; the schema yml,
+    // seed and macro file do not read vars
+    assert(stats(changed).parsed === 8)
+    assert(stats(changed).reused === 3)
+  }
+
   test("cold parse: full, state saved; warm parse: everything reused, manifest identical") {
     val dir = mkProject()
     val cold = load(dir)

@@ -1,10 +1,11 @@
 package graft.render
 
 import graft.core.NodeConfig
+import graft.parse.ProjectLoader
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Dict-valued config plumbing for grants / persist_docs: the
-  * `{...}` kwargs parse (Template.parseKwargs), the `k=v1|v2;...`
+  * `{...}` config() kwargs (ProjectLoader.configKwargs), the `k=v1|v2;...`
   * encoding, and the DictKeyAppend merge semantics (reference
   * `context_config.py:322-341`). The end-to-end cascade is gated by
   * m33/m34; these pin the pure corners.
@@ -12,12 +13,14 @@ import org.scalatest.funsuite.AnyFunSuite
 class GrantsConfigSpec extends AnyFunSuite {
 
   test("parseKwargs encodes dict values (lists and scalars)") {
-    val kw = Template.parseKwargs(
+    def kwargs(args: String) =
+      ProjectLoader.configKwargs(Jinja.capture(s"{{ config($args) }}"))
+    val kw = kwargs(
       "materialized='table', grants={'+select': ['bi', 'analyst'], 'insert': ['loader']}, alias='x'")
     assert(kw("materialized") === "table")
     assert(kw("grants") === "+select=bi|analyst;insert=loader")
     assert(kw("alias") === "x", "kwargs after the dict still parse")
-    val pd = Template.parseKwargs("persist_docs={'relation': true, 'columns': false}")
+    val pd = kwargs("persist_docs={'relation': true, 'columns': false}")
     assert(pd("persist_docs") === "relation=true;columns=false")
   }
 

@@ -45,6 +45,15 @@ class JinjaSpec extends AnyFunSuite {
       |
       |{% endmacro %}""".stripMargin
 
+  test("a post_hook string holding {{ this }} renders through Jinja.render") {
+    // the tag closes at the `}}` outside the string literal, and
+    // config() renders as ""
+    assert(Jinja.render(
+      """{{ config(materialized='table', post_hook="grant select on {{ this }} to r") }}SELECT 1""",
+      ctx) === "SELECT 1")
+    assert(Jinja.render("""{{ "}}" ~ '{%' }}-{% set x = "%}" %}{{ x }}""", ctx) === "}}{%-%}")
+  }
+
   test("{% raw %} emits literally: tags inside do not render") {
     // reference Jinja raw blocks (dbt docs use them to emit literal
     // curly syntax into SQL comments / external templates)

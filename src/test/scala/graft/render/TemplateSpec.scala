@@ -1,5 +1,6 @@
 package graft.render
 
+import graft.parse.ProjectLoader
 import org.scalatest.funsuite.AnyFunSuite
 
 class TemplateSpec extends AnyFunSuite {
@@ -37,18 +38,34 @@ class TemplateSpec extends AnyFunSuite {
 
   test("config extraction and removal") {
     val sql = "{{ config(materialized='incremental', unique_key='id', tags=['a','b'], full_refresh=true) }}\nSELECT 1"
-    val (kw, rest) = Template.extractConfig(sql)
     // list values join on u0001 (items may contain commas — hook SQL)
-    assert(kw === Map("materialized" -> "incremental", "unique_key" -> "id",
+    assert(ProjectLoader.configKwargs(Jinja.capture(sql)) === Map(
+      "materialized" -> "incremental", "unique_key" -> "id",
       "tags" -> "a\u0001b", "full_refresh" -> "true"))
-    assert(rest.trim === "SELECT 1")
     assert(Template.render(sql, ctx) === "SELECT 1")
   }
 
   test("extract refs and sources at parse time") {
     val sql = "SELECT * FROM {{ ref('a') }}, {{ ref(\"b\") }}, {{ source('s', 't') }}, {{ ref('a') }}"
-    assert(Template.extractRefs(sql) === Seq("a", "b"))
-    assert(Template.extractSources(sql) === Seq(("s", "t")))
+    val cap = Jinja.capture(sql)
+    assert(cap.refs === Seq("a", "b"))
+    assert(cap.sources === Seq(("s", "t")))
+  }
+
+  test("capture walks every branch and keeps refs evaluated before a throw") {
+    val cap = Jinja.capture(
+      """{% set up = ref('a') %}{% if execute %}{{ ref(var('v')) }}{% endif %}
+        |{% for r in run_query('x').rows %}{{ ref('in_loop') }}{% endfor %}
+        |{{ pkg.test_x(model=ref('m'), to=ref('p')) }}{{ run_query(ref('q')) }}
+        |{{ config(post_hook="insert into {{ ref('log') }} select 1") }}
+        |{{ config(materialized=var('mat', 'table')) }}{{ config(tags=['x']) }}""".stripMargin,
+      vars = Map("v" -> "from_var"))
+    assert(cap.refs === Seq("a", "from_var", "in_loop", "m", "p", "q", "log"))
+    assert(ProjectLoader.configKwargs(cap) === Map("post_hook" ->
+      "insert into {{ ref('log') }} select 1", "materialized" -> "table", "tags" -> "x"))
+    assert(Jinja.captureExpr("ref('m', v=2)").refs === Seq("m.v2"))
+    assert(Jinja.captureExpr("source('s', 't')").sources === Seq(("s", "t")))
+    assert(Jinja.captureExpr("plain_name").refs.isEmpty)
   }
 
   test("macro extraction and arg binding") {
@@ -60,13 +77,6 @@ class TemplateSpec extends AnyFunSuite {
     val ms = Template.extractMacros(text)
     assert(ms.map(_.name) === Seq("grant_select", "vacuum"))
     assert(ms.head.params === Seq("rel" -> None, "role" -> Some("reader")))
-    assert(Template.bindMacro(ms.head, Map("rel" -> "t1")) ===
-      "GRANT SELECT ON t1 TO reader")
-    assert(Template.bindMacro(ms.head, Map("rel" -> "t1", "role" -> "admin")) ===
-      "GRANT SELECT ON t1 TO admin")
-    assertThrows[IllegalArgumentException](Template.bindMacro(ms.head, Map.empty))
-    assertThrows[IllegalArgumentException](
-      Template.bindMacro(ms.head, Map("rel" -> "t1", "nope" -> "x")))
   }
 
   test("env_var, local_md5 and log builtins") {

@@ -1792,4 +1792,97 @@ class EngineSpec extends SparkSpec {
     val probe = spark.table("rr_thread_probe").collect()(0).getString(0)
     assert(probe.split(";").toSeq.size === 4 && probe.split(";").forall(_.matches(worker)), probe)
   }
+
+  // ---- parse-time capture: the DAG holds every ref the render resolves
+
+  private def nodeNamed(eng: Engine, name: String): Node =
+    eng.manifest.nodes.values.find(_.name == name).get
+
+  test("a ref held by {% set %} is a parse-time edge; a 2-thread run orders it") {
+    val dir = writeProject(Map(
+      "dbt_project.yml" -> "name: setref\n",
+      "models/a.sql" -> "{{ config(materialized='table') }}\nSELECT 1 AS id",
+      "models/b.sql" ->
+        """{% set up = ref('a') %}
+          |{{ config(materialized='table') }}
+          |SELECT id FROM {{ up }}""".stripMargin))
+    val eng = Engine.fromProject(spark, dir, tmpDir("wh"))
+    assert(nodeNamed(eng, "b").dependsOn === Seq(nodeNamed(eng, "a").uniqueId))
+    val res = eng.run(threads = 2)
+    assert(res.map(_.status) === Seq("success", "success"), res.mkString("; "))
+    assert(res.map(_.uniqueId) === Seq(nodeNamed(eng, "a").uniqueId,
+      nodeNamed(eng, "b").uniqueId), "b finishes after a")
+    assert(eng.wh.read("b").count() === 1)
+  }
+
+  test("config(materialized=var('mat','table')) evaluates the var") {
+    val files = Map(
+      "dbt_project.yml" -> "name: varcfg\n",
+      "models/m.sql" -> "{{ config(materialized=var('mat', 'table')) }}\nSELECT 1 AS id")
+    val eng = Engine.fromProject(spark, writeProject(files), tmpDir("wh"))
+    assert(eng.run().map(_.status) === Seq("success"))
+    assert(eng.wh.exists("m") && !eng.wh.isView("m"), "the default 'table' applies")
+    // a CLI var reaches the parse-time walk as it reaches the render
+    val cli = Engine.fromProject(spark, writeProject(files), tmpDir("wh"),
+      vars = Map("mat" -> "view"))
+    assert(cli.run().map(_.status) === Seq("success"))
+    assert(cli.wh.isView("m"))
+  }
+
+  test("two config() calls merge") {
+    val eng = Engine.fromProject(spark, writeProject(Map(
+      "dbt_project.yml" -> "name: twocfg\n",
+      "models/m.sql" ->
+        """{{ config(materialized='table', tags=['x']) }}
+          |{{ config(alias='m_alias', tags=['y']) }}
+          |SELECT 1 AS id""".stripMargin)), tmpDir("wh"))
+    val cfg = nodeNamed(eng, "m").config
+    assert(cfg.materialized === "table")
+    assert(cfg.alias === Some("m_alias"))
+    assert(cfg.tags === Set("x", "y"))
+    assert(eng.run().map(_.status) === Seq("success"))
+    assert(eng.wh.exists("m_alias") && !eng.wh.isView("m_alias"))
+  }
+
+  test("a ref only reachable at run time is refused until a depends_on hint declares it") {
+    def project(hint: String) = writeProject(Map(
+      "dbt_project.yml" -> "name: runref\n",
+      "models/a.sql" -> "{{ config(materialized='table') }}\nSELECT 1 AS id",
+      "models/b.sql" -> (hint +
+        """{% if execute %}
+          |{% set up = run_query("SELECT 'a' AS n").rows[0][0] %}
+          |SELECT id FROM {{ ref(up) }}
+          |{% endif %}""".stripMargin)))
+    val eng = Engine.fromProject(spark, project(""), tmpDir("wh"))
+    assert(nodeNamed(eng, "b").dependsOn.isEmpty)
+    val res = eng.run(threads = 1)
+    val b = res.find(_.uniqueId == nodeNamed(eng, "b").uniqueId).get
+    assert(b.status === "error")
+    assert(b.message.contains(
+      "dbt was unable to infer all dependencies for the model \"b\"."), b.message)
+    assert(b.message.contains("-- depends_on: {{ ref('a') }}"), b.message)
+
+    val hinted = Engine.fromProject(spark,
+      project("-- depends_on: {{ ref('a') }}\n"), tmpDir("wh"))
+    assert(nodeNamed(hinted, "b").dependsOn === Seq(nodeNamed(hinted, "a").uniqueId))
+    val ok = hinted.run(threads = 2)
+    assert(ok.forall(_.status == "success"), ok.mkString("; "))
+    assert(hinted.wh.read("b").count() === 1)
+  }
+
+  test("both is_incremental() branches and in-file hook strings are parse-time edges") {
+    val p = graft.parse.ProjectLoader.load(writeProject(Map(
+      "dbt_project.yml" -> "name: branches\n",
+      "models/stg_orders.sql" -> "SELECT 1 AS id",
+      "models/stg_delta.sql" -> "SELECT 2 AS id",
+      "models/audit.sql" -> "SELECT 3 AS id",
+      "models/inc.sql" ->
+        """{{ config(materialized='incremental',
+          |    post_hook="INSERT INTO {{ ref('audit') }} SELECT 4") }}
+          |SELECT id
+          |{% if is_incremental() %}FROM {{ ref('stg_delta') }}{% else %}FROM {{ ref('stg_orders') }}{% endif %}""".stripMargin)))
+    val byName = p.manifest.nodes.values.map(n => n.name -> n).toMap
+    assert(byName("inc").dependsOn.toSet ===
+      Set("stg_delta", "stg_orders", "audit").map(byName(_).uniqueId))
+  }
 }
