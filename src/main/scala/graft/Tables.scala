@@ -86,8 +86,4 @@ object QueryDef {
   def apply(name: String, oracle: String)(
       run: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, run, Some(oracle))
-
-  def noOracle(name: String)(
-      run: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, run, None)
 }

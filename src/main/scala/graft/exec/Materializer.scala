@@ -1,7 +1,6 @@
 package graft.exec
 
 import graft.core._
-import graft.render.Template
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType

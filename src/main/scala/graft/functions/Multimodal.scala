@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -23,18 +23,6 @@ import org.apache.spark.sql.types._
   * features columnar once extracted.
   */
 object Multimodal {
-
-  /** Asset schema: opaque payload + typed metadata (mirrors
-    * image/audio lakehouse layouts).
-    */
-  val assetSchema: StructType = StructType(Seq(
-    StructField("asset_id", LongType, nullable = false),
-    StructField("media_type", StringType, nullable = false),
-    StructField("content", BinaryType, nullable = false),
-    StructField("meta", StructType(Seq(
-      StructField("width", IntegerType),
-      StructField("height", IntegerType),
-      StructField("duration_ms", LongType))))))
 
   /** Build an asset table from documents (payload = utf8 bytes) — a
     * deterministic stand-in for real blobs so the pipeline is testable.

@@ -27,8 +27,10 @@ import java.nio.file.{Files, Path}
   * the project vars overlaid by the CLI `--vars`, so their digest joins
   * the context of every walked .sql file (model, snapshot, singular
   * test) — the analog of the reference's `state_check.vars_hash`.
-  * `env_var()` values the walk reads are not part of any context.
-  * `profiles.yml` only feeds target resolution at engine construction.
+  * Each `env_var()` and macro the walk reads is stored with the file's
+  * entry and re-read before reuse (the reference's `env_vars_changed`
+  * and macro-dependency reparse). `profiles.yml` only feeds target
+  * resolution at engine construction.
   *
   * Kept faithful:
   *  - special override macros (`partial.py:52-59`): a changed macro
@@ -52,8 +54,9 @@ object PartialParse {
     * yml properties).
     * v6: refs/sources/config come from the parse-time walk, not regexes,
     * and .sql contexts carry the vars digest — a v5 state cold-parses
-    * once. */
-  val Format = 6
+    * once.
+    * v7: CachedFile records the walk's env var and macro reads. */
+  val Format = 7
 
   val StateFileName = "partial_parse.bin"
 
@@ -64,8 +67,10 @@ object PartialParse {
     "ref", "source", "config",
     "generate_schema_name", "generate_database_name", "generate_alias_name")
 
+  /** `reads`: `env:<NAME>` / `macro:<name>` → what the parse saw. */
   final case class CachedFile(
-      sha: String, ctx: String, data: java.io.Serializable)
+      sha: String, ctx: String, data: java.io.Serializable,
+      reads: Map[String, String] = Map.empty)
     extends java.io.Serializable
 
   /** rootKey "" = root project; otherwise the package install dir name. */
@@ -185,20 +190,32 @@ object PartialParse {
     def oldPathsIn(rootKey: String): Seq[String] =
       old.get(rootKey).map(_.keys.toSeq).getOrElse(Nil)
 
+    /** The keys the parse running under [[cached]] read. */
+    private var reads: scala.collection.mutable.Set[String] = null
+    def noteRead(key: String): Unit = if (reads != null) reads += key
+
+    /** `reread(key)` answers what a read of `key` sees now. */
     def cached[T <: java.io.Serializable](
-        rootKey: String, relPath: String, content: String, ctx: String)(
-        parse: => T): T = {
+        rootKey: String, relPath: String, content: String, ctx: String,
+        reread: String => String = _ => "")(parse: => T): T = {
       val sha = sha256(content)
       val ctxSha = sha256(ctx)
-      val hit = old.get(rootKey).flatMap(_.get(relPath))
-        .filter(e => e.sha == sha && e.ctx == ctxSha)
-      val data: java.io.Serializable = hit match {
-        case Some(e) => nReused += 1; e.data
-        case None => nParsed += 1; parse
+      val hit = old.get(rootKey).flatMap(_.get(relPath)).filter(e =>
+        e.sha == sha && e.ctx == ctxSha &&
+          e.reads.forall { case (k, v) => reread(k) == v })
+      val entry = hit match {
+        case Some(e) => nReused += 1; e
+        case None =>
+          nParsed += 1
+          reads = scala.collection.mutable.Set.empty
+          try {
+            val data = parse
+            CachedFile(sha, ctxSha, data, reads.map(k => k -> reread(k)).toMap)
+          } finally reads = null
       }
       fresh.getOrElseUpdate(rootKey, scala.collection.mutable.Map.empty)
-        .update(relPath, CachedFile(sha, ctxSha, data))
-      data.asInstanceOf[T]
+        .update(relPath, entry)
+      entry.data.asInstanceOf[T]
     }
 
     def finish(): (State, Stats) = {

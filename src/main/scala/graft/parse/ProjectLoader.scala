@@ -103,7 +103,6 @@ object ProjectLoader {
       nodes: Seq[Node],
       onRunStart: Seq[String],
       onRunEnd: Seq[String],
-      macros: Map[String, Template.MacroDef],
       selectors: Map[String, SelectorDef],
       docs: Map[String, String] = Map.empty,
       sourcePatches: Seq[SourcePatch] = Nil,
@@ -163,10 +162,8 @@ object ProjectLoader {
     * is a hard parse error, not a silent shadow). Root project vars
     * override same-named package vars.
     */
-  def load(projectDir: String): Project = load(projectDir, None, Map.empty, Map.empty)
-
   def load(projectDir: String, opts: PartialParse.Options): Project =
-    load(projectDir, Some(opts), Map.empty, Map.empty)
+    load(projectDir, Some(opts))
 
   /** `cliVars`/`cliVarsTyped` (the CLI `--vars`) overlay the project
     * vars across both maps; the result is [[Project.vars]] and is what
@@ -177,9 +174,9 @@ object ProjectLoader {
     * partial_parse:` > on), loads `<target-path>/partial_parse.bin`,
     * parses with per-file reuse, and saves the next state. Always
     * returns `partialStats`. */
-  def load(projectDir: String, opts: Option[PartialParse.Options],
-      cliVars: Map[String, String],
-      cliVarsTyped: Map[String, Jinja.JV]): Project = {
+  def load(projectDir: String, opts: Option[PartialParse.Options] = None,
+      cliVars: Map[String, String] = Map.empty,
+      cliVarsTyped: Map[String, Jinja.JV] = Map.empty): Project = {
     val root = Paths.get(projectDir)
     val projCfg = projectYml(root)
     val flagEnabled: Option[Boolean] = projCfg.get("flags") match {
@@ -194,9 +191,9 @@ object ProjectLoader {
         .map(v => v.equalsIgnoreCase("true") || v == "1"))
       .orElse(flagEnabled)
       .getOrElse(true)) match {
-      case None => loadWith(projectDir, None, cliVars, cliVarsTyped)
-      case Some((_, false)) =>
-        loadWith(projectDir, None, cliVars, cliVarsTyped).copy(partialStats = Some(PartialParse.Stats(
+      case None => loadWith(projectDir, None, cliVars, cliVarsTyped, Map.empty)
+      case Some((o, false)) =>
+        loadWith(projectDir, None, cliVars, cliVarsTyped, o.env).copy(partialStats = Some(PartialParse.Stats(
           enabled = false, stateLoaded = false, fullReason = None,
           parsed = 0, reused = 0, added = Nil, deleted = Nil, changed = Nil)))
       case Some((o, true)) =>
@@ -204,7 +201,7 @@ object ProjectLoader {
             o.cliTargetPath, o.env, projCfg.get("target-path").map(_.toString)))
           .resolve(PartialParse.StateFileName)
         val session = new PartialParse.Session(PartialParse.readState(statePath))
-        val proj = loadWith(projectDir, Some(session), cliVars, cliVarsTyped)
+        val proj = loadWith(projectDir, Some(session), cliVars, cliVarsTyped, o.env)
         val (next, stats) = session.finish()
         PartialParse.writeState(statePath, next)
         proj.copy(partialStats = Some(stats))
@@ -259,7 +256,8 @@ object ProjectLoader {
   private def loadWith(projectDir: String,
       psession: Option[PartialParse.Session],
       cliVars: Map[String, String],
-      cliVarsTyped: Map[String, Jinja.JV]): Project = {
+      cliVarsTyped: Map[String, Jinja.JV],
+      env: Map[String, String]): Project = {
     val root = Paths.get(projectDir)
     val pkgDirs = Deps.installedPackageDirs(root)
     psession.foreach { s =>
@@ -275,13 +273,34 @@ object ProjectLoader {
       (Map.empty[String, String], Map.empty[String, Jinja.JV])) {
       case ((mv, mt), (v, vt)) => ((mv -- vt.keys) ++ v, (mt -- v.keys) ++ vt)
     }
-    val rootRaw = loadRaw(root, vars, rootKey = "", psession = psession)
+    // macros first: the walk of a .sql file renders the macros it
+    // calls, resolved with the precedence the render uses
+    val rootMacros = loadMacros(root, "", psession)
+    val pkgMacros: Map[String, Map[String, Template.MacroDef]] =
+      pkgDirs.map { case (dirName, dir) =>
+        dirName -> loadMacros(dir, dirName, psession)
+          .map { case (n, m) => n -> m.copy(pkg = dirName) }
+      }.toMap
+    // flat resolution map: package macros first-wins in name order,
+    // root macros shadow them; qualified pkg.name keys always present
+    val pkgFlat = pkgMacros.toSeq.sortBy(_._1).foldLeft(
+      Map.empty[String, Template.MacroDef]) { case (acc, (_, ms)) =>
+      ms.foldLeft(acc) { case (a, (n, m)) => if (a.contains(n)) a else a + (n -> m) }
+    }
+    val qualified = pkgMacros.flatMap { case (pkg, ms) =>
+      ms.map { case (n, m) => s"$pkg.$n" -> m }
+    }
+    val flatMacros = globalMacros ++ pkgFlat ++ qualified ++ rootMacros
+    val macrosByPackage = pkgMacros + ("graft" -> rootMacros)
+    def resolverFor(pkg: String) = macroResolver(flatMacros, macrosByPackage, pkg)
+
+    val rootRaw = loadRaw(root, vars, resolverFor("graft"), env, ConfigTree(), "", psession)
     val pkgRaws = pkgDirs.map { case (dirName, dir) =>
       // root dbt_project.yml `models: <pkg>:` scoping applies over the
       // package's own defaults; the install dir name wins over the
       // package's own project name (reference: install path = pkg name)
-      dirName -> loadRaw(dir, vars, rootScopeFor(root, dirName),
-        rootKey = dirName, psession = psession)
+      dirName -> loadRaw(dir, vars, resolverFor(dirName), env,
+        rootScopeFor(root, dirName), dirName, psession)
     }
 
     val taggedPkgNodes0 = pkgRaws.flatMap { case (pkg, raw) =>
@@ -370,21 +389,6 @@ object ProjectLoader {
         }
     }
 
-    val pkgMacros: Map[String, Map[String, Template.MacroDef]] =
-      pkgRaws.map { case (pkg, raw) =>
-        pkg -> raw.macros.map { case (n, m) => n -> m.copy(pkg = pkg) }
-      }.toMap
-    // flat resolution map: package macros first-wins in name order,
-    // root macros shadow them; qualified pkg.name keys always present
-    val pkgFlat = pkgMacros.toSeq.sortBy(_._1).foldLeft(
-      Map.empty[String, Template.MacroDef]) { case (acc, (_, ms)) =>
-      ms.foldLeft(acc) { case (a, (n, m)) => if (a.contains(n)) a else a + (n -> m) }
-    }
-    val qualified = pkgMacros.flatMap { case (pkg, ms) =>
-      ms.map { case (n, m) => s"$pkg.$n" -> m }
-    }
-    val flatMacros = globalMacros ++ pkgFlat ++ qualified ++ rootRaw.macros
-
     // docs blocks: per-package maps for precedence, flat map for export
     val docsByPackage = pkgRaws.map { case (pkg, raw) => pkg -> raw.docs }.toMap +
       ("graft" -> rootRaw.docs)
@@ -422,7 +426,7 @@ object ProjectLoader {
     Project(rootRaw.name, vars._1, vars._2, manifest,
       onRunStart = rootRaw.onRunStart, onRunEnd = rootRaw.onRunEnd,
       macros = flatMacros,
-      macrosByPackage = pkgMacros + ("graft" -> rootRaw.macros),
+      macrosByPackage = macrosByPackage,
       docs = flatDocs,
       queryComment = rootRaw.queryComment,
       deprecations = rootRaw.deprecations,
@@ -706,13 +710,16 @@ object ProjectLoader {
       case _ => (Map.empty, Map.empty)
     }
 
-  /** One root's parse. `vars` are the merged project + CLI vars the
-    * walk of every `.sql` file sees. */
+  /** One root's parse. The walk of every `.sql` file sees `vars` (the
+    * merged project + CLI vars), the root's macros and `env` (the
+    * partial-parse options' environment) over the process's. */
   private def loadRaw(root: Path,
       vars: (Map[String, String], Map[String, Jinja.JV]),
-      extraModelDefaults: ConfigTree = ConfigTree(),
-      rootKey: String = "",
-      psession: Option[PartialParse.Session] = None): RawProject = {
+      macroResolver: String => Option[Template.MacroDef],
+      env: Map[String, String],
+      extraModelDefaults: ConfigTree,
+      rootKey: String,
+      psession: Option[PartialParse.Session]): RawProject = {
     val yaml = strictYaml()
     parseDeprecations.get().clear()
     parseWarnings.get().clear()
@@ -720,7 +727,19 @@ object ProjectLoader {
     // ---- dbt_project.yml
     val projCfg = projectYml(root)
     val projName = projCfg.getOrElse("name", "graft").toString
-    def walk(raw: String): Jinja.Captured = Jinja.capture(raw, vars._1, vars._2)
+    // env vars and macros the walk reads are cache inputs of the file
+    val macroDigests = scala.collection.mutable.Map[String, String]()
+    def reread(key: String): String = key.split(":", 2) match {
+      case Array("env", k) => env.get(k).orElse(sys.env.get(k)).fold("")("=" + _)
+      case Array(_, n) => macroDigests.getOrElseUpdate(n,
+        macroResolver(n).fold("")(m => PartialParse.sha256(stableStr(m))))
+    }
+    def read(key: String): Unit = psession.foreach(_.noteRead(key))
+    val parseCtx = Template.Context(identity, (s, t) => s"$s.$t", "",
+      vars = vars._1, typedVars = vars._2, envOverrides = env,
+      macroResolver = n => { read(s"macro:$n"); macroResolver(n) },
+      envSink = Some(k => read(s"env:$k")))
+    def walk(raw: String): Jinja.Captured = Jinja.capture(raw, parseCtx)
     // the walk reads vars, so their digest is an out-of-file parse
     // input of every walked .sql file
     val varsCtx = PartialParse.sha256(stableStr(vars))
@@ -798,7 +817,7 @@ object ProjectLoader {
         parse: String => T): T = {
       val content = Files.readString(f)
       psession match {
-        case Some(s) => s.cached(rootKey, relPath(f), content, ctx)(parse(content))
+        case Some(s) => s.cached(rootKey, relPath(f), content, ctx, reread)(parse(content))
         case None => parse(content)
       }
     }
@@ -1216,9 +1235,9 @@ object ProjectLoader {
         // node or the latest version (an unpinned ref resolves there)
         if (version.isEmpty || version == modelVersions(name)._2) {
           for (c <- patchCols; t <- c.tests)
-            buf += buildGenericTest(name, Some(c.name), t)
+            buf += buildGenericTest(name, Some(c.name), t, walk)
           for (t <- patchTests)
-            buf += buildGenericTest(name, None, t)
+            buf += buildGenericTest(name, None, t, walk)
         }
         buf.toList
       }
@@ -1260,9 +1279,9 @@ object ProjectLoader {
           config = configFromKwargs(withDefault),
           originPath = relPath(f))
         for (c <- patchCols; t <- c.tests)
-          buf += buildGenericTest(name, Some(c.name), t)
+          buf += buildGenericTest(name, Some(c.name), t, walk)
         for (t <- patchTests)
-          buf += buildGenericTest(name, None, t)
+          buf += buildGenericTest(name, None, t, walk)
         buf.toList
       }
       nodes ++= fileNodes
@@ -1320,8 +1339,8 @@ object ProjectLoader {
           quoteColumns = patchKw.get("quote_columns").map(_.toBoolean)
             .orElse(seedQuoteColumns))
         val tests = patchCols.flatMap(c =>
-          c.tests.map(t => buildGenericTest(sname, Some(c.name), t))) ++
-          patchTests.map(t => buildGenericTest(sname, None, t))
+          c.tests.map(t => buildGenericTest(sname, Some(c.name), t, walk))) ++
+          patchTests.map(t => buildGenericTest(sname, None, t, walk))
         (Seq[Node](seedNode) ++ tests).toList
       }
     }
@@ -1371,8 +1390,8 @@ object ProjectLoader {
             refs = cap.refs, sources = cap.sources,
             originPath = relPath(f))
           Seq(snap) ++ patchCols.flatMap(c =>
-            c.tests.map(t => buildGenericTest(snapName, Some(c.name), t))) ++
-            patchTests.map(t => buildGenericTest(snapName, None, t))
+            c.tests.map(t => buildGenericTest(snapName, Some(c.name), t, walk))) ++
+            patchTests.map(t => buildGenericTest(snapName, None, t, walk))
         }).flatten.toList
       }
     }
@@ -1434,28 +1453,6 @@ object ProjectLoader {
           jobLabel = !cfg.get("job-label").exists(_.toString == "false")))
       case _ => None
     }
-    // ---- macros/*.sql (A25 subset; invoked via run-operation, A16).
-    // Routed through the A31 cache so the saved state records each
-    // macro file's MacroDefs — the special-override pre-scan above
-    // reads them back via oldData to detect ref/source/config/
-    // generate_*_name redefinitions across invocations.
-    val macroDefsByFile = listFiles(root.resolve("macros"), ".sql")
-      .map(f => relPath(f) -> cachedAs(f, "")(c => Template.extractMacros(c).toList))
-    // same-namespace duplicate macro names are a hard error (reference
-    // DuplicateMacroNameError, exceptions.py:486-509): a last-wins map
-    // would silently call whichever file sorted later
-    locally {
-      val seen = scala.collection.mutable.Map[String, String]()
-      for ((path, ms) <- macroDefsByFile; m <- ms)
-        seen.get(m.name) match {
-          case Some(prev) =>
-            throw graft.core.Errors.duplicateMacroName(m.name,
-              projName, path, prev)
-          case None => seen(m.name) = path
-        }
-    }
-    val macros = macroDefsByFile.flatMap(_._2).map(m => m.name -> m).toMap
-
     // ---- docs blocks from .md files (reference `core/dbt/parser/docs.py`:
     // every resource path is scanned for markdown docs blocks)
     val docs = Seq("models", "macros", "seeds", "snapshots", "docs")
@@ -1491,7 +1488,7 @@ object ProjectLoader {
 
     RawProject(projName, nodes.toSeq,
       onRunStart = hookList("on-run-start"), onRunEnd = hookList("on-run-end"),
-      macros = macros, selectors = selectorDefs, docs = docs,
+      selectors = selectorDefs, docs = docs,
       sourcePatches = sourcePatches.toSeq, queryComment = queryComment,
       deprecations = deprecations.toSeq ++ parseDeprecations.get().distinct,
       warnings = parseWarnings.get().distinct.toSeq,
@@ -1499,6 +1496,54 @@ object ProjectLoader {
       quoting = quoting,
       restrictAccess = projCfg.get("restrict-access").exists(_.toString.toBoolean))
   }
+
+  /** One root's macro files under `macros/` (A25 subset). Cached so
+    * the special-override pre-scan can read the old MacroDefs back. */
+  private def loadMacros(root: Path, rootKey: String,
+      psession: Option[PartialParse.Session]): Map[String, Template.MacroDef] = {
+    val projName = projectYml(root).getOrElse("name", "graft").toString
+    val macroDefsByFile = listFiles(root.resolve("macros"), ".sql").map { f =>
+      val path = root.relativize(f).toString
+      val content = Files.readString(f)
+      def parse = Template.extractMacros(content).toList
+      path -> psession.fold(parse)(_.cached(rootKey, path, content, "")(parse))
+    }
+    // same-namespace duplicate macro names are a hard error (reference
+    // DuplicateMacroNameError, exceptions.py:486-509): a last-wins map
+    // would silently call whichever file sorted later
+    val seen = scala.collection.mutable.Map[String, String]()
+    for ((path, ms) <- macroDefsByFile; m <- ms)
+      seen.get(m.name) match {
+        case Some(prev) =>
+          throw graft.core.Errors.duplicateMacroName(m.name, projName, path, prev)
+        case None => seen(m.name) = path
+      }
+    macroDefsByFile.flatMap(_._2).map(m => m.name -> m).toMap
+  }
+
+  /** Package-precedence macro lookup, shared by the parse-time walk and
+    * the engine's render: `pkg.name` is exact; unqualified resolves the
+    * caller's package → `flat` (root wins over packages). */
+  def macroResolver(flat: Map[String, Template.MacroDef],
+      byPackage: Map[String, Map[String, Template.MacroDef]],
+      callerPackage: String): String => Option[Template.MacroDef] =
+    name =>
+      if (name.contains(".")) {
+        val Array(p, m) = name.split("\\.", 2)
+        byPackage.get(p).flatMap(_.get(m))
+          // the built-in `dbt.*` cross-database namespace (CrossDb).
+          // The reference's dbt.X macros dispatch, so a project-level
+          // spark__X / default__X override wins before the builtin.
+          .orElse(if (p == "dbt")
+            flat.get(s"spark__$m").orElse(flat.get(s"default__$m"))
+              .orElse(graft.render.CrossDb.macros.get(m))
+          else None)
+      } else
+        byPackage.get(callerPackage).flatMap(_.get(name))
+          .orElse(flat.get(name))
+          // unqualified fallback, lowest precedence: the reference's
+          // internal dbt namespace is searched after all user packages
+          .orElse(graft.render.CrossDb.macros.get(name))
 
   private val docsBlockRe =
     """(?s)\{%-?\s*docs\s+(\w+)\s*-?%\}(.*?)\{%-?\s*enddocs\s*-?%\}""".r
@@ -1865,7 +1910,8 @@ object ProjectLoader {
 
   private val builtinTests = Set("unique", "not_null", "accepted_values", "relationships")
 
-  def buildGenericTest(model: String, column: Option[String], t: GenericTestRef): TestNode = {
+  def buildGenericTest(model: String, column: Option[String], t: GenericTestRef,
+      walk: String => Jinja.Captured): TestNode = {
     // name synthesis mirrors reference TestBuilder
     // (core/dbt/parser/generic_test_builders.py:26-66)
     def sanitize(v: String) = v.replaceAll("[^A-Za-z0-9]", "_")
@@ -1912,7 +1958,7 @@ object ProjectLoader {
       }
     TestNode(name = parts.mkString("_"), rawSql = sql,
       config = NodeConfig(materialized = "test").merge(t.config),
-      refs = (model +: Jinja.capture(sql).refs).distinct,
+      refs = (model +: walk(sql).refs).distinct,
       genericTest = Some(t.testName))
   }
 

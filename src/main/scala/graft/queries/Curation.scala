@@ -1222,7 +1222,6 @@ object Curation {
         |JOIN cy ON cy.w = string_split(c12.p, ' ')[2], tot
         |WHERE c12.cxy >= 5
         |ORDER BY lift_e6 DESC, pair LIMIT 20""".stripMargin) { (s, dir) =>
-      val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
       val bi = Tables.load(s, dir, "documents")
         .select(explode(graft.functions.TextExprs.ngrams(
           split(col("text"), " "), 2)).as("p"))

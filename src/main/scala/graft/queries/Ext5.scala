@@ -4,7 +4,6 @@ import graft.{QueryDef, Tables}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
-import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Wave-8 operators (round-6 second session):
   *

@@ -4,7 +4,6 @@ import graft.QueryDef
 import graft.core._
 import graft.exec.Materializer
 import graft.run.Engine
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Framework-operator correctness queries: each runs a REAL engine
@@ -637,7 +636,6 @@ object Framework {
       val fullMod = eng3.lsWithState(eng1.manifest, Seq("state:modified")).toSet
       require(fullMod == Set("model.graft.m15_agg"),
         s"v3 state:modified selected $fullMod (want only m15_agg)")
-      import s.implicits._
       eng2.wh.read("m15_agg")
         .select(lit("agg").as("part"), col("batch"), col("n"))
         .unionByName(eng2.wh.read("m15_base")

@@ -297,9 +297,6 @@ object Similarity {
     (cb1, codes)
   }
 
-  private def pqSubCodes(embD: DataFrame, sIdx: Int, lo: Int, hi: Int): DataFrame =
-    pqSubspace(embD, sIdx, lo, hi)._2
-
   /** Built-once PQ index (both subspaces' codebooks + codes), cached
     * per (session, dataset) like the IVF index: PQ training runs at
     * corpus-ingest time; q71 (encode), q73 (ADC search) and q82 (index
@@ -340,7 +337,7 @@ object Similarity {
     }
   }
 
-  /** DuckDB twin of [[pqSubCodes]] for subspace `s` over dims
+  /** DuckDB twin of [[pqSubspace]]'s codes for subspace `s` over dims
     * [lo..hi]; ends with CTE `code_$s`(vec_id, code$s, dist$s).
     */
   private def duckPqSub(s: Int, lo: Int, hi: Int): String =

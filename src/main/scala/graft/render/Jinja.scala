@@ -254,7 +254,6 @@ object Jinja {
   }
 
   def jint(n: Long): JV = JN(BigDecimal(n), isInt = true)
-  def jnum(n: BigDecimal): JV = JN(n, isInt = n.isWhole && !n.toString.contains('.'))
 
   def show(v: JV): String = v match {
     case JS(s) => s
@@ -703,7 +702,7 @@ object Jinja {
     nodes.foreach {
       case Text(s) => sb ++= s
       case Output(expr, raw) =>
-        evalOrUndef(expr, ctx, scope, depth) match {
+        eval(expr, ctx, scope, depth) match {
           case JUndef(_) => sb ++= raw // unresolved name → verbatim
           case v => sb ++= show(v)
         }
@@ -831,39 +830,49 @@ object Jinja {
 
   /** Parse-time capture (dbt renders each node at parse time to find
     * its refs, sources and config): one walk over the template's tree,
-    * evaluating its expressions in a context where `ref`, `source` and
-    * `config` record their evaluated arguments and `var` sees `vars`.
+    * evaluating its expressions in `base` with `ref`, `source` and
+    * `config` replaced by recorders. `base` supplies what the render
+    * will also see: vars, the project's macros, the environment.
     *  - Every `{% if %}` branch is walked; no condition is evaluated.
     *  - A `{% for %}` iterates when its iterable evaluates, and
-    *    otherwise walks its body once with the loop names unbound.
-    *  - An expression that throws (`run_query` has no runner here, and
-    *    no macro resolves) keeps what its arguments recorded before the
-    *    throw, and the walk goes on. Macro bodies are not entered.
+    *    otherwise walks its body once with each loop name bound to a
+    *    placeholder: a ref or source built from it is not recorded
+    *    (its real name is only known at run time).
+    *  - A called macro renders in the same recording context, so a
+    *    `ref()` in a project or package macro is an edge of the node
+    *    that calls it (macro bodies take their normal branches).
+    *  - An expression that throws (`run_query` has no runner here, an
+    *    unknown macro) keeps what its arguments recorded before the
+    *    throw, and the walk goes on.
     *  - The `pre_hook`/`post_hook` strings of the template's own
     *    `config()` calls are walked for refs and sources too.
     * A template that does not parse captures nothing; its render
     * reports the syntax error.
     */
-  def capture(src: String, vars: Map[String, String] = Map.empty,
-      typedVars: Map[String, JV] = Map.empty): Captured =
-    captureTree(try parse(lex(src)) catch { case NonFatal(_) => Nil },
-      vars, typedVars)
+  def capture(src: String,
+      base: Template.Context = Template.Context(_ => "", (_, _) => "", "")): Captured =
+    captureTree(try parse(lex(src)) catch { case NonFatal(_) => Nil }, base)
 
   /** [[capture]] of one expression — a YAML value such as
     * `model: ref('m')` or `input: source('s', 't')`. */
   def captureExpr(expr: String): Captured =
-    captureTree(Seq(Output(expr, expr)), Map.empty, Map.empty)
+    captureTree(Seq(Output(expr, expr)), Template.Context(_ => "", (_, _) => "", ""))
 
-  private def captureTree(nodes: Seq[Node], vars: Map[String, String],
-      typedVars: Map[String, JV]): Captured = {
+  /** What an unevaluable `{% for %}` binds its loop names to; a ref or
+    * source whose name contains it depends on the loop. */
+  private val Unbound = "\u0000"
+
+  private def captureTree(nodes: Seq[Node], base: Template.Context): Captured = {
     val refs = scala.collection.mutable.LinkedHashSet[String]()
     val sources = scala.collection.mutable.LinkedHashSet[(String, String)]()
     val configs = scala.collection.mutable.ArrayBuffer[Map[String, JV]]()
     // an unbound name renders "": nothing to record
-    val ctx = Template.Context(
-      resolveRef = r => { if (r.nonEmpty) refs += r; r },
-      resolveSource = (s, t) => { sources += ((s, t)); s"$s.$t" },
-      thisRelation = "", vars = vars, typedVars = typedVars,
+    val ctx = base.copy(
+      resolveRef = r => { if (r.nonEmpty && !r.contains(Unbound)) refs += r; r },
+      resolveSource = (s, t) => {
+        if (!(s + t).contains(Unbound)) sources += ((s, t)); s"$s.$t"
+      },
+      thisRelation = "",
       configSink = Some(configs += _))
     walk(nodes, ctx, new Scope(None), new StringBuilder)
     def hookSql(v: JV): Seq[String] = v match {
@@ -887,7 +896,11 @@ object Jinja {
         (branches.map(_._2) :+ els).foreach(walk(_, ctx, scope, sb))
       case For(v, iterSrc, body) =>
         try forEachItem(v, eval(iterSrc, ctx, scope, 0), scope)(walk(body, ctx, _, sb))
-        catch { case NonFatal(_) => walk(body, ctx, new Scope(Some(scope)), sb) }
+        catch { case NonFatal(_) =>
+          val inner = new Scope(Some(scope))
+          v.split(",").foreach(n => inner.vars(n.trim) = JS(Unbound))
+          walk(body, ctx, inner, sb)
+        }
       case SetBlock(name, body) =>
         val inner = new StringBuilder
         walk(body, ctx, scope, inner)
@@ -898,27 +911,9 @@ object Jinja {
         try emit(Seq(node), ctx, scope, 0, sb) catch { case NonFatal(_) => () }
     }
 
-  /** Evaluate; a bare unresolvable name yields JUndef instead of
-    * throwing (the caller decides verbatim-vs-empty).
-    */
-  private def evalOrUndef(expr: String, ctx: Template.Context, scope: Scope,
-      depth: Int): JV =
-    eval(expr, ctx, scope, depth)
-
   private[render] def eval(expr: String, ctx: Template.Context, scope: Scope,
       depth: Int): JV =
     new ExprParser(expr, ctx, scope, depth).parseExpression()
-
-  private def evalString(expr: String, ctx: Template.Context): String =
-    show(eval(expr, ctx, new Scope(None), 0))
-
-  /** Public single-expression evaluator (used by tests/tools). */
-  def evalExpr(expr: String, ctx: Template.Context,
-      locals: Map[String, JV] = Map.empty): JV = {
-    val sc = new Scope(None)
-    locals.foreach { case (k, v) => sc.vars(k) = v }
-    eval(expr, ctx, sc, 0)
-  }
 
   // ------------------------------------------------- expression parsing
 
@@ -931,7 +926,6 @@ object Jinja {
 
     private def ws(): Unit = while (i < src.length && src(i).isWhitespace) i += 1
     private def peek: Char = if (i < src.length) src(i) else '\u0000'
-    private def eof: Boolean = { ws(); i >= src.length }
 
     private def fail(msg: String): Nothing =
       throw new IllegalArgumentException(s"jinja expr: $msg in `$src` at $i")
@@ -949,7 +943,6 @@ object Jinja {
       while (i < src.length && (src(i).isLetterOrDigit || src(i) == '_')) i += 1
       src.substring(start, i)
     }
-    private def peekWord: String = { val save = i; val w = word(); i = save; w }
     private def tryWord(w: String): Boolean = {
       ws(); val save = i
       if (word() == w) true else { i = save; false }
@@ -1476,9 +1469,10 @@ object Jinja {
       case "false" | "False" => JB(false)
       case "none" | "None" | "null" => JNull
       case "this" => ctx.relationFor(ctx.thisRelation)
-      // reference `execute` context flag: render is the execute phase;
-      // the parse-time walk (capture) evaluates no `{% if %}` condition,
-      // so it walks both sides of `{% if execute %}` instead
+      // reference `execute` context flag: render is the execute phase.
+      // The parse-time walk (capture) evaluates no `{% if %}` condition
+      // of the node's own template, so it walks both sides of
+      // `{% if execute %}`; a macro it renders sees true
       case "execute" => JB(true)
       // `thread_id` contextproperty (reference base.py:614-617)
       case "thread_id" => JS(Thread.currentThread().getName)
@@ -1594,11 +1588,13 @@ object Jinja {
             if (Secrets.get(k).isDefined) JS(Secrets.placeholder(k))
             else pos.lift(1).getOrElse(throw new IllegalArgumentException(
               s"Env var required but not provided: '$k'"))
-          } else
+          } else {
+            ctx.envSink.foreach(_(k))
             ctx.envOverrides.get(k).orElse(sys.env.get(k)).map(JS(_))
               .orElse(pos.lift(1))
               .getOrElse(throw new IllegalArgumentException(
                 s"Env var required but not provided: '$k'"))
+          }
         case "is_incremental" => JB(ctx.isIncremental)
         // reference providers.py:944-945: render a STRING through the
         // current context — the "jinja in a var/config value" idiom

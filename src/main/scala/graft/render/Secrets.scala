@@ -86,6 +86,6 @@ object Secrets {
     */
   def renderConfigValue(raw: String): String =
     if (!raw.contains("{{") && !raw.contains("{%")) raw
-    else substitute(Template.render(raw,
+    else substitute(Jinja.render(raw,
       Template.Context(_ => "", (_, _) => "", "", secretContext = true)))
 }

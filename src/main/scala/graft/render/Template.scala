@@ -3,12 +3,12 @@ package graft.render
 import scala.util.matching.Regex
 
 /** Template front-end: macro extraction (`{% macro %}`, `{% test %}`,
-  * `{% materialization %}` blocks), run-operation arg binding, and
-  * rendering, which delegates to the block-structured [[Jinja]] engine
-  * (nested if/for, filters, expression set, macro calls with lexical
-  * scoping — see Jinja's scaladoc for the declared subset). A node's
-  * refs, sources and config are found at parse time by
-  * [[Jinja.capture]], a walk over the same parse tree the render uses.
+  * `{% materialization %}` blocks), run-operation arg binding, and the
+  * render [[Context]]. Rendering is [[Jinja.render]] (nested if/for,
+  * filters, expression set, macro calls with lexical scoping — see
+  * Jinja's scaladoc for the declared subset); a node's refs, sources
+  * and config are found at parse time by [[Jinja.capture]], a walk
+  * over the same parse tree the render uses.
   */
 object Template {
 
@@ -283,12 +283,9 @@ object Template {
       /** `config()` call sink: receives each call's evaluated kwargs.
         * Only the parse-time walk ([[Jinja.capture]]) installs one; a
         * render leaves it None and `config()` renders as "". */
-      configSink: Option[Map[String, Jinja.JV] => Unit] = None)
-
-  /** Render a model body to executable Spark SQL — the full block
-    * engine ([[Jinja]]): nested if/for, general expressions, filters,
-    * expression-valued set, macro calls. `{{ config(...) }}` renders as
-    * "" (the parse-time walk read it).
-    */
-  def render(sql: String, ctx: Context): String = Jinja.render(sql, ctx)
+      configSink: Option[Map[String, Jinja.JV] => Unit] = None,
+      /** `env_var()` read sink: receives each name read. The parse-time
+        * walk installs one (partial parsing re-walks a file when a
+        * value it read changes); a render leaves it None. */
+      envSink: Option[String => Unit] = None)
 }

@@ -478,7 +478,7 @@ object Artifacts {
     * plus the warehouse root the artifact's run built into. Fails
     * loudly on an artifact written before the defer extension. */
   def readDeferArtifact(manifestPath: String): (Map[String, String], String) = {
-    import graft.render.Jinja.{JM, JS, JV}
+    import graft.render.Jinja.{JM, JS}
     val txt = Files.readString(Paths.get(manifestPath))
     val root = graft.render.Jinja.fromJsonValue(txt) match {
       case m: JM => m.m

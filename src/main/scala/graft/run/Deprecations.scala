@@ -26,8 +26,6 @@ object Deprecations {
     active.keySet.asScala.toSet
   }
 
-  def messageFor(name: String): Option[String] = Option(active.get(name))
-
   /** Fire a deprecation: structured warn event on first occurrence
     * (buffered-once semantics, reference `deprecations.py:warn`), hard
     * error when `warnError` is set.

@@ -4,7 +4,7 @@ import graft.core._
 import graft.exec.{Materializer, Warehouse}
 import graft.graph.{Dag, GraphQueue, Selector}
 import graft.parse.ProjectLoader
-import graft.render.Template
+import graft.render.{Jinja, Template}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.util.concurrent.{ConcurrentLinkedQueue, Executors, TimeUnit}
 import scala.jdk.CollectionConverters._
@@ -161,7 +161,7 @@ final class Engine(
         "node.package_name" -> node.packageName,
         "node.resource_type" -> node.resourceType,
         "node.materialized" -> node.config.materialized))
-      val rendered = Template.render(qc.comment, ctx).trim
+      val rendered = Jinja.render(qc.comment, ctx).trim
       if (rendered.isEmpty) None
       else Some((rendered, if (qc.append) "append" else "prepend"))
     }
@@ -540,27 +540,10 @@ final class Engine(
     }))
   }
 
-  /** Package-precedence macro lookup: `pkg.name` is exact; unqualified
-    * resolves caller's package → flat map (root wins over packages).
-    */
+  /** Package-precedence macro lookup (the parse-time walk resolves
+    * macros the same way). */
   def macroResolverFor(callerPackage: String): String => Option[Template.MacroDef] =
-    name =>
-      if (name.contains(".")) {
-        val Array(p, m) = name.split("\\.", 2)
-        macrosByPackage.get(p).flatMap(_.get(m))
-          // the built-in `dbt.*` cross-database namespace (CrossDb).
-          // The reference's dbt.X macros dispatch, so a project-level
-          // spark__X / default__X override wins before the builtin.
-          .orElse(if (p == "dbt")
-            macros.get(s"spark__$m").orElse(macros.get(s"default__$m"))
-              .orElse(graft.render.CrossDb.macros.get(m))
-          else None)
-      } else
-        macrosByPackage.get(callerPackage).flatMap(_.get(name))
-          .orElse(macros.get(name))
-          // unqualified fallback, lowest precedence: the reference's
-          // internal dbt namespace is searched after all user packages
-          .orElse(graft.render.CrossDb.macros.get(name))
+    ProjectLoader.macroResolver(macros, macrosByPackage, callerPackage)
 
   // ------------------------------------------------- A27 result registry
 
@@ -653,7 +636,7 @@ final class Engine(
         def overridden(macroName: String, custom: Option[String]): Option[String] =
           macros.get(macroName).map { _ =>
             val arg = custom.map(c => s"'$c'").getOrElse("none")
-            Template.render(s"{{ $macroName($arg, '${other.name}') }}",
+            Jinja.render(s"{{ $macroName($arg, '${other.name}') }}",
               renderContext()).trim
           }
         val base = overridden("generate_alias_name", other.config.alias)
@@ -789,7 +772,7 @@ final class Engine(
       }
 
     def renderBody(sql: String, thisRel: String, forNode: Node = node): String =
-      Template.render(sql,
+      Jinja.render(sql,
         renderContext(resolveRef(forNode), resolveSource, thisRel, isIncremental,
           callerPackage = node.packageName, node = Some(forNode)))
 
@@ -1355,7 +1338,7 @@ final class Engine(
     var nStatements = 0
     Template.segmentMacroBody(m.body).foreach {
       case Template.CallStatement(slot, fetch, sql) =>
-        val df = spark.sql(Template.render(preamble + sql, renderContext(results = opResults,
+        val df = spark.sql(Jinja.render(preamble + sql, renderContext(results = opResults,
           resultsNodeId = Some(opId))))
         nStatements += 1
         val fields = Map("status" -> "SUCCESS") ++ (if (fetch) {
@@ -1367,7 +1350,7 @@ final class Engine(
         storeResult(opId, slot, fields)
         out += df
       case Template.SqlText(sql) =>
-        val rendered = Template.render(preamble + sql, renderContext(results = opResults,
+        val rendered = Jinja.render(preamble + sql, renderContext(results = opResults,
           resultsNodeId = Some(opId)))
         val stmts = rendered.split(";").map(_.trim).filter(_.nonEmpty)
         nStatements += stmts.length
@@ -1408,14 +1391,14 @@ final class Engine(
     }
     Template.segmentMacroBody(mac.body).foreach {
       case Template.CallStatement(slot, _, sqlTxt) =>
-        val rendered = Template.render(sqlTxt, ctx).trim
+        val rendered = Jinja.render(sqlTxt, ctx).trim
         if (rendered.nonEmpty) {
           val rows = wh.executeSql(rendered)
           storeResult(m.uniqueId, slot, Map("status" -> "SUCCESS",
             "rows_affected" -> rows.toString))
         }
       case Template.SqlText(txt) =>
-        Template.render(txt, ctx) // side effects only; output discarded
+        Jinja.render(txt, ctx) // side effects only; output discarded
     }
   }
 
@@ -1443,7 +1426,7 @@ final class Engine(
         node = forNode,
         callerPackage = forNode.map(_.packageName).getOrElse("graft"),
         resultsNodeId = forNode.map(_.uniqueId))
-      spark.sql(Template.render(h,
+      spark.sql(Jinja.render(h,
         if (extra.isEmpty) baseCtx
         else baseCtx.copy(typedValues = baseCtx.typedValues ++ extra)))
       EventLog.info("log_hook_end_line", "code" -> "Q033",
@@ -1522,7 +1505,7 @@ final class Engine(
             orig.map(_.pkg).getOrElse(model.packageName)))
         case None => baseResolver(name)
       }
-    val sql = Template.render(model.rawSql, baseCtx
+    val sql = Jinja.render(model.rawSql, baseCtx
       // fixture-scoped overrides shadow project vars / process env /
       // macro resolution
       .copy(vars = vars ++ u.overrideVars, envOverrides = u.overrideEnvVars,
@@ -1554,7 +1537,7 @@ final class Engine(
       spark.read.option("header", "true").option("inferSchema", "true")
         .csv(spark.createDataset(csv.linesIterator.filter(_.nonEmpty).toSeq))
     case SqlRows(sql) =>
-      spark.sql(Template.render(sql, renderContext()))
+      spark.sql(Jinja.render(sql, renderContext()))
   }
 
   private def rowsToDf(rows: Seq[Map[String, Any]]): DataFrame = {
@@ -1625,7 +1608,7 @@ final class Engine(
 
   /** `dbt show --inline` (reference `core/dbt/task/show.py:22-62`). */
   def show(inlineSql: String, limit: Int = 5): DataFrame = {
-    val rendered = Template.render(inlineSql, renderContext())
+    val rendered = Jinja.render(inlineSql, renderContext())
     spark.sql(rendered).limit(limit)
   }
 
@@ -1634,7 +1617,7 @@ final class Engine(
     * inline node path).
     */
   def compileInline(inlineSql: String): String =
-    Template.render(inlineSql, renderContext())
+    Jinja.render(inlineSql, renderContext())
 
   /** `dbt show --select <model>`: preview a model's compiled SQL with
     * an injected limit — upstream relations must already exist, as in

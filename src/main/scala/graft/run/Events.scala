@@ -316,8 +316,6 @@ object Events {
     e("Z051", "ResourceReport", "debug", "resource_report",
       "JVM memory/cpu stats at command end"))
 
-  lazy val byCode: Map[String, Ref] = table.map(r => r.code -> r).toMap
-
   def emittedCodes: Set[String] =
     table.collect { case r if r.status == Emitted => r.code }.toSet
 

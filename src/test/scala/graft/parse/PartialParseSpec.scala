@@ -70,6 +70,38 @@ class PartialParseSpec extends AnyFunSuite {
     assert(stats(changed).reused === 3)
   }
 
+  test("an env var or macro the walk read re-walks its file when it changes") {
+    val dir = mkProject()
+    Files.writeString(dir.resolve("models/m_1.sql"),
+      """{{ config(materialized=env_var('MAT', 'table')) }}
+        |SELECT * FROM {{ ref(env_var('SRC')) }}""".stripMargin)
+    Files.writeString(dir.resolve("models/m_2.sql"), "SELECT * FROM {{ up() }}")
+    Files.writeString(dir.resolve("macros/up.sql"),
+      "{% macro up() %}{{ ref('m_3') }}{% endmacro %}")
+    def loadEnv(env: Map[String, String]): ProjectLoader.Project =
+      ProjectLoader.load(dir.toString, PartialParse.Options(env = env))
+    def model(p: ProjectLoader.Project, name: String): graft.core.ModelNode =
+      p.manifest.nodes.values.collectFirst {
+        case m: graft.core.ModelNode if m.name == name => m
+      }.get
+    val env = Map("SRC" -> "m_0")
+    assert(model(loadEnv(env), "m_1").refs === Seq("m_0"))
+    assert(stats(loadEnv(env)).parsed === 0, "same env: everything reused")
+
+    val changed = loadEnv(Map("SRC" -> "m_4", "MAT" -> "view"))
+    assert(model(changed, "m_1").refs === Seq("m_4"))
+    assert(model(changed, "m_1").config.materialized === "view")
+    assert(stats(changed).parsed === 1, "only the file that read the env vars")
+
+    assert(model(changed, "m_2").refs === Seq("m_3"))
+    Files.writeString(dir.resolve("macros/up.sql"),
+      "{% macro up() %}{{ ref('m_5') }}{% endmacro %}")
+    val edited = loadEnv(Map("SRC" -> "m_4", "MAT" -> "view"))
+    assert(model(edited, "m_2").refs === Seq("m_5"), "the caller re-walks")
+    // the macro file and the one model that called it
+    assert(stats(edited).parsed === 2)
+  }
+
   test("cold parse: full, state saved; warm parse: everything reused, manifest identical") {
     val dir = mkProject()
     val cold = load(dir)

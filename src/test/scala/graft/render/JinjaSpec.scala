@@ -57,25 +57,25 @@ class JinjaSpec extends AnyFunSuite {
   test("{% raw %} emits literally: tags inside do not render") {
     // reference Jinja raw blocks (dbt docs use them to emit literal
     // curly syntax into SQL comments / external templates)
-    assert(Template.render(
+    assert(Jinja.render(
       "a {% raw %}{{ not_rendered }} {% if x %}kept{% endif %}{% endraw %} b", ctx)
       === "a {{ not_rendered }} {% if x %}kept{% endif %} b")
     // whitespace control on both fences
-    assert(Template.render("a {%- raw -%}  lit  {%- endraw -%} b", ctx) === "alitb")
+    assert(Jinja.render("a {%- raw -%}  lit  {%- endraw -%} b", ctx) === "alitb")
     // still-rendered context around the raw block
-    assert(Template.render(
+    assert(Jinja.render(
       "{% set v = 7 %}{{ v }}/{% raw %}{{ v }}{% endraw %}/{{ v }}", ctx)
       === "7/{{ v }}/7")
     // unterminated raw is a loud error, not silent swallowing
     assertThrows[IllegalArgumentException](
-      Template.render("x {% raw %} no end", ctx))
+      Jinja.render("x {% raw %} no end", ctx))
   }
 
   test("namespace(): attribute set inside a loop is visible after it") {
     // Jinja2 namespace semantics (jinja2.utils.Namespace): plain set
     // rebinds the loop's inner scope, namespace attributes mutate the
     // shared object — the documented cross-iteration state carrier
-    val out = Template.render(
+    val out = Jinja.render(
       """{% set ns = namespace(found=false, total=0) %}
         |{% for x in [1, 2, 3] %}
         |{% if x == 2 %}{% set ns.found = true %}{% endif %}
@@ -86,11 +86,11 @@ class JinjaSpec extends AnyFunSuite {
   }
 
   test("namespace(): seeded kwargs read back; plain set stays scoped") {
-    assert(Template.render(
+    assert(Jinja.render(
       "{% set ns = namespace(a='x') %}{{ ns.a }}", ctx) === "x")
     // CONTRAST: a plain set inside the loop is NOT visible after it —
     // exactly the gap namespace() exists to fill
-    val plain = Template.render(
+    val plain = Jinja.render(
       """{% set found = false %}
         |{% for x in [1, 2] %}{% set found = true %}{% endfor %}
         |{{ found }}""".stripMargin, ctx)
@@ -98,9 +98,9 @@ class JinjaSpec extends AnyFunSuite {
   }
 
   test("namespace(): assignment on a non-namespace is a loud error") {
-    assertThrows[IllegalArgumentException](Template.render(
+    assertThrows[IllegalArgumentException](Jinja.render(
       "{% set m = {'a': 1} %}{% set m.a = 2 %}", ctx))
-    assertThrows[IllegalArgumentException](Template.render(
+    assertThrows[IllegalArgumentException](Jinja.render(
       "{% set nope.a = 2 %}", ctx))
   }
 
@@ -109,11 +109,11 @@ class JinjaSpec extends AnyFunSuite {
     // piped value arrives as the macro's first positional arg
     val c = ctxWith(macros(
       """{% macro wrapped(v, q="'") %}{{ q }}{{ v }}{{ q }}{% endmacro %}"""))
-    assert(Template.render("""{{ 'abc' | wrapped }}""", c) === "'abc'")
-    assert(Template.render("""{{ 'abc' | wrapped('"') }}""", c) === "\"abc\"")
+    assert(Jinja.render("""{{ 'abc' | wrapped }}""", c) === "'abc'")
+    assert(Jinja.render("""{{ 'abc' | wrapped('"') }}""", c) === "\"abc\"")
     // unknown names still fail loudly
     assertThrows[IllegalArgumentException](
-      Template.render("{{ 'abc' | no_such_filter }}", ctx))
+      Jinja.render("{{ 'abc' | no_such_filter }}", ctx))
   }
 
   test("macro varargs/kwargs introspection (jinja2 catch_varargs/kwargs)") {
@@ -125,29 +125,29 @@ class JinjaSpec extends AnyFunSuite {
     // silently vanish)
     val c = ctxWith(macros(
       """{% macro fmt(first) %}{{ first }}|{{ varargs | join(',') }}|{{ kwargs['x'] }}{% endmacro %}"""))
-    assert(Template.render("{{ fmt('a', 'b', 'c', x='z') }}", c) === "a|b,c|z")
+    assert(Jinja.render("{{ fmt('a', 'b', 'c', x='z') }}", c) === "a|b,c|z")
     val c2 = ctxWith(macros("""{% macro ident(v) %}{{ v }}{% endmacro %}"""))
     val ePos = intercept[IllegalArgumentException] {
-      Template.render("{{ ident(1, 2, 3) }}", c2)
+      Jinja.render("{{ ident(1, 2, 3) }}", c2)
     }
     assert(ePos.getMessage.contains("at most 1 positional"))
     val eKw = intercept[IllegalArgumentException] {
-      Template.render("{{ ident(1, junk='y') }}", c2)
+      Jinja.render("{{ ident(1, junk='y') }}", c2)
     }
     assert(eKw.getMessage.contains("unexpected keyword argument"))
     assert(eKw.getMessage.contains("junk"))
     // a declared kwarg is of course still fine
-    assert(Template.render("{{ ident(v=7) }}", c2) === "7")
+    assert(Jinja.render("{{ ident(v=7) }}", c2) === "7")
     // empty when nothing extra is passed
     val c3 = ctxWith(macros(
       """{% macro probe(a) %}{{ varargs | length }}:{{ kwargs | length }}{% endmacro %}"""))
-    assert(Template.render("{{ probe(1) }}", c3) === "0:0")
+    assert(Jinja.render("{{ probe(1) }}", c3) === "0:0")
     // catching one of the two names does not excuse extras of the other
     val c4 = ctxWith(macros(
       """{% macro vonly(a) %}{{ varargs | length }}{% endmacro %}"""))
-    assert(Template.render("{{ vonly(1, 2, 3) }}", c4) === "2")
+    assert(Jinja.render("{{ vonly(1, 2, 3) }}", c4) === "2")
     val eK4 = intercept[IllegalArgumentException] {
-      Template.render("{{ vonly(1, oops=1) }}", c4)
+      Jinja.render("{{ vonly(1, oops=1) }}", c4)
     }
     assert(eK4.getMessage.contains("unexpected keyword argument"))
   }
@@ -161,33 +161,33 @@ class JinjaSpec extends AnyFunSuite {
         |{% macro multiple_of(v, k) %}{{ return(v % k == 0) }}{% endmacro %}
         |{% macro spelled(v) %}{% if v > 0 %}true{% else %}false{% endif %}{% endmacro %}"""
         .stripMargin))
-    assert(Template.render(
+    assert(Jinja.render(
       "{% if 'amount' is allowed %}y{% else %}n{% endif %}", c) === "y")
-    assert(Template.render(
+    assert(Jinja.render(
       "{% if 'secret' is allowed %}y{% else %}n{% endif %}", c) === "n")
-    assert(Template.render(
+    assert(Jinja.render(
       "{% if 'secret' is allowed(['secret']) %}y{% else %}n{% endif %}", c) === "y")
-    assert(Template.render(
+    assert(Jinja.render(
       "{% if 4 is multiple_of(2) %}y{% else %}n{% endif %}", c) === "y")
-    assert(Template.render(
+    assert(Jinja.render(
       "{% if 3 is not multiple_of(2) %}odd{% else %}even{% endif %}", c) === "odd")
     // a macro body that RENDERS the text true/false (no return()) still
     // reads as the boolean it spells — truthy(JS("false")) would
     // otherwise read spelled-out false as true
-    assert(Template.render(
+    assert(Jinja.render(
       "{% if 5 is spelled %}pos{% else %}nonpos{% endif %}", c) === "pos")
-    assert(Template.render(
+    assert(Jinja.render(
       "{% if 0 is spelled %}pos{% else %}nonpos{% endif %}", c) === "nonpos")
     // builtin tests keep precedence; unknown names still fail loudly
-    assert(Template.render(
+    assert(Jinja.render(
       "{% if 3 is odd %}y{% else %}n{% endif %}", c) === "y")
     assertThrows[IllegalArgumentException](
-      Template.render("{% if 1 is no_such_test %}y{% endif %}", ctx))
+      Jinja.render("{% if 1 is no_such_test %}y{% endif %}", ctx))
   }
 
   test("reference models__local_macro: macro call in model body") {
     val c = ctxWith(macros(doSomething2))
-    val out = Template.render("""{{
+    val out = Jinja.render("""{{
                                 |    do_something2("arg1", "arg2")
                                 |}}""".stripMargin, c)
     assert(out ===
@@ -199,13 +199,13 @@ class JinjaSpec extends AnyFunSuite {
   test("reference models__local_macro: package-qualified call") {
     val c = ctxWith(Map.empty,
       pkgs = Map("test" -> macros(doSomething2)))
-    val out = Template.render("""{{ test.do_something2("arg3", "arg4") }}""", c)
+    val out = Jinja.render("""{{ test.do_something2("arg3", "arg4") }}""", c)
     assert(out.contains("'arg3' as foo2") && out.contains("'arg4' as bar2"))
   }
 
   test("reference models__ref_macro: macro body resolves ref()") {
     val c = ctxWith(macros(withRef))
-    assert(Template.render("select * from {{ with_ref() }}", c)
+    assert(Jinja.render("select * from {{ with_ref() }}", c)
       === "select * from rel_table_model")
   }
 
@@ -215,7 +215,7 @@ class JinjaSpec extends AnyFunSuite {
     val groupBy =
       """{% macro group_by(n) %}group by {% for i in range(1, n + 1) %}{{ i }}{% if not loop.last %},{% endif %}{% endfor %}{% endmacro %}"""
     val c = ctxWith(macros(groupBy))
-    assert(Template.render("SELECT a, b, count(*) FROM t {{ group_by(2) }}", c)
+    assert(Jinja.render("SELECT a, b, count(*) FROM t {{ group_by(2) }}", c)
       === "SELECT a, b, count(*) FROM t group by 1,2")
   }
 
@@ -224,16 +224,16 @@ class JinjaSpec extends AnyFunSuite {
       """{% macro safe_divide(numerator, denominator) %}( {{ numerator }} ) / nullif( ( {{ denominator }} ), 0){% endmacro %}
         |{% macro pct(a, b) %}100.0 * {{ safe_divide(a, b) }}{% endmacro %}""".stripMargin
     val c = ctxWith(macros(defs))
-    assert(Template.render("SELECT {{ pct('x', 'y') }} AS p FROM t", c)
+    assert(Jinja.render("SELECT {{ pct('x', 'y') }} AS p FROM t", c)
       === "SELECT 100.0 * ( x ) / nullif( ( y ), 0) AS p FROM t")
   }
 
   test("macro default args and kwargs") {
     val m = """{% macro lim(n=10) %}LIMIT {{ n }}{% endmacro %}"""
     val c = ctxWith(macros(m))
-    assert(Template.render("SELECT * FROM t {{ lim() }}", c) === "SELECT * FROM t LIMIT 10")
-    assert(Template.render("SELECT * FROM t {{ lim(5) }}", c) === "SELECT * FROM t LIMIT 5")
-    assert(Template.render("SELECT * FROM t {{ lim(n=7) }}", c) === "SELECT * FROM t LIMIT 7")
+    assert(Jinja.render("SELECT * FROM t {{ lim() }}", c) === "SELECT * FROM t LIMIT 10")
+    assert(Jinja.render("SELECT * FROM t {{ lim(5) }}", c) === "SELECT * FROM t LIMIT 5")
+    assert(Jinja.render("SELECT * FROM t {{ lim(n=7) }}", c) === "SELECT * FROM t LIMIT 7")
   }
 
   test("macro defaults with commas inside list/call literals") {
@@ -241,70 +241,70 @@ class JinjaSpec extends AnyFunSuite {
       """{% macro cols(xs=['a', 'b', 'c'], sep=', ') %}{{ xs | join(sep) }}{% endmacro %}
         |{% macro wrap(v=cols(['x', 'y'])) %}({{ v }}){% endmacro %}""".stripMargin
     val c = ctxWith(macros(defs))
-    assert(Template.render("SELECT {{ cols() }} FROM t", c) === "SELECT a, b, c FROM t")
-    assert(Template.render("SELECT {{ cols(['q', 'r'], '|') }} FROM t", c)
+    assert(Jinja.render("SELECT {{ cols() }} FROM t", c) === "SELECT a, b, c FROM t")
+    assert(Jinja.render("SELECT {{ cols(['q', 'r'], '|') }} FROM t", c)
       === "SELECT q|r FROM t")
-    assert(Template.render("{{ wrap() }}", c) === "(x, y)")
+    assert(Jinja.render("{{ wrap() }}", c) === "(x, y)")
   }
 
   // --- filters ---
 
   test("filters: join / lower / upper / replace / default / length") {
-    assert(Template.render("{{ ['a', 'b', 'c'] | join(', ') }}", ctx) === "a, b, c")
-    assert(Template.render("{{ 'AbC' | lower }}", ctx) === "abc")
-    assert(Template.render("{{ 'AbC' | upper }}", ctx) === "ABC")
-    assert(Template.render("{{ 'a-b' | replace('-', '_') }}", ctx) === "a_b")
-    assert(Template.render("{{ nope | default('fallback') }}", ctx) === "fallback")
-    assert(Template.render("{{ var('start') | default('x') }}", ctx) === "2020-01-01")
-    assert(Template.render("{{ ['a', 'b'] | length }}", ctx) === "2")
-    assert(Template.render("{{ ['b', 'a', 'b'] | unique | sort | join('') }}", ctx) === "ab")
+    assert(Jinja.render("{{ ['a', 'b', 'c'] | join(', ') }}", ctx) === "a, b, c")
+    assert(Jinja.render("{{ 'AbC' | lower }}", ctx) === "abc")
+    assert(Jinja.render("{{ 'AbC' | upper }}", ctx) === "ABC")
+    assert(Jinja.render("{{ 'a-b' | replace('-', '_') }}", ctx) === "a_b")
+    assert(Jinja.render("{{ nope | default('fallback') }}", ctx) === "fallback")
+    assert(Jinja.render("{{ var('start') | default('x') }}", ctx) === "2020-01-01")
+    assert(Jinja.render("{{ ['a', 'b'] | length }}", ctx) === "2")
+    assert(Jinja.render("{{ ['b', 'a', 'b'] | unique | sort | join('') }}", ctx) === "ab")
   }
 
   test("filter chain inside set and for") {
     val sql =
       """{% set cols = 'ID,Name,Email'.split(',') %}
         |SELECT {% for c in cols %}{{ c | lower }}{% if not loop.last %}, {% endif %}{% endfor %} FROM t""".stripMargin
-    assert(Template.render(sql, ctx) === "SELECT id, name, email FROM t")
+    assert(Jinja.render(sql, ctx) === "SELECT id, name, email FROM t")
   }
 
   // --- expressions / statements ---
 
   test("general if / elif / else with comparisons") {
     val sql = "{% if var('start') == '2020-01-01' %}A{% elif var('start') > '2019' %}B{% else %}C{% endif %}"
-    assert(Template.render(sql, ctx) === "A")
-    assert(Template.render(
+    assert(Jinja.render(sql, ctx) === "A")
+    assert(Jinja.render(
       "{% if 2 > 3 %}A{% elif 2 > 1 %}B{% else %}C{% endif %}", ctx) === "B")
-    assert(Template.render(
+    assert(Jinja.render(
       "{% if 2 > 3 %}A{% elif 2 > 5 %}B{% else %}C{% endif %}", ctx) === "C")
   }
 
   test("nested for and if blocks") {
     val sql =
       "{% for a in ['x', 'y'] %}{% for b in [1, 2] %}{% if b == 2 %}{{ a }}{{ b }};{% endif %}{% endfor %}{% endfor %}"
-    assert(Template.render(sql, ctx) === "x2;y2;")
+    assert(Jinja.render(sql, ctx) === "x2;y2;")
   }
 
   test("expression set: lists, arithmetic, method calls") {
-    assert(Template.render(
+    assert(Jinja.render(
       "{% set xs = ['a'] + ['b'] %}{{ xs | join('-') }}", ctx) === "a-b")
-    assert(Template.render("{% set n = 3 * 4 + 1 %}{{ n }}", ctx) === "13")
-    assert(Template.render(
+    assert(Jinja.render("{% set n = 3 * 4 + 1 %}{{ n }}", ctx) === "13")
+    assert(Jinja.render(
       "{% set s = ' pad '.strip() %}[{{ s }}]", ctx) === "[pad]")
-    assert(Template.render(
+    assert(Jinja.render(
       "{% set parts = 'a.b.c'.split('.') %}{{ parts[1] }}", ctx) === "b")
   }
 
   test("in / not in, is defined / is none, boolean ops") {
-    assert(Template.render("{% if 'a' in ['a', 'b'] %}Y{% endif %}", ctx) === "Y")
-    assert(Template.render("{% if 'z' not in ['a', 'b'] %}Y{% endif %}", ctx) === "Y")
-    assert(Template.render("{% if nope is defined %}Y{% else %}N{% endif %}", ctx) === "N")
-    assert(Template.render("{% set x = 1 %}{% if x is defined %}Y{% endif %}", ctx) === "Y")
-    assert(Template.render(
+    assert(Jinja.render("{% if 'a' in ['a', 'b'] %}Y{% endif %}", ctx) === "Y")
+    assert(Jinja.render("{% if 'z' not in ['a', 'b'] %}Y{% endif %}", ctx) === "Y")
+    assert(Jinja.render("{% if nope is defined %}Y{% else %}N{% endif %}", ctx) === "N")
+    assert(Jinja.render("{% set x = 1 %}{% if x is defined %}Y{% endif %}", ctx) === "Y")
+    assert(Jinja.render(
       "{% if true and not false or false %}Y{% endif %}", ctx) === "Y")
   }
 
   test("type tests: mapping/sequence/boolean/integer/float/odd/even/divisibleby") {
-    def t(src: String) = Template.render(s"{% if $src %}Y{% else %}N{% endif %}", ctx)
+    def t(src: String) = Jinja.render(s"{% if $src %}Y{% else %}N{% endif %}", ctx)
     assert(t("{'a': 1} is mapping") === "Y")
     assert(t("[1, 2] is mapping") === "N")
     assert(t("[1, 2] is sequence") === "Y")
@@ -321,38 +321,38 @@ class JinjaSpec extends AnyFunSuite {
   }
 
   test("whitespace control and comments") {
-    assert(Template.render("a  {#- note -#}  b", ctx) === "a  b".replace("  ", "")
-      || Template.render("a {# note #} b", ctx) === "a  b")
-    assert(Template.render("x\n  {%- if true %}y{% endif %}", ctx) === "xy")
-    assert(Template.render("{# gone #}SELECT 1", ctx) === "SELECT 1")
+    assert(Jinja.render("a  {#- note -#}  b", ctx) === "a  b".replace("  ", "")
+      || Jinja.render("a {# note #} b", ctx) === "a  b")
+    assert(Jinja.render("x\n  {%- if true %}y{% endif %}", ctx) === "xy")
+    assert(Jinja.render("{# gone #}SELECT 1", ctx) === "SELECT 1")
   }
 
   test("int/float rendering and division") {
-    assert(Template.render("{{ 10 }}", ctx) === "10")
-    assert(Template.render("{{ 10.5 }}", ctx) === "10.5")
-    assert(Template.render("{{ 7 // 2 }}", ctx) === "3")
-    assert(Template.render("{{ 1 / 2 }}", ctx) === "0.5")
-    assert(Template.render("{{ 10 % 3 }}", ctx) === "1")
+    assert(Jinja.render("{{ 10 }}", ctx) === "10")
+    assert(Jinja.render("{{ 10.5 }}", ctx) === "10.5")
+    assert(Jinja.render("{{ 7 // 2 }}", ctx) === "3")
+    assert(Jinja.render("{{ 1 / 2 }}", ctx) === "0.5")
+    assert(Jinja.render("{{ 10 % 3 }}", ctx) === "1")
   }
 
   test("unresolved names and calls render verbatim") {
-    assert(Template.render("SELECT {{ mystery_col }} FROM t", ctx)
+    assert(Jinja.render("SELECT {{ mystery_col }} FROM t", ctx)
       === "SELECT {{ mystery_col }} FROM t")
     // call blocks and macro defs pass through untouched for the
     // segmentation/extraction layers
     val call = "{% call statement('x', fetch_result=true) %}SELECT 1{% endcall %}"
-    assert(Template.render(call, ctx) === call)
+    assert(Jinja.render(call, ctx) === call)
   }
 
   test("do statement evaluates for side effects only") {
-    assert(Template.render("{% do log('hi') %}SELECT 1", ctx) === "SELECT 1")
+    assert(Jinja.render("{% do log('hi') %}SELECT 1", ctx) === "SELECT 1")
   }
 
   test("macro recursion is bounded") {
     val m = """{% macro loop_forever() %}{{ loop_forever() }}{% endmacro %}"""
     val c = ctxWith(macros(m))
     assertThrows[IllegalArgumentException](
-      Template.render("{{ loop_forever() }}", c))
+      Jinja.render("{{ loop_forever() }}", c))
   }
 
   // --- run_query / return / dispatch / block set (dynamic SQL) ---
@@ -393,7 +393,7 @@ class JinjaSpec extends AnyFunSuite {
         |{% for m in get_payment_methods() %}  sum(case when payment_method = '{{ m }}' then amount end) as {{ m }}_amount{% if not loop.last %},
         |{% endif %}{% endfor %}
         |from app_data.payments""".stripMargin
-    val out = Template.render(sql, c)
+    val out = Jinja.render(sql, c)
     assert(out.contains("as bank_transfer_amount,"))
     assert(out.contains("as credit_card_amount"))
     assert(!out.contains("{%"))
@@ -405,33 +405,33 @@ class JinjaSpec extends AnyFunSuite {
         |{% macro default__concat_ws_like(a, b) %}{{ a }} || {{ b }}{% endmacro %}
         |{% macro spark__concat_ws_like(a, b) %}concat({{ a }}, {{ b }}){% endmacro %}""".stripMargin
     val c = ctxWith(macros(defs))
-    assert(Template.render("SELECT {{ concat_ws_like('x', 'y') }}", c)
+    assert(Jinja.render("SELECT {{ concat_ws_like('x', 'y') }}", c)
       === "SELECT concat(x, y)")
     // without a spark__ impl the default__ chain resolves
     val defaultOnly =
       """{% macro only_def(a) %}{{ return(adapter.dispatch('only_def')(a)) }}{% endmacro %}
         |{% macro default__only_def(a) %}D:{{ a }}{% endmacro %}""".stripMargin
     val c2 = ctxWith(macros(defaultOnly))
-    assert(Template.render("{{ only_def('q') }}", c2) === "D:q")
+    assert(Jinja.render("{{ only_def('q') }}", c2) === "D:q")
   }
 
   test("dispatched macro value can be held in a set variable") {
     val defs =
       """{% macro default__impl() %}IMPL{% endmacro %}""".stripMargin
     val c = ctxWith(macros(defs))
-    assert(Template.render(
+    assert(Jinja.render(
       "{% set m = adapter.dispatch('impl') %}{{ m() }}", c) === "IMPL")
   }
 
   test("exceptions.raise_compiler_error throws; warn does not") {
     val e = intercept[IllegalArgumentException](
-      Template.render("{% do exceptions.raise_compiler_error('bad model') %}", ctx))
+      Jinja.render("{% do exceptions.raise_compiler_error('bad model') %}", ctx))
     assert(e.getMessage.contains("bad model"))
-    assert(Template.render("{% do exceptions.warn('heads up') %}ok", ctx) === "ok")
+    assert(Jinja.render("{% do exceptions.warn('heads up') %}ok", ctx) === "ok")
   }
 
   test("return() outside any macro surfaces as an error") {
-    assertThrows[Jinja.MacroReturn](Template.render("{{ return(1) }}", ctx))
+    assertThrows[Jinja.MacroReturn](Jinja.render("{{ return(1) }}", ctx))
   }
 
   /** dbt_utils `star` in its real shape: dispatch + column metadata +
@@ -458,19 +458,19 @@ class JinjaSpec extends AnyFunSuite {
       case (m, a, k) => fail(s"unexpected adapter call $m($a, $k)")
     }
     val c = ctxWith(macros(starDefs)).copy(adapterApi = Some(fakeAdapter))
-    assert(Template.render(
+    assert(Jinja.render(
       "SELECT {{ star(ref('stg'), except=['secret']) }} FROM {{ ref('stg') }}", c)
       === "SELECT Id, Name FROM rel_stg")
     // no except → all columns
-    assert(Template.render("SELECT {{ star(ref('stg')) }}", c)
+    assert(Jinja.render("SELECT {{ star(ref('stg')) }}", c)
       === "SELECT Id, Name, Secret")
   }
 
   test("list mutation via do append is visible through the holding var") {
-    assert(Template.render(
+    assert(Jinja.render(
       "{% set xs = [] %}{% do xs.append('a') %}{% do xs.append('b') %}{{ xs | join('-') }}",
       ctx) === "a-b")
-    assert(Template.render(
+    assert(Jinja.render(
       "{% set xs = [1] %}{% do xs.extend([2, 3]) %}{{ xs | sum }}", ctx) === "6")
   }
 
@@ -480,14 +480,14 @@ class JinjaSpec extends AnyFunSuite {
       "target.threads" -> "3"))
     // {% if target.name == 'dev' %} LIMIT ... — the single most common
     // target use in real projects (docs "limit data in development")
-    assert(Template.render(
+    assert(Jinja.render(
       "SELECT * FROM t {% if target.name == 'dev' %}LIMIT 100{% endif %}", c)
       === "SELECT * FROM t LIMIT 100")
-    assert(Template.render(
+    assert(Jinja.render(
       "SELECT * FROM t {% if target.name == 'prod' %}LIMIT 100{% endif %}", c)
       .trim === "SELECT * FROM t")
     // members read as values and compare as numbers
-    assert(Template.render(
+    assert(Jinja.render(
       "{{ target.schema }}:{% if target.threads | int > 2 %}par{% else %}seq{% endif %}",
       c) === "dev_s:par")
   }
@@ -500,17 +500,17 @@ class JinjaSpec extends AnyFunSuite {
   test("include renders inline with the current context") {
     val c = ctxWithTemplates(Map(
       "shared/filters.sql" -> "WHERE x > {{ var('start') }}"))
-    assert(Template.render(
+    assert(Jinja.render(
       "SELECT * FROM {{ ref('a') }} {% include 'shared/filters.sql' %}", c)
       === "SELECT * FROM rel_a WHERE x > 2020-01-01")
   }
 
   test("include ignore missing renders nothing; plain include errors") {
     val c = ctxWithTemplates(Map.empty)
-    assert(Template.render(
+    assert(Jinja.render(
       "A{% include 'nope.sql' ignore missing %}B", c) === "AB")
     intercept[IllegalArgumentException] {
-      Template.render("{% include 'nope.sql' %}", c)
+      Jinja.render("{% include 'nope.sql' %}", c)
     }
   }
 
@@ -518,7 +518,7 @@ class JinjaSpec extends AnyFunSuite {
     val c = ctxWithTemplates(Map(
       "base.sql" ->
         "SELECT {% block cols %}*{% endblock %} FROM {% block rel %}t{% endblock %}"))
-    assert(Template.render(
+    assert(Jinja.render(
       "{% extends 'base.sql' %}{% block cols %}a, b{% endblock %}", c)
       === "SELECT a, b FROM t")
   }
@@ -527,20 +527,20 @@ class JinjaSpec extends AnyFunSuite {
     val c = ctxWithTemplates(Map(
       "base.sql" -> "[{% block x %}base{% endblock %}|{% block y %}base{% endblock %}]",
       "mid.sql" -> "{% extends 'base.sql' %}{% block x %}mid{% endblock %}{% block y %}mid{% endblock %}"))
-    assert(Template.render(
+    assert(Jinja.render(
       "{% extends 'mid.sql' %}{% block y %}leaf{% endblock %}", c)
       === "[mid|leaf]")
   }
 
   test("blocks without extends render their own bodies in place") {
-    assert(Template.render(
+    assert(Jinja.render(
       "A {% block b %}{{ ref('m') }}{% endblock %} C", ctx) === "A rel_m C")
   }
 
   test("super() renders the overridden parent body in place") {
     val c = ctxWithTemplates(Map(
       "base.sql" -> "{% block b %}WHERE x > 0{% endblock %}"))
-    assert(Template.render(
+    assert(Jinja.render(
       "{% extends 'base.sql' %}{% block b %}{{ super() }} AND y = 1{% endblock %}", c)
       === "WHERE x > 0 AND y = 1")
   }
@@ -549,7 +549,7 @@ class JinjaSpec extends AnyFunSuite {
     val c = ctxWithTemplates(Map(
       "base.sql" -> "{% block b %}base{% endblock %}",
       "mid.sql" -> "{% extends 'base.sql' %}{% block b %}({{ super() }})+mid{% endblock %}"))
-    assert(Template.render(
+    assert(Jinja.render(
       "{% extends 'mid.sql' %}{% block b %}{{ super() }}+leaf{% endblock %}", c)
       === "(base)+mid+leaf")
   }
@@ -559,7 +559,7 @@ class JinjaSpec extends AnyFunSuite {
     // wrapped in control flow must override the parent's slot
     val c = ctxWithTemplates(Map(
       "base.sql" -> "SELECT {% block cols %}*{% endblock %} FROM {% block rel %}t{% endblock %}"))
-    assert(Template.render(
+    assert(Jinja.render(
       "{% extends 'base.sql' %}{% if true %}{% block cols %}a, b{% endblock %}{% endif %}" +
         "{% for i in [1] %}{% block rel %}u{% endblock %}{% endfor %}", c)
       === "SELECT a, b FROM u")
@@ -568,7 +568,7 @@ class JinjaSpec extends AnyFunSuite {
   test("extends: a block nested inside another child block overrides both slots") {
     val c = ctxWithTemplates(Map(
       "base.sql" -> "[{% block a %}A{% endblock %}|{% block b %}B{% endblock %}]"))
-    assert(Template.render(
+    assert(Jinja.render(
       "{% extends 'base.sql' %}{% block a %}X{% block b %}Y{% endblock %}{% endblock %}", c)
       === "[XY|Y]")
   }
@@ -577,7 +577,7 @@ class JinjaSpec extends AnyFunSuite {
     val c = ctxWithTemplates(Map(
       "base.sql" -> "({% block b %}0{% endblock %})",
       "leaf.sql" -> "{% extends 'base.sql' %}{% block b %}1{% endblock %}"))
-    assert(Template.render("X{% include 'leaf.sql' %}Y", c) === "X(1)Y")
+    assert(Jinja.render("X{% include 'leaf.sql' %}Y", c) === "X(1)Y")
   }
 
   // --- {% import %} / {% from %} macro namespaces ---
@@ -590,7 +590,7 @@ class JinjaSpec extends AnyFunSuite {
 
   test("import binds a macro namespace; ns.macro(...) calls through it") {
     val c = ctxWithTemplates(helperLib)
-    assert(Template.render(
+    assert(Jinja.render(
       "{% import 'snippets/helpers.sql' as h %}SELECT {{ h.quote_ident('a') }}", c)
       === "SELECT `a`")
   }
@@ -599,7 +599,7 @@ class JinjaSpec extends AnyFunSuite {
     // pick() calls quote_ident() — registered nowhere project-wide,
     // only in the imported file's namespace
     val c = ctxWithTemplates(helperLib)
-    assert(Template.render(
+    assert(Jinja.render(
       "{% import 'snippets/helpers.sql' as h %}" +
         "SELECT {{ h.pick('x', alias='y') }}", c)
       === "SELECT `x` AS y")
@@ -607,7 +607,7 @@ class JinjaSpec extends AnyFunSuite {
 
   test("from-import binds selected macros, with aliasing and kwargs") {
     val c = ctxWithTemplates(helperLib)
-    assert(Template.render(
+    assert(Jinja.render(
       "{% from 'snippets/helpers.sql' import pick as p, quote_ident %}" +
         "SELECT {{ p('a') }}, {{ quote_ident('b') }}", c)
       === "SELECT `a`, `b`")
@@ -616,19 +616,19 @@ class JinjaSpec extends AnyFunSuite {
   test("from-import of a missing macro and a missing template both error") {
     val c = ctxWithTemplates(helperLib)
     intercept[IllegalArgumentException] {
-      Template.render("{% from 'snippets/helpers.sql' import nope %}", c)
+      Jinja.render("{% from 'snippets/helpers.sql' import nope %}", c)
     }
     intercept[IllegalArgumentException] {
-      Template.render("{% import 'missing.sql' as m %}", c)
+      Jinja.render("{% import 'missing.sql' as m %}", c)
     }
   }
 
   test("with/without context modifiers are accepted") {
     val c = ctxWithTemplates(helperLib)
-    assert(Template.render(
+    assert(Jinja.render(
       "{% import 'snippets/helpers.sql' as h with context %}{{ h.quote_ident('z') }}", c)
       === "`z`")
-    assert(Template.render(
+    assert(Jinja.render(
       "{% from 'snippets/helpers.sql' import quote_ident without context %}{{ quote_ident('z') }}", c)
       === "`z`")
   }
@@ -636,19 +636,19 @@ class JinjaSpec extends AnyFunSuite {
   // --- {% filter %} blocks ---
 
   test("filter block applies a single filter to its rendered body") {
-    assert(Template.render(
+    assert(Jinja.render(
       "{% filter upper %}select {{ ref('m') }}{% endfilter %}", ctx)
       === "SELECT REL_M")
   }
 
   test("filter block applies a chained, argumented filter pipeline") {
-    assert(Template.render(
+    assert(Jinja.render(
       "{% filter replace('x', 'y') | upper %}axbxc{% endfilter %}", ctx)
       === "AYBYC")
   }
 
   test("filter block body may contain control flow") {
-    assert(Template.render(
+    assert(Jinja.render(
       "{% filter trim | lower %} {% for i in [1, 2] %}A{{ i }} {% endfor %}{% endfilter %}",
       ctx) === "a1 a2")
   }
@@ -656,53 +656,53 @@ class JinjaSpec extends AnyFunSuite {
   // --- A26 context-builtin long tail (reference base.py:374-727) ---
 
   test("fromjson parses; default on failure (base.py:374-391)") {
-    assert(Template.render(
+    assert(Jinja.render(
       """{% set d = fromjson('{"abc": 123}') %}{{ d['abc'] }}""", ctx) === "123")
-    assert(Template.render(
+    assert(Jinja.render(
       "{{ fromjson('not json', 'fallback') }}", ctx) === "fallback")
   }
 
   test("tojson round-trips dicts/lists; sort_keys pins order") {
-    assert(Template.render(
+    assert(Jinja.render(
       """{% set d = {"b": 1, "a": [1, 2, true, none]} %}{{ tojson(d, sort_keys=true) }}""",
       ctx) === """{"a": [1, 2, true, null], "b": 1}""")
-    assert(Template.render(
+    assert(Jinja.render(
       """{{ fromjson(tojson({"x": 1.5}))['x'] }}""", ctx) === "1.5")
   }
 
   test("fromyaml parses block yaml; toyaml dumps block style") {
-    assert(Template.render(
+    assert(Jinja.render(
       "{% set y %}\ndogs:\n - good\n - bad\n{% endset %}" +
         "{% set d = fromyaml(y) %}{{ d['dogs'][0] }}/{{ d['dogs'][1] }}",
       ctx) === "good/bad")
-    assert(Template.render(
+    assert(Jinja.render(
       """{{ toyaml({"abc": 123}) }}""", ctx).trim === "abc: 123")
-    assert(Template.render(
+    assert(Jinja.render(
       "{{ fromyaml('] not yaml [', 'dflt') }}", ctx) === "dflt")
   }
 
   test("set dedups (insertion order); set_strict raises on non-iterable") {
-    assert(Template.render(
+    assert(Jinja.render(
       "{{ set([1, 2, 2, 3]) | list }}", ctx) === "[1, 2, 3]")
-    assert(Template.render(
+    assert(Jinja.render(
       "{{ set(12345, 'dflt') }}", ctx) === "dflt")
     intercept[Exception] {
-      Template.render("{{ set_strict(12345) }}", ctx)
+      Jinja.render("{{ set_strict(12345) }}", ctx)
     }
   }
 
   test("zip pairs element-wise; zip_strict raises on non-iterable") {
-    assert(Template.render(
+    assert(Jinja.render(
       "{% for a, b in zip([1, 2], ['alice', 'bob']) %}{{ a }}={{ b }};{% endfor %}",
       ctx) === "1=alice;2=bob;")
-    assert(Template.render("{{ zip([1], 'nope', default='d') }}", ctx) === "d")
+    assert(Jinja.render("{{ zip([1], 'nope', default='d') }}", ctx) === "d")
     intercept[Exception] {
-      Template.render("{{ zip_strict([1], 2) }}", ctx)
+      Jinja.render("{{ zip_strict([1], 2) }}", ctx)
     }
   }
 
   test("diff_of_two_dicts: case-insensitive minus, keys keep dict_a case") {
-    val out = Template.render(
+    val out = Jinja.render(
       """{% set a = {"key_x": ["value_1", "VALUE_2"], "KEY_Y": ["value_3"]} %}
         |{% set b = {"key_x": ["value_1"], "key_z": ["value_4"]} %}
         |{{ tojson(diff_of_two_dicts(a, b), sort_keys=true) }}""".stripMargin, ctx).trim
@@ -710,106 +710,106 @@ class JinjaSpec extends AnyFunSuite {
   }
 
   test("flags: typed booleans with defaults") {
-    assert(Template.render(
+    assert(Jinja.render(
       "{% if flags.FULL_REFRESH %}drop{% else %}keep{% endif %}", ctx) === "keep")
     val ctx2 = ctx.copy(flags = Map("FULL_REFRESH" -> Jinja.JB(true)))
-    assert(Template.render(
+    assert(Jinja.render(
       "{% if flags.FULL_REFRESH %}drop{% else %}keep{% endif %}", ctx2) === "drop")
   }
 
   test("modules.re: match anchors at start; sub converts backrefs; findall") {
-    assert(Template.render(
+    assert(Jinja.render(
       "{{ modules.re.sub('(a+)b', '<\\1>', 'xaab aab') }}", ctx) === "x<aa> <aa>")
-    assert(Template.render(
+    assert(Jinja.render(
       "{% if modules.re.match('ab', 'abc') %}y{% else %}n{% endif %}", ctx) === "y")
-    assert(Template.render(
+    assert(Jinja.render(
       "{% if modules.re.match('bc', 'abc') %}y{% else %}n{% endif %}", ctx) === "n")
-    assert(Template.render(
+    assert(Jinja.render(
       "{{ modules.re.findall('[0-9]+', 'a1 b22 c333') | list }}",
       ctx) === "[1, 22, 333]")
   }
 
   test("modules.datetime: date construction, attrs, strftime, strptime") {
-    assert(Template.render(
+    assert(Jinja.render(
       "{% set d = modules.datetime.date(2002, 10, 27) %}{{ d.year }}/{{ d.isoformat() }}",
       ctx) === "2002/2002-10-27")
-    assert(Template.render(
+    assert(Jinja.render(
       "{% set d = modules.datetime.datetime(2002, 10, 27, 6, 0, 0) %}{{ d.strftime('%Y-%m-%d %H:%M') }}",
       ctx) === "2002-10-27 06:00")
-    assert(Template.render(
+    assert(Jinja.render(
       "{% set d = modules.datetime.datetime.strptime('2020-03-05', '%Y-%m-%d') %}{{ d.month }}",
       ctx) === "3")
   }
 
   test("modules.pytz: localize attaches zone; astimezone shifts the instant") {
-    assert(Template.render(
+    assert(Jinja.render(
       "{% set dt = modules.datetime.datetime(2002, 7, 1, 12, 0, 0) %}" +
         "{% set est = modules.pytz.timezone('America/New_York') %}" +
         "{{ dt.astimezone(est) }}",
       ctx) === "2002-07-01 08:00:00-04:00")
-    assert(Template.render(
+    assert(Jinja.render(
       "{% set dt = modules.datetime.datetime(2002, 7, 1, 12, 0, 0) %}" +
         "{{ modules.pytz.timezone('America/New_York').localize(dt) }}",
       ctx) === "2002-07-01 12:00:00-04:00")
     intercept[Exception] {
-      Template.render("{{ modules.pytz.timezone('No/Such') }}", ctx)
+      Jinja.render("{{ modules.pytz.timezone('No/Such') }}", ctx)
     }
   }
 
   test("tojson nests; fromyaml nested maps; re.split/escape round-trip") {
-    assert(Template.render(
+    assert(Jinja.render(
       """{{ tojson({"a": {"b": [1, {"c": none}]}, "s": "q\"x"}, sort_keys=true) }}""",
       ctx) === """{"a": {"b": [1, {"c": null}]}, "s": "q\"x"}""")
-    assert(Template.render(
+    assert(Jinja.render(
       "{% set y %}\nouter:\n  inner:\n    k: 7\n  list: [a, b]\n{% endset %}" +
         "{% set d = fromyaml(y) %}{{ d['outer']['inner']['k'] }}/{{ d['outer']['list'][1] }}",
       ctx) === "7/b")
-    assert(Template.render(
+    assert(Jinja.render(
       "{{ modules.re.split(',', 'a,b,,c') | list }}", ctx) === "[a, b, , c]")
     // escape makes a literal safe to feed back into a regex call
-    assert(Template.render(
+    assert(Jinja.render(
       "{% if modules.re.match(modules.re.escape('a.b*'), 'a.b*c') %}y{% else %}n{% endif %}",
       ctx) === "y")
-    assert(Template.render(
+    assert(Jinja.render(
       "{% if modules.re.match(modules.re.escape('a.b*'), 'axbbc') %}y{% else %}n{% endif %}",
       ctx) === "n")
   }
 
   test("zip output feeds tojson as arrays; set over a string dedups chars") {
-    assert(Template.render(
+    assert(Jinja.render(
       "{{ tojson(zip([1, 2], ['x', 'y']) | list) }}", ctx) === """[[1, "x"], [2, "y"]]""")
-    assert(Template.render(
+    assert(Jinja.render(
       "{{ set('aabca') | list }}", ctx) === "[a, b, c]")
   }
 
   test("re.sub: literal $ and backslash in the replacement, like python") {
     // python: re.sub('a', '$5', 'xa') == 'x$5' — java Matcher would
     // read $5 as a group ref and throw without escaping
-    assert(Template.render(
+    assert(Jinja.render(
       "{{ modules.re.sub('a', '$5', 'xa') }}", ctx) === "x$5")
-    assert(Template.render(
+    assert(Jinja.render(
       "{{ modules.re.sub('(a+)b', 'US$\\1', 'xaab') }}", ctx) === "xUS$aa")
     // \\ in the replacement = one literal backslash (python semantics)
-    assert(Template.render(
+    assert(Jinja.render(
       """{{ modules.re.sub('a', '\\', 'xa') }}""", ctx) === "x\\")
   }
 
   test("re.escape: python 3.7+ special set only — @ / : ! pass through") {
-    assert(Template.render(
+    assert(Jinja.render(
       "{{ modules.re.escape('user@host/p:1!') }}", ctx) === "user@host/p:1!")
-    assert(Template.render(
+    assert(Jinja.render(
       "{{ modules.re.escape('a.b*c') }}", ctx) === "a\\.b\\*c")
     // '-' and '#' and space ARE in python's escape set
-    assert(Template.render(
+    assert(Jinja.render(
       "{{ modules.re.escape('a-b #c') }}", ctx) === "a\\-b\\ \\#c")
   }
 
   test("set: typed dedup — 1 vs '1' stay distinct; True==1 collapses (python)") {
-    assert(Template.render(
+    assert(Jinja.render(
       """{{ set([1, "1", 1]) | list }}""", ctx) === "[1, 1]")
-    assert(Template.render(
+    assert(Jinja.render(
       "{{ set([true, 1, 1.0, 2]) | list }}", ctx) === "[true, 2]")
-    assert(Template.render(
+    assert(Jinja.render(
       """{{ set(["true", true]) | list }}""", ctx) === "[true, true]")
   }
 
@@ -821,46 +821,46 @@ class JinjaSpec extends AnyFunSuite {
       if (n == "rel_built") Some("table") else None))
 
   test("ref/source/this yield relation values; interpolation unchanged") {
-    assert(Template.render(
+    assert(Jinja.render(
       "SELECT * FROM {{ ref('a') }} JOIN {{ source('s', 't') }} ON 1=1",
       relCtx) === "SELECT * FROM rel_a JOIN src_s_t ON 1=1")
-    assert(Template.render("{{ this }}", relCtx) === "this_table")
+    assert(Jinja.render("{{ this }}", relCtx) === "this_table")
   }
 
   test("relation attributes: identifier/schema/database/type/is_table") {
-    assert(Template.render("{{ ref('a').identifier }}", relCtx) === "rel_a")
-    assert(Template.render("{{ this.schema }}", relCtx) === "main_schema")
+    assert(Jinja.render("{{ ref('a').identifier }}", relCtx) === "rel_a")
+    assert(Jinja.render("{{ this.schema }}", relCtx) === "main_schema")
     // spark include-policy: database is none → renders empty, is none
-    assert(Template.render(
+    assert(Jinja.render(
       "{% if this.database is none %}nodb{% endif %}", relCtx) === "nodb")
-    assert(Template.render("{{ ref('built').type }}", relCtx) === "table")
-    assert(Template.render(
+    assert(Jinja.render("{{ ref('built').type }}", relCtx) === "table")
+    assert(Jinja.render(
       "{% if ref('built').is_table %}t{% endif %}", relCtx) === "t")
-    assert(Template.render(
+    assert(Jinja.render(
       "{% if not ref('a').is_view %}notview{% endif %}", relCtx) === "notview")
   }
 
   test("relation methods: render/include/incorporate/replace_path/get") {
-    assert(Template.render("{{ this.render() }}", relCtx) === "this_table")
-    assert(Template.render(
+    assert(Jinja.render("{{ this.render() }}", relCtx) === "this_table")
+    assert(Jinja.render(
       "{{ this.include(database=false) }}", relCtx) === "this_table")
-    assert(Template.render(
+    assert(Jinja.render(
       "{{ ref('a').incorporate(type='view').type }}", relCtx) === "view")
-    assert(Template.render(
+    assert(Jinja.render(
       "{{ this.replace_path(identifier='other').identifier }}", relCtx)
       === "other")
-    assert(Template.render(
+    assert(Jinja.render(
       "{{ this.get('schema') }}", relCtx) === "main_schema")
-    assert(Template.render(
+    assert(Jinja.render(
       "{{ this.get('nope', 'fallback') }}", relCtx) === "fallback")
   }
 
   test("relation values compare and concatenate like their rendered name") {
-    assert(Template.render(
+    assert(Jinja.render(
       "{% if ref('a') == 'rel_a' %}eq{% endif %}", relCtx) === "eq")
-    assert(Template.render("{{ ref('a') ~ '__bak' }}", relCtx) === "rel_a__bak")
+    assert(Jinja.render("{{ ref('a') ~ '__bak' }}", relCtx) === "rel_a__bak")
     // set-held relation keeps the attribute surface
-    assert(Template.render(
+    assert(Jinja.render(
       "{% set r = ref('built') %}{{ r.identifier }}:{{ r.type }}", relCtx)
       === "rel_built:table")
   }
@@ -872,9 +872,9 @@ class JinjaSpec extends AnyFunSuite {
       "{% macro ok(x) %}{{ return(x * 2) }}{% endmacro %}",
       "{% macro boom() %}{{ 1 // 0 }}{% endmacro %}")
     val c = ctxWith(ms)
-    assert(Template.render(
+    assert(Jinja.render(
       "{% set m = ok %}{{ try_or_compiler_error('nope', m, 21) }}", c) === "42")
-    val e = intercept[IllegalArgumentException](Template.render(
+    val e = intercept[IllegalArgumentException](Jinja.render(
       "{% set m = boom %}{{ try_or_compiler_error('custom msg', m) }}", c))
     assert(e.getMessage.contains("custom msg"))
   }
@@ -884,33 +884,33 @@ class JinjaSpec extends AnyFunSuite {
     val c = ctx.copy(
       resultSink = Some((slot, fields) => slots(slot) = fields),
       resultLookup = Some(slots.get))
-    assert(Template.render(
+    assert(Jinja.render(
       "{% do store_raw_result('probe', message='done', code='OK', rows_affected='7') %}" +
         "{{ load_result('probe').rows_affected }}", c) === "7")
     assert(slots("probe")("message") === "done")
     assert(slots("probe")("status") === "SUCCESS")
     // plain store_result: second positional is the response message
-    assert(Template.render(
+    assert(Jinja.render(
       "{% do store_result('r2', 'all good') %}{{ load_result('r2').message }}",
       c) === "all good")
   }
 
   test("store_result without a sink is a loud error (parse-only contexts)") {
     val e = intercept[IllegalArgumentException](
-      Template.render("{% do store_result('x', 'm') %}", ctx))
+      Jinja.render("{% do store_result('x', 'm') %}", ctx))
     assert(e.getMessage.contains("not available"))
   }
 
   test("sql_now / adapter_macro / dbt_metadata_envs") {
-    assert(Template.render("{{ sql_now }}", ctx) === "current_timestamp()")
+    assert(Jinja.render("{{ sql_now }}", ctx) === "current_timestamp()")
     val e = intercept[IllegalArgumentException](
-      Template.render("{{ adapter_macro('x') }}", ctx))
+      Jinja.render("{{ adapter_macro('x') }}", ctx))
     assert(e.getMessage.contains("deprecated"))
     assert(e.getMessage.contains("adapter.dispatch"))
     val c = ctx.copy(envOverrides = Map(
       "DBT_ENV_CUSTOM_ENV_team" -> "data", "PLAIN" -> "no"))
-    assert(Template.render("{{ dbt_metadata_envs.team }}", c) === "data")
-    assert(Template.render(
+    assert(Jinja.render("{{ dbt_metadata_envs.team }}", c) === "data")
+    assert(Jinja.render(
       "{% if 'PLAIN' not in dbt_metadata_envs %}clean{% endif %}", c) === "clean")
   }
 
@@ -922,12 +922,12 @@ class JinjaSpec extends AnyFunSuite {
           "config" -> Jinja.JM(Map("materialized" -> Jinja.JS("table"))))),
         "defer_relation" -> Jinja.JNull),
       builtins = Map("model" -> "SHADOWED"))
-    assert(Template.render("{{ model.name }}", c) === "my_model")
-    assert(Template.render("{{ model.config.materialized }}", c) === "table")
-    assert(Template.render(
+    assert(Jinja.render("{{ model.name }}", c) === "my_model")
+    assert(Jinja.render("{{ model.config.materialized }}", c) === "table")
+    assert(Jinja.render(
       "{% if defer_relation is none %}nodefer{% endif %}", c) === "nodefer")
     // a local set still wins over the typed value
-    assert(Template.render(
+    assert(Jinja.render(
       "{% set model = 'local' %}{{ model }}", c) === "local")
   }
 
@@ -935,37 +935,37 @@ class JinjaSpec extends AnyFunSuite {
     // jinja-in-a-string must arrive via a variable — a `{{ … }}`
     // literal inline would be cut at the first `}}` by the lexer,
     // exactly like Jinja2's
-    assert(Template.render(
+    assert(Jinja.render(
       """{% set s = "{{ ref('a') }}" %}{{ render(s) }}""", ctx) === "rel_a")
-    assert(Template.render(
+    assert(Jinja.render(
       """{% set s = "{{ var('start') }}-end" %}{{ render(s) }}""",
       ctx) === "2020-01-01-end")
   }
 
   test("api.Relation.create / api.Column factories") {
-    assert(Template.render(
+    assert(Jinja.render(
       "{% set r = api.Relation.create(database=none, schema='s', identifier='tbl', type='table') %}" +
         "{{ r }}:{{ r.schema }}:{{ r.type }}:{% if r.is_table %}T{% endif %}",
       ctx) === "tbl:s:table:T")
-    assert(Template.render(
+    assert(Jinja.render(
       "{% set c = api.Column.create('amount', 'bigint') %}{{ c.name }}:{{ c.dtype }}",
       ctx) === "amount:bigint")
-    assert(Template.render(
+    assert(Jinja.render(
       "{{ api.Column.translate_type('numeric') }}", ctx) === "decimal(28, 6)")
-    assert(Template.render(
+    assert(Jinja.render(
       "{{ api.Column.translate_type('string') }}", ctx) === "string")
   }
 
   test("load_agate_table: seed contexts only; rows iterate as dicts") {
     val e = intercept[IllegalArgumentException](
-      Template.render("{{ load_agate_table() }}", ctx))
+      Jinja.render("{{ load_agate_table() }}", ctx))
     assert(e.getMessage.contains("seed"))
     val c = ctx.copy(typedValues = Map("__agate_table" -> Jinja.JM(Map(
       "column_names" -> Jinja.jlist(Seq(Jinja.JS("id"), Jinja.JS("v"))),
       "rows" -> Jinja.jlist(Seq(
         Jinja.JM(Map("id" -> Jinja.JS("1"), "v" -> Jinja.JS("a"))),
         Jinja.JM(Map("id" -> Jinja.JS("2"), "v" -> Jinja.JS("b")))))))))
-    assert(Template.render(
+    assert(Jinja.render(
       "{% set t = load_agate_table() %}" +
         "{{ t.column_names | join(',') }}:" +
         "{% for r in t.rows %}{{ r.v }}{% endfor %}", c) === "id,v:ab")
@@ -974,12 +974,12 @@ class JinjaSpec extends AnyFunSuite {
   test("toLiteral splits tag-terminator sequences so {% set %} stays well-formed (ADVICE r14)") {
     for (s <- Seq("100%}", "a{{b}}c", "x{%y", "pre#}post", "{{", "%}", "plain")) {
       val lit = Jinja.toLiteral(Jinja.JS(s))
-      assert(Template.render(s"{% set m = $lit %}[{{ m }}]", ctx) === s"[$s]",
+      assert(Jinja.render(s"{% set m = $lit %}[{{ m }}]", ctx) === s"[$s]",
         s"round-trip failed for $s via $lit")
     }
     // nested inside lists and dict values too
     val lst = Jinja.toLiteral(Jinja.jlist(Seq(Jinja.JS("a%}b"), Jinja.JS("c"))))
-    assert(Template.render(s"{% set m = $lst %}{{ m | join('/') }}", ctx) === "a%}b/c")
+    assert(Jinja.render(s"{% set m = $lst %}{{ m | join('/') }}", ctx) === "a%}b/c")
   }
 
   test("CrossDb builtins are call-only, not bare-name variables (ADVICE r14)") {
@@ -989,19 +989,19 @@ class JinjaSpec extends AnyFunSuite {
       macroResolver = n => CrossDb.macros.get(n))
     // bare names colliding with builtin macro names stay falsy/undefined
     // (jinja2: `{% if date %}` on an unset name takes the else branch)
-    assert(Template.render(
+    assert(Jinja.render(
       "{% if date %}T{% else %}F{% endif %}", engineCtx) === "F")
-    assert(Template.render(
+    assert(Jinja.render(
       "{% if length %}T{% else %}F{% endif %}", engineCtx) === "F")
     // call syntax still reaches the builtin
-    assert(Template.render("{{ length('x') }}", engineCtx) === "length(x)")
-    assert(Template.render("{{ replace('c', 'a', 'b') }}", engineCtx)
+    assert(Jinja.render("{{ length('x') }}", engineCtx) === "length(x)")
+    assert(Jinja.render("{{ replace('c', 'a', 'b') }}", engineCtx)
       === "replace(c, a, b)")
     // a USER macro with a colliding name IS a template-level name
     val userCtx = ctxWith(user).copy(
       macroResolver = n => user.get(n).orElse(CrossDb.macros.get(n)))
-    assert(Template.render(
+    assert(Jinja.render(
       "{% if date %}T{% else %}F{% endif %}", userCtx) === "T")
-    assert(Template.render("{{ date() }}", userCtx) === "userdate")
+    assert(Jinja.render("{{ date() }}", userCtx) === "userdate")
   }
 }

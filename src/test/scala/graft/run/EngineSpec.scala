@@ -1548,7 +1548,7 @@ class EngineSpec extends SparkSpec {
     assert(row.getInt(1) === 2)
     // string args with quotes round-trip through toLiteral's escaping
     // (Jinja-level; emitting them into SQL safely is the macro's job)
-    assert(graft.render.Template.render(
+    assert(graft.render.Jinja.render(
       "{% set p = " + Jinja.toLiteral(Jinja.JS("it's")) + " %}" +
         "{% if p == \"it's\" %}ok:{{ p }}{% endif %}",
       graft.render.Template.Context(n => n, (a, b) => s"$a.$b", ""))
@@ -1884,5 +1884,67 @@ class EngineSpec extends SparkSpec {
     val byName = p.manifest.nodes.values.map(n => n.name -> n).toMap
     assert(byName("inc").dependsOn.toSet ===
       Set("stg_delta", "stg_orders", "audit").map(byName(_).uniqueId))
+  }
+
+  test("a ref made inside a project macro is an edge of the model that calls it") {
+    val eng = Engine.fromProject(spark, writeProject(Map(
+      "dbt_project.yml" -> "name: macroref\n",
+      "macros/up.sql" -> "{% macro upstream() %}{{ ref('a') }}{% endmacro %}",
+      "models/a.sql" -> "{{ config(materialized='table') }}\nSELECT 1 AS id",
+      "models/b.sql" ->
+        "{{ config(materialized='table') }}\nSELECT id FROM {{ upstream() }}")),
+      tmpDir("wh"))
+    assert(nodeNamed(eng, "b").dependsOn === Seq(nodeNamed(eng, "a").uniqueId))
+    val res = eng.run(threads = 2)
+    assert(res.map(_.status) === Seq("success", "success"), res.mkString("; "))
+    assert(eng.wh.read("b").count() === 1)
+  }
+
+  test("a custom generic test whose macro body refs a kwarg is an edge of the test") {
+    val eng = Engine.fromProject(spark, writeProject(Map(
+      "dbt_project.yml" -> "name: testref\n",
+      "macros/tests.sql" ->
+        """{% test exists_in(model, column_name, other) %}
+          |SELECT * FROM {{ model }}
+          |WHERE {{ column_name }} NOT IN (SELECT id FROM {{ ref(other) }})
+          |{% endtest %}""".stripMargin,
+      "models/a.sql" -> "{{ config(materialized='table') }}\nSELECT 1 AS id",
+      "models/b.sql" -> "{{ config(materialized='table') }}\nSELECT 1 AS id",
+      "models/schema.yml" ->
+        """models:
+          |  - name: b
+          |    columns:
+          |      - name: id
+          |        tests:
+          |          - exists_in:
+          |              other: a
+          |""".stripMargin)), tmpDir("wh"))
+    val t = eng.manifest.nodes.values.collectFirst { case t: TestNode => t }.get
+    assert(t.dependsOn.toSet === Set("a", "b").map(nodeNamed(eng, _).uniqueId))
+    assert(eng.run().forall(_.status == "success"))
+    val res = eng.test()
+    assert(res.map(_.status) === Seq("pass"), res.mkString("; "))
+  }
+
+  test("a ref named from an unevaluable loop loads, and is refused until hinted") {
+    def project(hint: String) = writeProject(Map(
+      "dbt_project.yml" -> "name: loopref\n",
+      "models/stg_a.sql" -> "{{ config(materialized='table') }}\nSELECT 1 AS id",
+      "models/b.sql" -> (hint +
+        """{% for s in run_query("SELECT 'a' AS n").columns[0].values() %}
+          |SELECT id FROM {{ ref('stg_' ~ s) }}
+          |{% endfor %}""".stripMargin)))
+    // the walk cannot know the loop's names: no `stg_` edge, no load failure
+    val eng = Engine.fromProject(spark, project(""), tmpDir("wh"))
+    assert(nodeNamed(eng, "b").dependsOn.isEmpty)
+    val b = eng.run(threads = 1).find(_.uniqueId == nodeNamed(eng, "b").uniqueId).get
+    assert(b.status === "error")
+    assert(b.message.contains("-- depends_on: {{ ref('stg_a') }}"), b.message)
+
+    val hinted = Engine.fromProject(spark,
+      project("-- depends_on: {{ ref('stg_a') }}\n"), tmpDir("wh"))
+    val ok = hinted.run(threads = 2)
+    assert(ok.forall(_.status == "success"), ok.mkString("; "))
+    assert(hinted.wh.read("b").count() === 1)
   }
 }
