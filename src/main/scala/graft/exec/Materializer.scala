@@ -10,9 +10,19 @@ import org.apache.spark.sql.types.StructType
   * `core/dbt/contracts/graph/manifest.py:940-975`; behaviors pinned by
   * the reference's tests/functional/materializations suite).
   *
-  * All strategies are driver-orchestrated but executor-executed: no
-  * `.collect()` on data paths, plans stay lazy until the single write
-  * action per node (100 TB discipline, SURVEY §7 risk 6).
+  * All strategies are driver-orchestrated but executor-executed: plans
+  * stay lazy, and the data moves in these passes (Spark executions) per
+  * node (100 TB discipline, SURVEY §7 risk 6):
+  *   - view: none — a lazy temp view;
+  *   - table, append, microbatch and snapshot: one write;
+  *   - seed: a CSV schema-inference read, then one write;
+  *   - merge and delete+insert: one write — merge's duplicate-key
+  *     refusal rides on it. With partition_by they first run one
+  *     touched-partition probe (`distinct().limit(257).collect()`),
+  *     because the target filter needs that set before the write;
+  *   - insert_overwrite: one write — the leaf dirs it writes name the
+  *     partitions it replaces;
+  *   - an enforced contract with not_null columns adds one count.
   */
 object Materializer {
 
@@ -205,24 +215,31 @@ object Materializer {
             (baseTarget.filter(expr(pred)),
               Some(baseTarget.filter(!expr(pred))))
           }
-        if (strategy != "delete+insert") {
-          // Warehouse-MERGE parity (reference adapters; Delta raises
-          // the same way): two source rows matching ONE target row is a
-          // nondeterministic update — raise instead of picking a
-          // winner. delete+insert legitimately accepts duplicate
-          // source rows (delete by key, insert all). Cost: one agg
-          // over the delta keys + a semi join against eligible keys.
-          val dupMatched = delta.groupBy(uniqueKey.map(col): _*)
-            .agg(count(lit(1)).as("__graft_n")).filter(col("__graft_n") > 1)
-            .join(eligible, uniqueKey, "left_semi")
-            .limit(1).count()
-          if (dupMatched > 0)
-            throw new IllegalStateException(
-              s"$name: merge found multiple source rows matching the same " +
-                s"target row on unique_key (${uniqueKey.mkString(", ")}) — " +
-                "deduplicate the model's output, or use delete+insert")
-        }
-        val keep = eligible.join(deltaKeys, uniqueKey, "left_anti")
+        // Warehouse-MERGE parity (reference adapters; Delta raises the
+        // same way): two source rows matching ONE target row is a
+        // nondeterministic update — refuse instead of picking a winner.
+        // delete+insert legitimately accepts duplicate source rows
+        // (delete by key, insert all). The check rides on the write: each
+        // eligible row meets its key's delta row count, the write counts
+        // the matched keys with more than one row, and a count above 0
+        // refuses the write before its commit, so nothing becomes visible.
+        // (Raising inside a task instead would fail the job while its
+        // sibling tasks still write into the version dir.)
+        val dupMatched = wh.spark.sparkContext.longAccumulator
+        // the eligible rows no delta key matches
+        val keep =
+          if (strategy == "delete+insert") eligible.join(deltaKeys, uniqueKey, "left_anti")
+          else {
+            val n = "__graft_n"
+            val unmatched = udf { (rows: java.lang.Long) =>
+              if (rows != null && rows > 1) dupMatched.add(1)
+              rows == null
+            }.asNondeterministic()
+            eligible.join(delta.groupBy(uniqueKey.map(col): _*)
+                .agg(count(lit(1)).as(n)), uniqueKey, "left")
+              .filter(unmatched(col(n)))
+              .select(eligible.columns.toSeq.map(col): _*)
+          }
         val updatable = (if (mergeUpdateColumns.nonEmpty)
           mergeUpdateColumns.toSet.intersect(deltaCols) else deltaCols) --
           mergeExcludeColumns -- uniqueKey
@@ -244,27 +261,34 @@ object Materializer {
             keep.unionByName(updated).unionByName(inserts)
           } else keep.unionByName(conformTo(keep.schema, delta))
         val toWrite = carried.map(c => merged.unionByName(c)).getOrElse(merged)
-        writePossiblyPruned(wh, name, toWrite, partitionBy, prunedVals)
+        writePossiblyPruned(wh, name, toWrite, partitionBy, prunedVals, check = () =>
+          if (dupMatched.value > 0) throw new IllegalStateException(
+            s"$name: merge found multiple source rows matching the same " +
+              s"target row on unique_key (${uniqueKey.mkString(", ")}) — " +
+              "deduplicate the model's output, or use delete+insert"))
 
       case "insert_overwrite" =>
         require(partitionBy.nonEmpty, s"$name: insert_overwrite needs partition_by")
-        // replace exactly the partitions present in the delta — with the
-        // pruned write this is purely O(delta): the delta IS the new
-        // content of its partitions, everything else carries by reference
-        val prunedVals =
-          if (targetAligned.schema != target.schema ||
-              !wh.canWritePruned(name, partitionBy)) None
-          else prunedTouchedVals(delta.select(partitionBy.map(col): _*))
-        prunedVals match {
-          case Some(tv) =>
-            writePossiblyPruned(wh, name,
-              conformTo(targetAligned.schema, delta), partitionBy, prunedVals)
-          case None =>
-            val keep = targetAligned.join(
-              delta.select(partitionBy.map(col): _*).distinct(),
-              partitionBy, "left_anti")
-            wh.writeTable(name,
-              keep.unionByName(conformTo(keep.schema, delta)), partitionBy)
+        // replace exactly the partitions present in the delta
+        if (targetAligned.schema == target.schema && wh.canWritePruned(name, partitionBy)) {
+          // write first, purely O(delta): the delta IS the new content of
+          // its partitions, the leaf dirs it wrote name them (a null
+          // value's dir included), and every other stored leaf carries
+          // by reference — no probe query ahead of the write
+          val (rewritten, carriedParts, linked) = wh.writeTablePruned(name,
+            conformTo(targetAligned.schema, delta), partitionBy)
+          lastPrunedWrite.set(Some((name, rewritten, carriedParts, linked)))
+        } else {
+          // null-safe on the partition columns, so a null partition in
+          // the delta replaces the stored null partition too
+          val dp = partitionBy.map(c => s"__graft_p_$c")
+          val keep = targetAligned.join(
+            delta.select(partitionBy.zip(dp).map { case (c, d) => col(c).as(d) }: _*)
+              .distinct(),
+            partitionBy.zip(dp).map { case (c, d) => col(c) <=> col(d) }.reduce(_ && _),
+            "left_anti")
+          wh.writeTable(name,
+            keep.unionByName(conformTo(keep.schema, delta)), partitionBy)
         }
 
       case s if s.startsWith("microbatch:") =>
@@ -351,12 +375,14 @@ object Materializer {
     * via [[Warehouse.canWritePruned]] before plan construction).
     */
   private def writePossiblyPruned(wh: Warehouse, name: String, df: DataFrame,
-      partitionBy: Seq[String], prunedVals: Option[Set[Seq[String]]]): Unit =
+      partitionBy: Seq[String], prunedVals: Option[Set[Seq[String]]],
+      check: () => Unit): Unit =
     prunedVals match {
       case Some(tv) =>
-        val (carriedParts, linked) = wh.writeTablePruned(name, df, partitionBy, tv)
-        lastPrunedWrite.set(Some((name, tv.size, carriedParts, linked)))
-      case None => wh.writeTable(name, df, partitionBy)
+        val (rewritten, carriedParts, linked) =
+          wh.writeTablePruned(name, df, partitionBy, Some(tv), check)
+        lastPrunedWrite.set(Some((name, rewritten, carriedParts, linked)))
+      case None => wh.writeTable(name, df, partitionBy, check = check)
     }
 
   /** (name, partitionsRewritten, partitionsCarried, filesLinked) of the
@@ -620,7 +646,7 @@ object Materializer {
       // execution total; write volume = open rows + this batch's
       // closed rows.
       wh.writeTablePruned(name, applied.withColumn(SnapPartCol, snapPartValue),
-        Seq(SnapPartCol), rewriteVals = Set(Seq("open")))
+        Seq(SnapPartCol), rewriteVals = Some(Set(Seq("open"))))
       return
     }
 

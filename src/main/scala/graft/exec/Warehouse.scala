@@ -172,7 +172,17 @@ final class Warehouse(val spark: SparkSession, val root: String,
     */
   def writeTable(name: String, df: DataFrame, partitionBy: Seq[String] = Nil,
       clusterBy: Seq[String] = Nil, fileFormat: String = "parquet",
-      hideCols: Seq[String] = Nil): Unit = {
+      hideCols: Seq[String] = Nil,
+      /** Runs once the data is written, before the commit; a throw
+        * refuses the write (see [[uncommittedOnError]]). */
+      check: () => Unit = () => ()): Unit = {
+    replaceCommit(name, df, partitionBy, clusterBy, fileFormat, hideCols, check); ()
+  }
+
+  /** [[writeTable]], returning the commit dir it wrote. */
+  private def replaceCommit(name: String, df: DataFrame, partitionBy: Seq[String],
+      clusterBy: Seq[String], fileFormat: String, hideCols: Seq[String],
+      check: () => Unit): String = {
     val fmt = checkFormat(fileFormat)
     val v = lock.synchronized(relations.get(name).map(_.nextVersion).getOrElse(0))
     val path = s"$root/$name/v$v"
@@ -182,32 +192,28 @@ final class Warehouse(val spark: SparkSession, val root: String,
         df.repartitionByRange(cols: _*).sortWithinPartitions(cols: _*)
       } else df
     val writer = clustered.write.mode(SaveMode.Overwrite).format(fmt)
-    (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-      .save(path)
+    uncommittedOnError(path) {
+      (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
+        .save(path)
+      check()
+    }
     commit(name, RelState(Seq(path), v + 1, isView = false, fmt = fmt,
       hide = hideCols, schema = Some(dataSchema(df, partitionBy))))
+    path
   }
 
-  /** Partition-pruned replace: write ONLY the `touchedVals` partitions'
-    * new content into the fresh version dir and carry every other
-    * partition of the previous snapshot BY REFERENCE — hard links to
-    * the prior commit dirs' data files (the server-side-copy /
-    * metadata-only operation on object storage), so write volume is
-    * O(touched partitions), never O(table). Old version dirs stay
-    * byte-intact (links share storage), preserving the in-flight-reader
-    * and vacuum-fence guarantees of the versioned layout.
-    *
-    * `touchedVals` are string-rendered partition tuples in
-    * `partitionBy` order; the caller guarantees they are hive-dir-safe
-    * (no characters hive escapes) and that `touched` holds the full
-    * new content of exactly those partitions. Throws
-    * [[Warehouse.PrunedWriteUnsupported]] BEFORE writing anything if a
-    * prior commit dir does not conform to the expected partition
-    * layout (e.g. the table was previously written unpartitioned) —
-    * callers fall back to the full rewrite.
-    *
-    * Returns (partitionsCarried, filesLinked) for write-volume gates.
-    */
+  /** Run the data half of a write into the fresh version dir `path`.
+    * When it throws (a failed task, or a write's check such as the
+    * merge's duplicate-key refusal) the dir is deleted: nothing names
+    * it, so it would only hold scratch until a vacuum. */
+  private def uncommittedOnError[T](path: String)(body: => T): T =
+    try body
+    catch {
+      case e: Throwable =>
+        Warehouse.deleteTree(new java.io.File(path))
+        throw e
+    }
+
   /** True when [[writeTablePruned]] can run for this relation: it is a
     * stored table whose every commit dir nests exactly
     * `partitionBy.size` levels of `col=val` dirs before data files.
@@ -264,16 +270,41 @@ final class Warehouse(val spark: SparkSession, val root: String,
     walk(src, Nil)
   }
 
+  /** Partition-pruned replace: write ONLY the touched partitions' new
+    * content into the fresh version dir and carry every other partition
+    * of the previous snapshot BY REFERENCE — hard links to the prior
+    * commit dirs' data files (the server-side-copy / metadata-only
+    * operation on object storage), so write volume is O(touched
+    * partitions), never O(table). Old version dirs stay byte-intact
+    * (links share storage), preserving the in-flight-reader and
+    * vacuum-fence guarantees of the versioned layout.
+    *
+    * Throws [[Warehouse.PrunedWriteUnsupported]] BEFORE writing anything
+    * if a prior commit dir does not conform to the expected partition
+    * layout (e.g. the table was previously written unpartitioned) —
+    * callers check [[canWritePruned]] first and take the full rewrite.
+    *
+    * Returns (partitionsRewritten, partitionsCarried, filesLinked) for
+    * write-volume gates.
+    */
   def writeTablePruned(name: String, touched: DataFrame,
       partitionBy: Seq[String],
-      /** Partition values the DataFrame REWRITES in full — every other
-        * stored leaf is carried by hard link. A carried leaf whose
-        * value the df also writes is legal and means APPEND: the old
-        * files are linked (version-prefixed names) next to the newly
-        * written ones — the snapshot path appends new closed rows to
-        * immutable closed_<date> partitions this way. */
-      rewriteVals: Set[Seq[String]]): (Int, Int) = {
-    val touchedVals = rewriteVals
+      /** Partition tuples (hive dir values, `partitionBy` order) the
+        * DataFrame REWRITES in full; every other stored leaf is carried
+        * by hard link. A carried leaf whose value the df also writes is
+        * legal and means APPEND: the old files are linked
+        * (version-prefixed names) next to the newly written ones — the
+        * snapshot path appends new closed rows to immutable
+        * closed_<date> partitions this way. The caller guarantees
+        * `touched` holds the full new content of these partitions.
+        *
+        * None = the partitions this write produces: the leaf dirs are
+        * read back after the write, so `touched` needs no probe and
+        * any value (a null's `__HIVE_DEFAULT_PARTITION__` too) compares
+        * dir name to dir name — the insert_overwrite apply. */
+      rewriteVals: Option[Set[Seq[String]]] = None,
+      /** As [[writeTable]]'s `check`. */
+      check: () => Unit = () => ()): (Int, Int, Int) = {
     require(partitionBy.nonEmpty, "writeTablePruned needs partition columns")
     val st = lock.synchronized(relations.getOrElse(name,
       throw new IllegalArgumentException(s"unknown relation: $name")))
@@ -286,46 +317,57 @@ final class Warehouse(val spark: SparkSession, val root: String,
 
     val v = st.nextVersion
     val path = s"$root/$name/v$v"
-    touched.write.mode(SaveMode.Overwrite).format(st.fmt)
-      .partitionBy(partitionBy: _*).save(path)
-
-    var linked = 0
-    val carried = scala.collection.mutable.Set[Seq[String]]()
-    for ((srcV, ls) <- srcLeaves; (values, leafDir) <- ls
-         if !touchedVals.contains(values)) {
-      carried += values
-      val destDir = java.nio.file.Paths.get(path +
-        values.zip(partitionBy).map { case (vv, c) => s"/$c=$vv" }.mkString)
-      java.nio.file.Files.createDirectories(destDir)
-      for (f <- Option(leafDir.listFiles()).getOrElse(Array.empty)
-           if f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith(".")) {
-        val dest = destDir.resolve(s"${srcV}_${f.getName}")
-        try java.nio.file.Files.createLink(dest, f.toPath)
-        catch { case _: UnsupportedOperationException | _: java.io.IOException =>
-          java.nio.file.Files.copy(f.toPath, dest,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    val (rewritten, carried, linked) = uncommittedOnError(path) {
+      touched.write.mode(SaveMode.Overwrite).format(st.fmt)
+        .partitionBy(partitionBy: _*).save(path)
+      check()
+      val touchedVals = rewriteVals.getOrElse(
+        partitionLeaves(name, new java.io.File(path), partitionBy).map(_._1).toSet)
+      var linked = 0
+      val carried = scala.collection.mutable.Set[Seq[String]]()
+      for ((srcV, ls) <- srcLeaves; (values, leafDir) <- ls
+           if !touchedVals.contains(values)) {
+        carried += values
+        val destDir = java.nio.file.Paths.get(path +
+          values.zip(partitionBy).map { case (vv, c) => s"/$c=$vv" }.mkString)
+        java.nio.file.Files.createDirectories(destDir)
+        for (f <- Option(leafDir.listFiles()).getOrElse(Array.empty)
+             if f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith(".")) {
+          val dest = destDir.resolve(s"${srcV}_${f.getName}")
+          try java.nio.file.Files.createLink(dest, f.toPath)
+          catch { case _: UnsupportedOperationException | _: java.io.IOException =>
+            java.nio.file.Files.copy(f.toPath, dest,
+              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+          }
+          linked += 1
         }
-        linked += 1
       }
+      (touchedVals.size, carried.size, linked)
     }
     commit(name, st.copy(paths = Seq(path), nextVersion = v + 1,
       schema = Some(dataSchema(touched, partitionBy))))
-    (carried.size, linked)
+    (rewritten, carried, linked)
   }
 
   /** Append a delta (new commit dir; no rewrite of existing data).
     * The delta inherits the relation's existing file format.
     */
   def appendTable(name: String, df: DataFrame): Unit = {
+    appendCommit(name, df); ()
+  }
+
+  /** [[appendTable]], returning the commit dir it wrote. */
+  private def appendCommit(name: String, df: DataFrame): String = {
     val st = lock.synchronized(relations.get(name)).getOrElse {
-      return writeTable(name, df)
+      return replaceCommit(name, df, Nil, Nil, "parquet", Nil, () => ())
     }
     val path = s"$root/$name/v${st.nextVersion}"
-    df.write.mode(SaveMode.Overwrite).format(st.fmt).save(path)
+    uncommittedOnError(path)(df.write.mode(SaveMode.Overwrite).format(st.fmt).save(path))
     // the schema stays: Spark reads a commit list with the schema of its
     // oldest commit's files (an unrecorded one stays inferred)
     commit(name, st.copy(paths = st.paths :+ path, nextVersion = st.nextVersion + 1))
     if (maxCommits > 0 && commitCount(name) > maxCommits) compact(name)
+    path
   }
 
   /** Register a (lazy) view — Catalyst composes the plan into
@@ -352,7 +394,8 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * `create_view_as` macros (reference: the adapter executes the
     * rendered statement; here CREATE/DROP/INSERT route onto warehouse
     * relations, anything else runs as a plain Spark query). Returns
-    * rows affected where knowable, else -1.
+    * rows affected where knowable (CTAS and INSERT on parquet, from file
+    * footers), else -1.
     */
   def executeSql(sql: String): Long = {
     val ctas = """(?is)^\s*create\s+(?:or\s+replace\s+)?(?:temp(?:orary)?\s+)?table\s+([\w.]+)\s+as\s+(.*)$""".r
@@ -366,9 +409,10 @@ final class Warehouse(val spark: SparkSession, val root: String,
         createView(name, spark.sql(select)); -1L
       case dropStmt(name) => drop(name); -1L
       case insert(name, select) =>
-        val df = spark.sql(select)
-        val n = df.count()
-        appendTable(name, df); n
+        // rows affected from the appended dir's footers: the SELECT runs
+        // once, in the write
+        val path = appendCommit(name, spark.sql(select))
+        if (formatOf(name) == "parquet") footerRows(Seq(path)) else -1L
       case other => spark.sql(other).count()
     }
   }
@@ -434,13 +478,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
     val orphans = Option(dir.listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("v")
         && !live(f.getName) && f.lastModified() < fence)
-    orphans.foreach { o =>
-      def rm(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rm)
-        f.delete(): Unit
-      }
-      rm(o)
-    }
+    orphans.foreach(Warehouse.deleteTree)
     orphans.length
   }
 
@@ -457,23 +495,26 @@ final class Warehouse(val spark: SparkSession, val root: String,
     val st = lock.synchronized(relations.getOrElse(name,
       throw new IllegalArgumentException(s"unknown relation: $name")))
     if (st.isView || st.isCatalog || st.paths.isEmpty || st.fmt != "parquet") -1L
-    else {
-      val conf = spark.sparkContext.hadoopConfiguration
-      def footerRows(dir: org.apache.hadoop.fs.Path): Long =
-        dir.getFileSystem(conf).listStatus(dir).iterator
-          .filterNot(f => f.getPath.getName.startsWith("_") ||
-            f.getPath.getName.startsWith("."))
-          .map { f =>
-            if (f.isDirectory) footerRows(f.getPath)
-            else if (!f.getPath.getName.endsWith(".parquet")) 0L
-            else {
-              val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf)
-              val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in, footerOptions)
-              try reader.getRecordCount finally reader.close()
-            }
-          }.sum
-      st.paths.iterator.map(p => footerRows(new org.apache.hadoop.fs.Path(p))).sum
-    }
+    else footerRows(st.paths)
+  }
+
+  /** Rows in the parquet files under `paths`, from footers only. */
+  private def footerRows(paths: Seq[String]): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    def dirRows(dir: org.apache.hadoop.fs.Path): Long =
+      dir.getFileSystem(conf).listStatus(dir).iterator
+        .filterNot(f => f.getPath.getName.startsWith("_") ||
+          f.getPath.getName.startsWith("."))
+        .map { f =>
+          if (f.isDirectory) dirRows(f.getPath)
+          else if (!f.getPath.getName.endsWith(".parquet")) 0L
+          else {
+            val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf)
+            val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in, footerOptions)
+            try reader.getRecordCount finally reader.close()
+          }
+        }.sum
+    paths.iterator.map(p => dirRows(new org.apache.hadoop.fs.Path(p))).sum
   }
 
   /** Footer read options, built once from the session's Hadoop conf
@@ -505,13 +546,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
     // managed location persists — clear it or CTAS refuses the name
     val loc = new java.io.File(
       new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath, name)
-    if (loc.exists()) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(loc)
-    }
+    Warehouse.deleteTree(loc)
     df.write.mode(SaveMode.Overwrite)
       .bucketBy(numBuckets, bucketBy.head, bucketBy.tail: _*)
       .sortBy(bucketBy.head, bucketBy.tail: _*)
@@ -635,6 +670,12 @@ object Warehouse {
     * pruned write needs — callers fall back to the full rewrite.
     */
   final class PrunedWriteUnsupported(msg: String) extends RuntimeException(msg)
+
+  /** Delete a file or directory tree; a missing path is a no-op. */
+  private def deleteTree(f: java.io.File): Unit = {
+    val cs = f.listFiles(); if (cs != null) cs.foreach(deleteTree)
+    f.delete(): Unit
+  }
 
   /** Commit-manifest write protocol (crash-consistent): stage the new
     * manifest beside the live one — fsynced, so its CONTENT is durable

@@ -1,13 +1,15 @@
 package graft.exec
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Partition-pruned write edge cases beyond the m40 happy-path gate:
   * the guards that route a merge BACK to the full rewrite (layout
-  * mismatch, unsafe/null partition values, >256 touched partitions)
-  * and the carried-by-reference invariants (old commit intact,
-  * key-move partitions rewritten).
+  * mismatch, unsafe/null partition values, >256 touched partitions),
+  * the carried-by-reference invariants (old commit intact, key-move
+  * partitions rewritten), and insert_overwrite's write-first apply,
+  * which needs none of the merge's value guards.
   */
 class PrunedWriteSpec extends SparkSpec {
 
@@ -23,8 +25,8 @@ class PrunedWriteSpec extends SparkSpec {
     wh.writeTable("t", base, partitionBy = Seq("p"))
     val newContent = base.filter(col("p") === 2)
       .withColumn("payload", lit("updated"))
-    val (carried, linked) = wh.writeTablePruned("t", newContent,
-      Seq("p"), Set(Seq("2")))
+    val (_, carried, linked) = wh.writeTablePruned("t", newContent,
+      Seq("p"), Some(Set(Seq("2"))))
     assert(carried == 4 && linked > 0)
     // read-back: partition 2 replaced, others untouched
     val out = wh.read("t")
@@ -46,8 +48,8 @@ class PrunedWriteSpec extends SparkSpec {
     // touch exactly (p=1, q=2); the other 11 leaf partitions carry
     val touched = df.filter(col("p") === 1 && col("q") === 2)
       .withColumn("payload", lit("upd"))
-    val (carried, linked) = wh.writeTablePruned("t2", touched,
-      Seq("p", "q"), Set(Seq("1", "2")))
+    val (_, carried, linked) = wh.writeTablePruned("t2", touched,
+      Seq("p", "q"), Some(Set(Seq("1", "2"))))
     assert(carried == 11 && linked > 0,
       s"expected 11 carried leaves, got $carried ($linked linked)")
     val out = wh.read("t2")
@@ -62,7 +64,7 @@ class PrunedWriteSpec extends SparkSpec {
     wh.writeTable("t", base, partitionBy = Seq("p"))
     wh.writeTablePruned("t",
       base.filter(col("p") === 1).withColumn("payload", lit("v2")),
-      Seq("p"), Set(Seq("1")))
+      Seq("p"), Some(Set(Seq("1"))))
     // immediate GC (retention fence 0): v0 is an orphan now
     assert(wh.vacuum("t", retainSeconds = 0L) == 1)
     assert(!new java.io.File(s"${wh.root}/t/v0").exists())
@@ -167,5 +169,90 @@ class PrunedWriteSpec extends SparkSpec {
     assert(out.filter(col("id") === 8).select("p", "v").as[(Long, Long)]
       .collect().toSeq == Seq((3L, 999L)))
     assert(out.count() == 100)
+  }
+
+  // ---- insert_overwrite writes first: the leaf dirs the delta wrote
+  // name the partitions it replaces; every other stored leaf carries
+
+  private def rowsOf(df: DataFrame, cols: Seq[String]): Seq[String] =
+    df.select(cols.map(col): _*).collect().map(_.mkString("|")).toSeq.sorted
+
+  /** Store `target`, apply `delta` to it by insert_overwrite, and assert
+    * the result equals plain Spark's answer: the target rows outside the
+    * delta's partitions (compared null-safely), plus the delta. Returns
+    * the pruned-write stats the apply reported. */
+  private def overwriteLikeSpark(wh: Warehouse, name: String, target: DataFrame,
+      delta: DataFrame, partitionBy: Seq[String],
+      onSchemaChange: String = "ignore"): Option[(String, Int, Int, Int)] = {
+    wh.writeTable(name, target, partitionBy)
+    val parts = delta.select(partitionBy.map(c => col(c).as(s"d_$c")): _*).distinct()
+    val expected = rowsOf(
+      target.join(parts, partitionBy.map(c => col(c) <=> col(s"d_$c")).reduce(_ && _),
+        "left_anti").unionByName(delta, allowMissingColumns = true),
+      delta.columns.toSeq)
+    Materializer.lastPrunedWrite.set(None)
+    Materializer.incrementalApply(wh, name, delta, "insert_overwrite", Nil,
+      onSchemaChange, partitionBy)
+    assert(rowsOf(wh.read(name), delta.columns.toSeq) == expected)
+    Materializer.lastPrunedWrite.get()
+  }
+
+  /** 60 rows over p in {0, 1, 2, null}; 12 of them in the null partition. */
+  private def withNulls = (1L to 60L)
+    .map(i => (i, if (i % 5 == 0) None else Some(i % 3), s"old$i"))
+    .toDF("id", "p", "payload")
+
+  test("insert_overwrite replaces the null partition") {
+    val wh = mkWh()
+    val delta = Seq((1000L, Option.empty[Long], "new"), (1001L, Some(1L), "new"))
+      .toDF("id", "p", "payload")
+    val stats = overwriteLikeSpark(wh, "iow_null", withNulls, delta, Seq("p"))
+    assert(stats.map(s => (s._2, s._3)) == Some((2, 2)),
+      s"expected {null, 1} rewritten and {0, 2} carried, got $stats")
+    assert(wh.read("iow_null").filter(col("p").isNull).count() == 1)
+  }
+
+  test("insert_overwrite's full rewrite replaces the null partition too") {
+    val wh = mkWh()
+    // a new delta column under append_new_columns takes the full rewrite
+    val delta = Seq((1000L, Option.empty[Long], "new", "x"))
+      .toDF("id", "p", "payload", "extra")
+    val stats = overwriteLikeSpark(wh, "iow_null_full", withNulls, delta, Seq("p"),
+      onSchemaChange = "append_new_columns")
+    assert(stats.isEmpty, "a schema change must take the full rewrite")
+    assert(wh.read("iow_null_full").filter(col("p").isNull).count() == 1)
+  }
+
+  test("insert_overwrite of an empty delta carries every leaf") {
+    val wh = mkWh()
+    val stats = overwriteLikeSpark(wh, "iow_empty", base, base.limit(0), Seq("p"))
+    val Some((_, rewritten, carried, linked)) = stats
+    assert(rewritten == 0 && carried == 5 && linked > 0, s"got $stats")
+  }
+
+  test("insert_overwrite touching more than 256 partitions stays pruned") {
+    val wh = mkWh()
+    val target = (1L to 900L).map(i => (i, i % 300, s"old$i")).toDF("id", "p", "payload")
+    val delta = (1L to 280L).map(i => (5000L + i, i, "new")).toDF("id", "p", "payload")
+    val stats = overwriteLikeSpark(wh, "iow_wide", target, delta, Seq("p"))
+    assert(stats.map(s => (s._2, s._3)) == Some((280, 20)), s"got $stats")
+  }
+
+  test("insert_overwrite over two partition levels replaces whole leaves") {
+    val wh = mkWh()
+    val target = (1L to 240L).map(i => (i, i % 3, i % 4, s"r$i"))
+      .toDF("id", "p", "q", "payload")
+    val delta = Seq((900L, 1L, 2L, "new"), (901L, 2L, 0L, "new"), (902L, 2L, 0L, "new"))
+      .toDF("id", "p", "q", "payload")
+    val stats = overwriteLikeSpark(wh, "iow_two", target, delta, Seq("p", "q"))
+    assert(stats.map(s => (s._2, s._3)) == Some((2, 10)), s"got $stats")
+  }
+
+  test("insert_overwrite leaves the previous version dir readable standalone") {
+    val wh = mkWh()
+    val delta = base.filter(col("p") === 2).withColumn("payload", lit("v1"))
+    assert(overwriteLikeSpark(wh, "iow_old", base, delta, Seq("p")).isDefined)
+    val v0 = spark.read.parquet(s"${wh.root}/iow_old/v0")
+    assert(rowsOf(v0, base.columns.toSeq) == rowsOf(base, base.columns.toSeq))
   }
 }
