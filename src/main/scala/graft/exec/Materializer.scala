@@ -3,7 +3,7 @@ package graft.exec
 import graft.core._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructType}
 
 /** Materialization strategies — Scala strategy objects in place of the
   * reference's Jinja materialization macros (resolution chain
@@ -199,7 +199,7 @@ object Materializer {
         // stored layout doesn't conform.
         val prunedVals: Option[Set[Seq[String]]] =
           if (partitionBy.isEmpty || targetAligned.schema != target.schema ||
-              !wh.canWritePruned(name, partitionBy)) None
+              !canWritePruned(wh, name, targetAligned, partitionBy)) None
           else prunedTouchedVals(
             delta.select(partitionBy.map(col): _*)
               .unionByName(targetAligned.join(deltaKeys, uniqueKey, "left_semi")
@@ -270,11 +270,14 @@ object Materializer {
       case "insert_overwrite" =>
         require(partitionBy.nonEmpty, s"$name: insert_overwrite needs partition_by")
         // replace exactly the partitions present in the delta
-        if (targetAligned.schema == target.schema && wh.canWritePruned(name, partitionBy)) {
+        if (targetAligned.schema == target.schema &&
+            canWritePruned(wh, name, targetAligned, partitionBy)) {
           // write first, purely O(delta): the delta IS the new content of
           // its partitions, the leaf dirs it wrote name them (a null
           // value's dir included), and every other stored leaf carries
-          // by reference — no probe query ahead of the write
+          // by reference — no probe query ahead of the write. Every
+          // stored leaf bears its value's canonical name (checked by
+          // canWritePruned), so dir names compare as values.
           val (rewritten, carriedParts, linked) = wh.writeTablePruned(name,
             conformTo(targetAligned.schema, delta), partitionBy)
           lastPrunedWrite.set(Some((name, rewritten, carriedParts, linked)))
@@ -315,6 +318,16 @@ object Materializer {
   }
 
   // ---------------------------------------------- pruned-write helpers
+
+  /** [[Warehouse.canWritePruned]] under the partition types `target`
+    * (the relation as read) carries; false when it lacks a partition
+    * column. */
+  private def canWritePruned(wh: Warehouse, name: String, target: DataFrame,
+      partitionBy: Seq[String]): Boolean = {
+    val types = partitionBy.flatMap(c =>
+      target.schema.find(_.name.equalsIgnoreCase(c)).map(_.dataType))
+    types.size == partitionBy.size && wh.canWritePruned(name, partitionBy, types)
+  }
 
   /** Characters we allow in a partition-dir value: the conservative
     * subset hive never escapes, so `cast(col as string)` is exactly
@@ -559,7 +572,7 @@ object Materializer {
     // unpartitioned layout — fall back to the full rewrite, which also
     // MIGRATES the table to the partitioned layout for the next apply.
     val prunedEligible = newCols.isEmpty && droppedCols.isEmpty &&
-      wh.canWritePruned(name, Seq(SnapPartCol))
+      wh.canWritePruned(name, Seq(SnapPartCol), Seq(StringType))
     val current =
       if (prunedEligible)
         wh.readRaw(name).filter(col(SnapPartCol) === "open").drop(SnapPartCol)

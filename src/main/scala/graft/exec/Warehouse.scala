@@ -1,7 +1,7 @@
 package graft.exec
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, StringType, StructType}
 
 /** Spark-backed warehouse: the role the external database plays for the
   * reference (its `adapter`), played here by versioned parquet
@@ -168,21 +168,14 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * scans filtering on those columns — the Delta/Iceberg
     * `OPTIMIZE ... SORT BY` analog, and the cheap half of the 100 TB
     * layout story (bucketing co-locates joins; clustering prunes
-    * scans).
+    * scans). Returns the commit dir it wrote.
     */
   def writeTable(name: String, df: DataFrame, partitionBy: Seq[String] = Nil,
       clusterBy: Seq[String] = Nil, fileFormat: String = "parquet",
       hideCols: Seq[String] = Nil,
       /** Runs once the data is written, before the commit; a throw
         * refuses the write (see [[uncommittedOnError]]). */
-      check: () => Unit = () => ()): Unit = {
-    replaceCommit(name, df, partitionBy, clusterBy, fileFormat, hideCols, check); ()
-  }
-
-  /** [[writeTable]], returning the commit dir it wrote. */
-  private def replaceCommit(name: String, df: DataFrame, partitionBy: Seq[String],
-      clusterBy: Seq[String], fileFormat: String, hideCols: Seq[String],
-      check: () => Unit): String = {
+      check: () => Unit = () => ()): String = {
     val fmt = checkFormat(fileFormat)
     val v = lock.synchronized(relations.get(name).map(_.nextVersion).getOrElse(0))
     val path = s"$root/$name/v$v"
@@ -216,18 +209,43 @@ final class Warehouse(val spark: SparkSession, val root: String,
 
   /** True when [[writeTablePruned]] can run for this relation: it is a
     * stored table whose every commit dir nests exactly
-    * `partitionBy.size` levels of `col=val` dirs before data files.
-    * Callers decide the pruned-vs-full plan on this BEFORE building
-    * either DataFrame.
+    * `partitionBy.size` levels of `col=val` dirs before data files, and
+    * every leaf's dir value is the name a write of its value gives it.
+    * `types` are the partition columns' types as the relation reads
+    * (partition discovery infers them from the dir names). A dir
+    * written from a string '01' reads back as int 1, which a write
+    * names `1`: such a leaf would not compare equal to the dir of the
+    * value that replaces it, so the relation takes the full rewrite
+    * (which renames it). Callers decide the pruned-vs-full plan on this
+    * BEFORE building either DataFrame.
     */
-  def canWritePruned(name: String, partitionBy: Seq[String]): Boolean =
+  def canWritePruned(name: String, partitionBy: Seq[String],
+      types: Seq[DataType]): Boolean = {
+    require(types.size == partitionBy.size, "one type per partition column")
     partitionBy.nonEmpty && lock.synchronized(relations.get(name)).exists { st =>
       !st.isView && !st.isCatalog && st.paths.nonEmpty &&
         (try {
-          st.paths.foreach(p => partitionLeaves(name, new java.io.File(p), partitionBy))
-          true
+          st.paths.forall(p => partitionLeaves(name, new java.io.File(p), partitionBy)
+            .forall(_._1.zip(types).forall { case (dir, t) => canonicalDir(dir, t) }))
         } catch { case _: Warehouse.PrunedWriteUnsupported => false })
     }
+  }
+
+  /** Whether `dir` (a stored partition dir value, hive-escaped) is the
+    * name Spark's writer gives the value it reads back as under `t`:
+    * the writer casts the value to string in the session time zone and
+    * escapes it, and writes a null as the default partition name. */
+  private def canonicalDir(dir: String, t: DataType): Boolean = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+    dir == ExternalCatalogUtils.DEFAULT_PARTITION_NAME || {
+      val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+      val value = ExternalCatalogUtils.unescapePathName(dir)
+      scala.util.Try(Cast(Cast(Literal(value), t, tz), StringType, tz).eval())
+        .toOption.exists(r => r != null &&
+          ExternalCatalogUtils.escapePathName(r.toString) == dir)
+    }
+  }
 
   /** `(partition values, leaf dir)` pairs under one commit dir. */
   private def partitionLeaves(name: String, src: java.io.File,
@@ -350,16 +368,13 @@ final class Warehouse(val spark: SparkSession, val root: String,
   }
 
   /** Append a delta (new commit dir; no rewrite of existing data).
-    * The delta inherits the relation's existing file format.
+    * The delta inherits the relation's existing file format. Returns
+    * the commit dir it wrote (a compaction the append triggers leaves
+    * that dir on disk until a vacuum).
     */
-  def appendTable(name: String, df: DataFrame): Unit = {
-    appendCommit(name, df); ()
-  }
-
-  /** [[appendTable]], returning the commit dir it wrote. */
-  private def appendCommit(name: String, df: DataFrame): String = {
+  def appendTable(name: String, df: DataFrame): String = {
     val st = lock.synchronized(relations.get(name)).getOrElse {
-      return replaceCommit(name, df, Nil, Nil, "parquet", Nil, () => ())
+      return writeTable(name, df)
     }
     val path = s"$root/$name/v${st.nextVersion}"
     uncommittedOnError(path)(df.write.mode(SaveMode.Overwrite).format(st.fmt).save(path))
@@ -394,8 +409,8 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * `create_view_as` macros (reference: the adapter executes the
     * rendered statement; here CREATE/DROP/INSERT route onto warehouse
     * relations, anything else runs as a plain Spark query). Returns
-    * rows affected where knowable (CTAS and INSERT on parquet, from file
-    * footers), else -1.
+    * rows affected where knowable (CTAS, and INSERT on parquet or orc,
+    * from file footers), else -1.
     */
   def executeSql(sql: String): Long = {
     val ctas = """(?is)^\s*create\s+(?:or\s+replace\s+)?(?:temp(?:orary)?\s+)?table\s+([\w.]+)\s+as\s+(.*)$""".r
@@ -411,8 +426,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
       case insert(name, select) =>
         // rows affected from the appended dir's footers: the SELECT runs
         // once, in the write
-        val path = appendCommit(name, spark.sql(select))
-        if (formatOf(name) == "parquet") footerRows(Seq(path)) else -1L
+        footerRows(Seq(appendTable(name, spark.sql(select))))
       case other => spark.sql(other).count()
     }
   }
@@ -498,22 +512,28 @@ final class Warehouse(val spark: SparkSession, val root: String,
     else footerRows(st.paths)
   }
 
-  /** Rows in the parquet files under `paths`, from footers only. */
+  /** Rows in the parquet and orc files under `paths`, from footers
+    * only. */
   private def footerRows(paths: Seq[String]): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
-    def dirRows(dir: org.apache.hadoop.fs.Path): Long =
-      dir.getFileSystem(conf).listStatus(dir).iterator
+    def dirRows(dir: org.apache.hadoop.fs.Path): Long = {
+      val fs = dir.getFileSystem(conf)
+      fs.listStatus(dir).iterator
         .filterNot(f => f.getPath.getName.startsWith("_") ||
           f.getPath.getName.startsWith("."))
         .map { f =>
           if (f.isDirectory) dirRows(f.getPath)
-          else if (!f.getPath.getName.endsWith(".parquet")) 0L
-          else {
+          else if (f.getPath.getName.endsWith(".parquet")) {
             val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf)
             val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in, footerOptions)
             try reader.getRecordCount finally reader.close()
-          }
+          } else if (f.getPath.getName.endsWith(".orc")) {
+            val reader = org.apache.orc.OrcFile.createReader(f.getPath,
+              org.apache.orc.OrcFile.readerOptions(conf).filesystem(fs))
+            try reader.getNumberOfRows finally reader.close()
+          } else 0L
         }.sum
+    }
     paths.iterator.map(p => dirRows(new org.apache.hadoop.fs.Path(p))).sum
   }
 

@@ -267,7 +267,7 @@ object StreamMaterializer {
           val bf = keys.stat.bloomFilter("l_orderkey", 1000000L, 1e-4)
           seenOrders = Some(seenOrders.map { p => p.mergeInPlace(bf); p }.getOrElse(bf))
         }
-        wh.appendTable(name, pairMaintenance(batch))
+        wh.appendTable(name, pairMaintenance(batch)); ()
       }
       .start()
   }
@@ -289,7 +289,7 @@ object StreamMaterializer {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        wh.appendTable(name, graft.queries.Ext4.driftBucketCounts(batch))
+        wh.appendTable(name, graft.queries.Ext4.driftBucketCounts(batch)); ()
       }
       .start()
 
@@ -312,7 +312,7 @@ object StreamMaterializer {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        wh.appendTable(name, graft.queries.Ext6.cmsCellDeltas(batch, keyCol))
+        wh.appendTable(name, graft.queries.Ext6.cmsCellDeltas(batch, keyCol)); ()
       }
       .start()
 
@@ -336,6 +336,7 @@ object StreamMaterializer {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (outputMode == "complete") wh.writeTable(name, batch)
         else wh.appendTable(name, batch)
+        ()
       }
       .start()
 }

@@ -56,7 +56,7 @@ object StreamScaleBench {
           .outputMode("append")
           .option("checkpointLocation", ckpt)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (b: DataFrame, _: Long) => wh.appendTable(name, b) }
+          .foreachBatch { (b: DataFrame, _: Long) => wh.appendTable(name, b); () }
           .start()
       }
       val inputRows = docs.count()

@@ -3,19 +3,26 @@ package graft.exec
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 
 /** Partition-pruned write edge cases beyond the m40 happy-path gate:
   * the guards that route a merge BACK to the full rewrite (layout
   * mismatch, unsafe/null partition values, >256 touched partitions),
   * the carried-by-reference invariants (old commit intact, key-move
-  * partitions rewritten), and insert_overwrite's write-first apply,
-  * which needs none of the merge's value guards.
+  * partitions rewritten), insert_overwrite's write-first apply, which
+  * needs none of the merge's value guards, and the guard both share: a
+  * stored leaf whose dir name is not its value's canonical name.
   */
 class PrunedWriteSpec extends SparkSpec {
 
   import spark.implicits._
 
   private def mkWh() = new Warehouse(spark, tmpDir("pw_wh"))
+
+  /** canWritePruned with every partition column read as an int, as
+    * discovery reads the small integer dirs these tests write. */
+  private def layoutOk(wh: Warehouse, name: String, partitionBy: Seq[String]) =
+    wh.canWritePruned(name, partitionBy, partitionBy.map(_ => IntegerType))
 
   private def base = (1L to 300L).map(i => (i, i % 5, s"r$i"))
     .toDF("id", "p", "payload")
@@ -44,7 +51,7 @@ class PrunedWriteSpec extends SparkSpec {
     val df = (1L to 240L).map(i => (i, i % 3, i % 4, s"r$i"))
       .toDF("id", "p", "q", "payload")
     wh.writeTable("t2", df, partitionBy = Seq("p", "q"))
-    assert(wh.canWritePruned("t2", Seq("p", "q")))
+    assert(layoutOk(wh, "t2", Seq("p", "q")))
     // touch exactly (p=1, q=2); the other 11 leaf partitions carry
     val touched = df.filter(col("p") === 1 && col("q") === 2)
       .withColumn("payload", lit("upd"))
@@ -78,13 +85,13 @@ class PrunedWriteSpec extends SparkSpec {
   test("canWritePruned: false for unpartitioned layout and for views") {
     val wh = mkWh()
     wh.writeTable("flat", base) // no partitionBy -> data files at depth 0
-    assert(!wh.canWritePruned("flat", Seq("p")))
+    assert(!layoutOk(wh, "flat", Seq("p")))
     wh.createView("v", base)
-    assert(!wh.canWritePruned("v", Seq("p")))
+    assert(!layoutOk(wh, "v", Seq("p")))
     wh.writeTable("part", base, partitionBy = Seq("p"))
-    assert(wh.canWritePruned("part", Seq("p")))
+    assert(layoutOk(wh, "part", Seq("p")))
     // depth mismatch: asking for two levels over a one-level layout
-    assert(!wh.canWritePruned("part", Seq("p", "id")))
+    assert(!layoutOk(wh, "part", Seq("p", "id")))
   }
 
   test("canWritePruned: false when stored dirs carry a DIFFERENT partition column") {
@@ -94,8 +101,8 @@ class PrunedWriteSpec extends SparkSpec {
     // guard must reject on the dir NAME, not just nesting depth
     wh.writeTable("renamed", base.withColumnRenamed("p", "region"),
       partitionBy = Seq("region"))
-    assert(!wh.canWritePruned("renamed", Seq("yr")))
-    assert(wh.canWritePruned("renamed", Seq("region")))
+    assert(!layoutOk(wh, "renamed", Seq("yr")))
+    assert(layoutOk(wh, "renamed", Seq("region")))
   }
 
   test("canWritePruned: false when stored layout is DEEPER than partition_by") {
@@ -104,11 +111,11 @@ class PrunedWriteSpec extends SparkSpec {
     // data files — a carried leaf would link zero files (silent loss)
     wh.writeTable("two", base.withColumn("q", col("id") % 2),
       partitionBy = Seq("p", "q"))
-    assert(!wh.canWritePruned("two", Seq("p")))
-    assert(wh.canWritePruned("two", Seq("p", "q")))
+    assert(!layoutOk(wh, "two", Seq("p")))
+    assert(layoutOk(wh, "two", Seq("p", "q")))
     // and stored [p] with new [q, p]: first-level name mismatch
     wh.writeTable("one", base, partitionBy = Seq("p"))
-    assert(!wh.canWritePruned("one", Seq("q")))
+    assert(!layoutOk(wh, "one", Seq("q")))
   }
 
   test("merge falls back to full rewrite when partition values are unsafe") {
@@ -178,17 +185,22 @@ class PrunedWriteSpec extends SparkSpec {
     df.select(cols.map(col): _*).collect().map(_.mkString("|")).toSeq.sorted
 
   /** Store `target`, apply `delta` to it by insert_overwrite, and assert
-    * the result equals plain Spark's answer: the target rows outside the
-    * delta's partitions (compared null-safely), plus the delta. Returns
+    * the result equals plain Spark's answer: the stored rows outside the
+    * delta's partitions (compared null-safely), plus the delta. Both
+    * sides take the types the stored relation reads back with
+    * (partition discovery reads a string '01' dir as int 1). Returns
     * the pruned-write stats the apply reported. */
   private def overwriteLikeSpark(wh: Warehouse, name: String, target: DataFrame,
       delta: DataFrame, partitionBy: Seq[String],
       onSchemaChange: String = "ignore"): Option[(String, Int, Int, Int)] = {
     wh.writeTable(name, target, partitionBy)
-    val parts = delta.select(partitionBy.map(c => col(c).as(s"d_$c")): _*).distinct()
+    val stored = wh.read(name)
+    val deltaAsStored = delta.select(delta.columns.toSeq.map(c =>
+      stored.schema.find(_.name == c).fold(col(c))(f => col(c).cast(f.dataType).as(c))): _*)
+    val parts = deltaAsStored.select(partitionBy.map(c => col(c).as(s"d_$c")): _*).distinct()
     val expected = rowsOf(
-      target.join(parts, partitionBy.map(c => col(c) <=> col(s"d_$c")).reduce(_ && _),
-        "left_anti").unionByName(delta, allowMissingColumns = true),
+      stored.join(parts, partitionBy.map(c => col(c) <=> col(s"d_$c")).reduce(_ && _),
+        "left_anti").unionByName(deltaAsStored, allowMissingColumns = true),
       delta.columns.toSeq)
     Materializer.lastPrunedWrite.set(None)
     Materializer.incrementalApply(wh, name, delta, "insert_overwrite", Nil,
@@ -254,5 +266,60 @@ class PrunedWriteSpec extends SparkSpec {
     assert(overwriteLikeSpark(wh, "iow_old", base, delta, Seq("p")).isDefined)
     val v0 = spark.read.parquet(s"${wh.root}/iow_old/v0")
     assert(rowsOf(v0, base.columns.toSeq) == rowsOf(base, base.columns.toSeq))
+  }
+
+  // ---- a stored leaf must bear its value's canonical dir name for dir
+  // names to compare as values; one that does not takes the full rewrite
+
+  /** 40 rows over the string partition p in {'01', '02'}. */
+  private def zeroPadded = (1L to 40L).map(i => (i, f"${i % 2 + 1}%02d", s"old$i"))
+    .toDF("id", "p", "payload")
+
+  test("canWritePruned: false when a stored leaf's name is not its value's canonical name") {
+    val wh = mkWh()
+    wh.writeTable("padded", zeroPadded, partitionBy = Seq("p"))
+    // discovery reads p=01 as int 1, which a write names p=1
+    assert(wh.read("padded").schema("p").dataType == IntegerType)
+    assert(!wh.canWritePruned("padded", Seq("p"), Seq(IntegerType)))
+    assert(wh.canWritePruned("padded", Seq("p"), Seq(org.apache.spark.sql.types.StringType)))
+  }
+
+  test("insert_overwrite replaces a zero-padded string partition") {
+    val wh = mkWh()
+    val delta = Seq((1000L, "01", "new")).toDF("id", "p", "payload")
+    val stats = overwriteLikeSpark(wh, "iow_padded", zeroPadded, delta, Seq("p"))
+    assert(stats.isEmpty, "a non-canonical stored leaf must take the full rewrite")
+    assert(wh.read("iow_padded").filter(col("p") === 1).count() == 1)
+    // the full rewrite renamed the leaves p=1, p=2: the next apply is pruned
+    val again = Seq((1001L, "02", "newer")).toDF("id", "p", "payload")
+    Materializer.incrementalApply(wh, "iow_padded", again, "insert_overwrite", Nil,
+      "ignore", Seq("p"))
+    assert(Materializer.lastPrunedWrite.get().map(s => (s._2, s._3)) == Some((1, 1)))
+    assert(rowsOf(wh.read("iow_padded"), Seq("id", "p", "payload")) ==
+      Seq("1000|1|new", "1001|2|newer"))
+  }
+
+  test("insert_overwrite replaces a decimal partition stored with trailing zeros") {
+    val wh = mkWh()
+    // p=1.50 reads back as double 1.5, which a write names p=1.5
+    val target = (1L to 40L).map(i => (i, if (i % 2 == 0) "1.50" else "2.25", s"old$i"))
+      .toDF("id", "p", "payload").withColumn("p", col("p").cast("decimal(4,2)"))
+    val delta = Seq((1000L, "1.50", "new")).toDF("id", "p", "payload")
+      .withColumn("p", col("p").cast("decimal(4,2)"))
+    val stats = overwriteLikeSpark(wh, "iow_decimal", target, delta, Seq("p"))
+    assert(stats.isEmpty, "a non-canonical stored leaf must take the full rewrite")
+    assert(wh.read("iow_decimal").filter(col("p") === 1.5).count() == 1)
+  }
+
+  test("pruned merge keeps the rows of a zero-padded string partition") {
+    val wh = mkWh()
+    wh.writeTable("mg_padded", zeroPadded, partitionBy = Seq("p"))
+    val expected = rowsOf(wh.read("mg_padded"), Seq("id", "p", "payload")) :+ "1000|1|new"
+    // a new key into partition '01', and an update of key 2 (partition '01')
+    val delta = Seq((1000L, "01", "new"), (2L, "01", "upd")).toDF("id", "p", "payload")
+    Materializer.incrementalApply(wh, "mg_padded", delta, "merge", Seq("id"), "ignore",
+      Seq("p"))
+    assert(rowsOf(wh.read("mg_padded"), Seq("id", "p", "payload")) ==
+      expected.map(r => if (r == "2|1|old2") "2|1|upd" else r).sorted)
   }
 }

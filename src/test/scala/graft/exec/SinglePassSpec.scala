@@ -85,36 +85,38 @@ class SinglePassSpec extends SparkSpec {
     }
   }
 
-  test("executeSql INSERT evaluates its SELECT once and counts rows from footers") {
-    val wh = new Warehouse(spark, tmpDir("sp_wh"))
-    wh.writeTable("ins", spark.range(3).toDF("id"))
-    // executions whose plan carries the SELECT's marker literal;
-    // listener events arrive in order, so once the end marker's
-    // execution is seen every execution of the statement has been
-    val selects = new java.util.concurrent.atomic.AtomicInteger
-    val ended = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit = {
-        val plan = qe.analyzed.toString
-        if (plan.contains("ins_end_marker")) ended.countDown()
-        else if (plan.contains("ins_select_marker")) selects.incrementAndGet()
+  for (fmt <- Seq("parquet", "orc"))
+    test(s"executeSql INSERT ($fmt) evaluates its SELECT once and counts rows from " +
+        "footers") {
+      val wh = new Warehouse(spark, tmpDir("sp_wh"))
+      wh.writeTable("ins", spark.range(3).toDF("id"), fileFormat = fmt)
+      // executions whose plan carries the SELECT's marker literal;
+      // listener events arrive in order, so once the end marker's
+      // execution is seen every execution of the statement has been
+      val selects = new java.util.concurrent.atomic.AtomicInteger
+      val ended = new java.util.concurrent.CountDownLatch(1)
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit = {
+          val plan = qe.analyzed.toString
+          if (plan.contains("ins_end_marker")) ended.countDown()
+          else if (plan.contains("ins_select_marker")) selects.incrementAndGet()
+        }
+        override def onFailure(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
       }
-      override def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+      spark.listenerManager.register(listener)
+      val n =
+        try {
+          val n = wh.executeSql("INSERT INTO ins SELECT id FROM range(10, 15) " +
+            "WHERE 'ins_select_marker' IS NOT NULL")
+          Seq(1).toDF("ins_end_marker").collect()
+          assert(ended.await(60, java.util.concurrent.TimeUnit.SECONDS),
+            "listener never saw the end marker")
+          n
+        } finally spark.listenerManager.unregister(listener)
+      assert(n == 5)
+      assert(selects.get == 1, s"the SELECT ran ${selects.get} times")
+      assert(wh.formatOf("ins") == fmt && wh.read("ins").count() == 8)
     }
-    spark.listenerManager.register(listener)
-    val n =
-      try {
-        val n = wh.executeSql("INSERT INTO ins SELECT id FROM range(10, 15) " +
-          "WHERE 'ins_select_marker' IS NOT NULL")
-        Seq(1).toDF("ins_end_marker").collect()
-        assert(ended.await(60, java.util.concurrent.TimeUnit.SECONDS),
-          "listener never saw the end marker")
-        n
-      } finally spark.listenerManager.unregister(listener)
-    assert(n == 5)
-    assert(selects.get == 1, s"the SELECT ran ${selects.get} times")
-    assert(wh.read("ins").count() == 8)
-  }
 }
