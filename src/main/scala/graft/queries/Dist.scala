@@ -27,6 +27,33 @@ import org.apache.spark.sql.functions._
   * `offset + local prefix` is exactly the global prefix sum. With a
   * unique (key, tiebreak) the derived rank is exactly `ROW_NUMBER`,
   * and `ntileFromRank` reproduces SQL `NTILE` from the closed form.
+  *
+  * The rules for the other side of the suite: the queries whose
+  * ordered or global work runs over a DIMENSION-BOUNDED result (per
+  * nation, per (event type, bin), per decile). There the cost is not
+  * compute but stages: each exchange or broadcast is one more AQE
+  * stage, and so one more Spark job of fixed overhead (q198, q203 and
+  * q218 follow these rules):
+  *
+  *   1. Group statistics come from the rollup, not from a
+  *      re-aggregation joined back. A per-group figure that the rows
+  *      of a group need (a count, a total) is a window partitioned by
+  *      the group over the rolled-up input, and every per-group output
+  *      comes from one aggregate over that input.
+  *   2. Gather a dimension-bounded result into one partition once
+  *      (`repartition(1)` after the aggregate), then finish it there:
+  *      totals and running sums as windows, probe selection as a
+  *      grouped aggregate, and the final sort all run in that partition
+  *      with no further exchange. So: no broadcast of a 1-row total, no
+  *      join back to the bins, no range-sampling sort job. Never gather
+  *      fact-sized input, and name the bound in a comment at each
+  *      gather. An unpartitioned window over the gathered rows is
+  *      declared in ExplainAudit's bounded-domain allowlist.
+  *   3. Build each expression once in the plan. A derived value used in
+  *      several places gets its own projection and is referenced by
+  *      column. A Scala `Column` val reused in several expressions is
+  *      copied into each of them, and Catalyst analyzes, optimizes and
+  *      plans every copy on each run (q199's uniforms: 256 copies).
   */
 object Dist {
 

@@ -9,6 +9,56 @@ import org.apache.spark.sql.expressions.Window
   */
 object Ext2 {
 
+  /** q140's three PageRank rounds over the cached co-purchase `edges`
+    * and node degrees `deg`, ending in the lazy top-20 by rank.
+    *
+    * The rounds form a CHAIN with single references: rank_i is consumed
+    * only by round i+1, and rank_3 only by the top-20 head. So ONE final
+    * action executes each round exactly once. Persisting and counting
+    * each round cost 2 extra jobs per round (23 jobs per run measured).
+    * An UNBOUNDED iteration would still persist per round to cut lineage
+    * (Iterative.fixpointRoundCounts does that); 3 fixed rounds make a
+    * depth-3 plan.
+    *
+    * Each round joins the node-sized rank/share table to the edges.
+    * AQE's size estimate for the chained round subtree let that join
+    * flip so a round's probe ran in the ONE coalesced rank partition
+    * (stage-profiled: 2 serial ~400 ms single-task stages), so the
+    * node-sized side is broadcast explicitly and every round probes the
+    * cached edge partitions in parallel. The hint holds only while the
+    * node table fits the session's broadcast threshold
+    * (`spark.sql.autoBroadcastJoinThreshold`), measured as the cached
+    * degree index's in-memory size: rank and share tables carry one
+    * row per node, as `deg` does. Above it, the joins are left to the
+    * planner; the node table grows with the part count, and at cluster
+    * scale a forced broadcast of it would exhaust driver memory.
+    */
+  private[queries] def pagerankTop(s: org.apache.spark.sql.SparkSession,
+      edges: org.apache.spark.sql.DataFrame,
+      deg: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val n = deg.count() // node count: 1-row driver scalar off the cached index
+    // a negative threshold ("-1") turns broadcasting off
+    val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold").trim
+    val fits = !threshold.startsWith("-") &&
+      deg.queryExecution.optimizedPlan.stats.sizeInBytes <=
+        org.apache.spark.network.util.JavaUtils.byteStringAsBytes(threshold)
+    def nodeSide(df: org.apache.spark.sql.DataFrame) = if (fits) broadcast(df) else df
+    var rank = deg.select(col("src").as("node"), lit(100000000L / n).as("r"))
+    for (_ <- 1 to 3) {
+      val shares = rank.join(nodeSide(deg), col("node") === col("src"))
+        .select(col("node"), expr("r div deg").as("share"))
+      rank = edges.join(nodeSide(shares), edges("src") === shares("node"))
+        .groupBy(col("dst"))
+        .agg(sum("share").as("s"))
+        .select(col("dst").as("node"),
+          (lit(15000000L / n) + expr("(85 * s) div 100")).as("r"))
+    }
+    rank.join(deg, col("node") === col("src"))
+      .select(col("node").as("part_key"), col("r").as("pagerank_e8"),
+        col("deg").as("degree"))
+      .orderBy(col("pagerank_e8").desc, col("part_key")).limit(20)
+  }
+
   /** q48's oracle pipeline (shingle pairs → Jaccard ≥ 0.2 edges →
     * recursive-CTE components), factored through `comp (doc_id,
     * group_id)` so retention variants (q48 keep-min, q97 keep-best)
@@ -1088,40 +1138,7 @@ object Ext2 {
       // distinct self-join and the degree aggregate exactly once —
       // per-query cost is the 3 iteration rounds only (VERDICT r15
       // item 5)
-      val edges = Ext3.coEdges(s, dir)
-      val deg = Ext3.coDegrees(s, dir)
-      val n = deg.count() // node count: 1-row driver scalar off the cached index
-      // r15 optimization (guide §1.2/§5): the rounds form a CHAIN with
-      // single references — rank_i is consumed only by round i+1 (and
-      // rank_3 only by the top-20 head), so ONE final action executes
-      // each round exactly once and the per-round persist + count()
-      // materialization round-trips (2 extra jobs/round, measured 23
-      // jobs/run) are pure scheduling overhead. An UNBOUNDED iteration
-      // would still persist per round to cut lineage (Iterative.
-      // fixpointRoundCounts does exactly that); 3 fixed rounds is a
-      // depth-3 plan.
-      var rank = deg.select(col("src").as("node"),
-        lit(100000000L / n).as("r"))
-      for (_ <- 1 to 3) {
-        // r16: BROADCAST the node-sized rank/share table explicitly —
-        // AQE's size estimate for the chained round subtree let the
-        // join plan flip so a round's probe ran in the ONE coalesced
-        // rank partition (stage-profiled: 2 serial ~400 ms single-task
-        // stages); with the hint every round probes the cached edge
-        // partitions in parallel. Node-sized side ≪ edges at any scale
-        // (it is the Pregel message table).
-        val shares = rank.join(broadcast(deg), col("node") === col("src"))
-          .select(col("node"), expr("r div deg").as("share"))
-        rank = edges.join(broadcast(shares), edges("src") === shares("node"))
-          .groupBy(col("dst"))
-          .agg(sum("share").as("s"))
-          .select(col("dst").as("node"),
-            (lit(15000000L / n) + expr("(85 * s) div 100")).as("r"))
-      }
-      val top = rank.join(deg, col("node") === col("src"))
-        .select(col("node").as("part_key"), col("r").as("pagerank_e8"),
-          col("deg").as("degree"))
-        .orderBy(col("pagerank_e8").desc, col("part_key")).limit(20)
+      val top = pagerankTop(s, Ext3.coEdges(s, dir), Ext3.coDegrees(s, dir))
       // the result is 20 rows: pin it locally (deg/edges stay cached:
       // they are the shared prdeg/predges indexes, released by
       // IndexCache at session scope, not per query.)

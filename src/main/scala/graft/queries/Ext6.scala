@@ -562,17 +562,25 @@ object Ext6 {
         .join(Tables.load(s, dir, "customer"), col("c_custkey") === col("o_custkey"))
         .groupBy(col("c_nationkey").as("nationkey"), col("o_custkey"))
         .agg(sum(round(col("o_totalprice") * 100, 0).cast("long")).cast("long").as("x"))
-      val g = rev.groupBy("nationkey")
-        .agg(count(lit(1)).cast("long").as("ng"), sum("x").cast("long").as("totg"))
-      val t = g.agg(sum("ng").cast("long").as("n"), sum("totg").cast("long").as("tot"))
-      val wg = rev.join(g, "nationkey")
-        .select(col("nationkey"),
-          (col("x") * round(log((col("x").cast("double") * col("ng").cast("double")) /
-            col("totg").cast("double")) * 10000, 0).cast("long")).as("term"))
-        .groupBy("nationkey").agg(sum("term").cast("long").as("sw"))
-      g.join(wg, "nationkey")
+      // ng/totg ride customer-sized `rev` as nation-partitioned windows,
+      // so the per-nation aggregate emits ng, totg and sw in one pass:
+      // no second rollup of `rev` joined back to it (Dist rule 1)
+      val byNation = Window.partitionBy("nationkey")
+      val g = rev
+        .select(col("nationkey"), col("x"),
+          count(lit(1)).over(byNation).cast("long").as("ng"),
+          sum("x").over(byNation).cast("long").as("totg"))
+        .groupBy("nationkey", "ng", "totg")
+        .agg(sum(col("x") * round(log((col("x").cast("double") *
+          col("ng").cast("double")) / col("totg").cast("double")) * 10000, 0)
+          .cast("long")).cast("long").as("sw"))
+      // gather: <= 25 nations, so n/tot are windows over the one
+      // partition and the final sort needs no exchange (Dist rule 2)
+      g.repartition(1)
+        .select(col("nationkey"), col("ng"), col("totg"), col("sw"),
+          sum("ng").over().cast("long").as("n"),
+          sum("totg").over().cast("long").as("tot"))
         .join(broadcast(Tables.load(s, dir, "nation")), col("n_nationkey") === col("nationkey"))
-        .crossJoin(broadcast(t))
         .select(col("n_name").as("nation"), col("ng").as("n_customers"),
           col("totg").as("total_cents"),
           round(col("sw").cast("double") / (col("totg").cast("double") * 10000), 6)
@@ -637,31 +645,31 @@ object Ext6 {
         |       CAST(ROUND(MAX(CASE WHEN rk = 2 THEN m END), 4) AS DOUBLE) AS ci_lo,
         |       CAST(ROUND(MAX(CASE WHEN rk = 31 THEN m END), 4) AS DOUBLE) AS ci_hi
         |FROM means CROSS JOIN pooled""".stripMargin) { (s, dir) =>
-      // r15 optimization (guide §2.3/§2.4): all 32 replicate (Σw·cents,
-      // Σw) pairs ride ONE scan as 64 aggregate expressions — the
-      // previous double explode blew 150k orders into 4.8M rows feeding
-      // a 32-group shuffle, and the `pooled` branch re-ran that whole
-      // subtree a second time (2 scans, 2 explode pipelines). Now: one
-      // projection computes the 8 md5 digests + 32 inverse-CDF weights
-      // per row (identical hash convention — same values as the oracle),
-      // one global HashAggregate partial-aggregates them per partition,
-      // and the 32-replicate order statistics come from sort_array over
-      // the 1-row result (struct(m, b) sorts exactly like the oracle's
-      // ROW_NUMBER ORDER BY m, b). The input repartition spreads the
-      // 1.2M md5 evaluations across the cores — the sf files are single
-      // row-group parquet, so the raw scan is one task (guide §2.5
-      // unsplittable input); at 100 TB the ingest layout splits anyway.
+      // All 32 replicate (Σw·cents, Σw) pairs ride ONE scan as 64
+      // aggregate expressions: one projection computes the 8 md5
+      // digests, the next the 32 uniforms, the next the 32 inverse-CDF
+      // weights (identical hash convention, so the same values as the
+      // oracle), and one global HashAggregate partial-aggregates them
+      // per partition. Each stage is its own projection over column
+      // refs, so the plan holds every digest, uniform and weight once:
+      // inlining a uniform into its 8 CASE arms put 256 conv/substring
+      // subtrees in the plan, and the analyzer and AQE paid for every
+      // one of them on each run. The 32-replicate order statistics come
+      // from sort_array over the 1-row result (struct(m, b) sorts
+      // exactly like the oracle's ROW_NUMBER ORDER BY m, b), also built
+      // once in its own projection. The input repartition spreads the
+      // 1.2M md5 evaluations across the cores: the sf files are single
+      // row-group parquet, so the raw scan is one task.
       val o = Tables.load(s, dir, "orders")
         .select(col("o_orderkey"), round(col("o_totalprice") * 100, 0).cast("long").as("cents"))
         .repartition(s.sparkContext.defaultParallelism)
-      val withH = (0 until 8).foldLeft(o) { (df, g) =>
-        df.withColumn(s"h$g",
-          md5(concat(col("o_orderkey").cast("string"), lit("#"),
-            lit(g).cast("string"))))
-      }
-      def wOf(g: Int, j: Int) = {
-        val u = (expr(s"cast(conv(substring(h$g, ${1 + 8 * j}, 8), 16, 10) as bigint)") + 1) /
-          lit(4294967296.0)
+      val hashes = o.select(col("cents") +: (0 until 8).map(g =>
+        md5(concat(col("o_orderkey").cast("string"), lit("#"), lit(g).cast("string")))
+          .as(s"h$g")): _*)
+      val uniforms = hashes.select(col("cents") +: (0 until 32).map(b =>
+        ((conv(substring(col(s"h${b / 4}"), 1 + 8 * (b % 4), 8), 16, 10).cast("long") + 1) /
+          lit(4294967296.0)).as(s"u$b")): _*)
+      def w(u: org.apache.spark.sql.Column) =
         when(u < 0.36787944117144233, 0)
           .when(u < 0.7357588823428847, 1)
           .when(u < 0.9196986029286058, 2)
@@ -671,28 +679,27 @@ object Ext6 {
           .when(u < 0.9999167588507119, 6)
           .when(u < 0.9999897508033253, 7)
           .otherwise(8)
-      }
-      val wide = withH.select(col("cents") +:
-        (0 until 32).map(b => wOf(b / 4, b % 4).as(s"w$b")): _*)
+      val wide = uniforms.select(col("cents") +:
+        (0 until 32).map(b => w(col(s"u$b")).as(s"w$b")): _*)
       val aggs = (0 until 32).flatMap(b => Seq(
         sum(col(s"w$b") * col("cents")).cast("long").as(s"swc$b"),
         sum(col(s"w$b")).cast("long").as(s"sw$b")))
-      val one = wide.agg(aggs.head, aggs.tail: _*)
       // replicate means as a 32-element array on the single result row;
       // sort_array(struct(m, b)) == the oracle's ORDER BY m, b
-      val ms = array((0 until 32).map(b => struct(
-        (col(s"swc$b").cast("double") / col(s"sw$b").cast("double") / 100).as("m"),
-        lit(b).as("b"))): _*)
-      val sortedMs = sort_array(ms)
-      val tswc = (0 until 32).map(b => col(s"swc$b")).reduce(_ + _)
-      val tsw = (0 until 32).map(b => col(s"sw$b")).reduce(_ + _)
-      one.select(
-        size(filter(ms, x => x.getField("m").isNotNull)).cast("long")
-          .as("n_replicates"),
-        round(tswc.cast("double") / tsw.cast("double") / 100, 4)
-          .cast("double").as("pooled_mean"),
-        round(element_at(sortedMs, 2).getField("m"), 4).cast("double").as("ci_lo"),
-        round(element_at(sortedMs, 31).getField("m"), 4).cast("double").as("ci_hi"))
+      val means = wide.agg(aggs.head, aggs.tail: _*).select(
+        array((0 until 32).map(b => struct(
+          (col(s"swc$b").cast("double") / col(s"sw$b").cast("double") / 100).as("m"),
+          lit(b).as("b"))): _*).as("ms"),
+        (0 until 32).map(b => col(s"swc$b")).reduce(_ + _).as("tswc"),
+        (0 until 32).map(b => col(s"sw$b")).reduce(_ + _).as("tsw"))
+      means.select(col("ms"), sort_array(col("ms")).as("sorted"), col("tswc"), col("tsw"))
+        .select(
+          size(filter(col("ms"), x => x.getField("m").isNotNull)).cast("long")
+            .as("n_replicates"),
+          round(col("tswc").cast("double") / col("tsw").cast("double") / 100, 4)
+            .cast("double").as("pooled_mean"),
+          round(element_at(col("sorted"), 2).getField("m"), 4).cast("double").as("ci_lo"),
+          round(element_at(col("sorted"), 31).getField("m"), 4).cast("double").as("ci_hi"))
     },
 
     // Association rules over the co-purchase pair cache: directed

@@ -3,7 +3,6 @@ package graft.queries
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Wave-10 operators (round-6 third session, cont.):
   *
@@ -150,28 +149,30 @@ object Ext7 {
       val m = b.groupBy("event_type")
         .agg(greatest(max("value"), lit(1e-12)).as("hi"),
           count(lit(1)).cast("long").as("n"))
-      val bins = b.join(broadcast(m), "event_type")
-        .select(col("event_type"),
+      // gather: the per-(type, bin) counts are <= event types x 256
+      // rows, so the running sum, the probe selection and the final sort
+      // all finish in that one partition with no further exchange
+      // (Dist rule 2); hi and n ride along as grouping columns
+      val cum = b.join(broadcast(m), "event_type")
+        .groupBy(col("event_type"), col("hi"), col("n"),
           least(greatest(floor(col("value") / (col("hi") / 256)).cast("long"), lit(0L)),
             lit(255L)).as("bin"))
-        .groupBy("event_type", "bin").agg(count(lit(1)).cast("long").as("cnt"))
-      val cum = bins.withColumn("cum",
-        sum("cnt").over(Window.partitionBy("event_type").orderBy("bin")).cast("long"))
-      val probes = Seq(0.5, 0.95, 0.99).foldLeft(Option.empty[DataFrame]) { (acc, p) =>
-        val one = b.sparkSession.range(1).select(lit(p).as("p"))
-        Some(acc.map(_.unionAll(one)).getOrElse(one))
-      }.get
-      val sel = cum.join(broadcast(m), "event_type").crossJoin(broadcast(probes))
+        .agg(count(lit(1)).cast("long").as("cnt"))
+        .repartition(1)
+        .withColumn("cum",
+          sum("cnt").over(Window.partitionBy("event_type").orderBy("bin")).cast("long"))
+      // each probe's bin is the first whose running count reaches p·n;
+      // min over a bin-led struct picks that bin's row in one aggregate
+      cum.select(col("*"), explode(array(lit(0.5), lit(0.95), lit(0.99))).as("p"))
         .filter(col("cum").cast("double") >= col("p") * col("n").cast("double"))
-        .groupBy("event_type", "p").agg(min("bin").as("bin"))
-      sel.join(broadcast(m), "event_type")
-        .join(cum.withColumnRenamed("bin", "cbin"),
-          Seq("event_type")).filter(col("cbin") === col("bin"))
-        .select(col("event_type"), col("p").as("quantile"), col("bin"),
-          round((col("hi") / 256) *
-            (col("bin").cast("double") +
-              (col("p") * col("n").cast("double") - (col("cum") - col("cnt")).cast("double")) /
-                col("cnt").cast("double")), 4).cast("double").as("estimate"))
+        .groupBy("event_type", "p")
+        .agg(min(struct("bin", "cum", "cnt", "hi", "n")).as("s"))
+        .select(col("event_type"), col("p").as("quantile"), col("s.bin").as("bin"),
+          round((col("s.hi") / 256) *
+            (col("s.bin").cast("double") +
+              (col("p") * col("s.n").cast("double") -
+                (col("s.cum") - col("s.cnt")).cast("double")) /
+                col("s.cnt").cast("double")), 4).cast("double").as("estimate"))
         .orderBy("event_type", "quantile")
     },
 

@@ -509,23 +509,24 @@ object Ext8 {
         when(col("lang") === "en", 1).otherwise(0).as("pos"))
       // decile via exact distributed rank (score DESC = negated
       // micro-unit key; DECIMAL(12,6)×1e6 is integral) — no
-      // single-partition window over the corpus. The later cum_pos
-      // sweep runs over the 10-row decile aggregate. r16: the NTILE
-      // total comes from the rank kernel's own metadata-scale offsets
-      // aggregate (rangedRankWithTotal) instead of a fresh sc.agg —
-      // that was a third corpus-scale derivation of the tokenize
-      // pipeline per run. (A persist of `sc` was tried first and
-      // REGRESSED: 17→39 jobs — caching the 8-partition frame defeated
-      // AQE coalescing downstream.)
+      // single-partition window over the corpus. The NTILE total comes
+      // from the rank kernel's own metadata-scale offsets aggregate
+      // (rangedRankWithTotal), not from a second corpus-scale pass.
       val ranked = Dist.rangedRankWithTotal(sc,
         -(col("score") * lit(1000000)).cast("long"), col("doc_id"), "rk", "__n")
       val dec = ranked.select(col("pos"),
         Dist.ntileFromRank(col("rk"), col("__n"), 10).as("decile"))
-      val g = dec.groupBy("decile")
+      // gather: <= 10 deciles, so total_pos and cum_pos are one window
+      // over the one partition and the final sort needs no exchange
+      // (Dist rule 2)
+      val byDecile = Window.orderBy("decile")
+      dec.groupBy("decile")
         .agg(count(lit(1)).cast("long").as("n_docs"), sum("pos").cast("long").as("n_pos"))
-      val t = g.agg(sum("n_pos").cast("long").as("total_pos"))
-      g.crossJoin(broadcast(t))
-        .withColumn("cum_pos", sum("n_pos").over(Window.orderBy("decile")).cast("long"))
+        .repartition(1)
+        .select(col("decile"), col("n_docs"), col("n_pos"),
+          sum("n_pos").over(byDecile).cast("long").as("cum_pos"),
+          sum("n_pos").over(byDecile.rowsBetween(Window.unboundedPreceding,
+            Window.unboundedFollowing)).cast("long").as("total_pos"))
         .select(col("decile").cast("long").as("decile"), col("n_docs"), col("n_pos"),
           col("cum_pos"),
           round(col("cum_pos").cast("double") / col("total_pos").cast("double"), 6)

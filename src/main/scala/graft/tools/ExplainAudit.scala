@@ -40,6 +40,8 @@ object ExplainAudit {
   final case class BoundedDomain(maxWindows: Int, rowBound: Long, why: String)
 
   val boundedDomainAllowlist: Map[String, BoundedDomain] = Map(
+    "q198_theil_decomposition" -> BoundedDomain(1, 25L,
+      "per-nation rollup: one row per TPC-H nation, 25 rows"),
     "q147_revenue_anomaly" -> BoundedDomain(2, 5000L,
       "day-grain revenue series: calendar-bounded (~2,400 TPC-H days), not data-bounded"),
     "q165_pareto_front" -> BoundedDomain(1, 120000L,

@@ -1,6 +1,12 @@
 package graft.queries
 
 import graft.{SparkSpec, SparkEntry}
+import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, Exchange, ShuffleExchangeLike}
+import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
 
 /** Plan-shape assertions — the 100 TB discipline checks: filters reach
   * the parquet scan, small dims broadcast, top-k avoids a global sort,
@@ -14,6 +20,52 @@ class PlanSpec extends SparkSpec {
   private def plan(name: String): String = {
     val df = SparkEntry.queries(name)(spark, sf)
     df.queryExecution.executedPlan.toString
+  }
+
+  /** The exchanges a query's plan runs, read from AQE's initial plan;
+    * exchanges with the same canonical form count once, as reuse runs
+    * them once. */
+  private def exchanges(name: String): Seq[Exchange] = {
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case _ => p +: p.children.flatMap(nodes)
+    }
+    val all = nodes(SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan)
+      .collect { case e: Exchange => e }
+    all.groupBy(_.canonicalized).values.map(_.head).toSeq
+  }
+
+  /** Whether `p` reads an aggregate's output: walks down unary nodes and
+    * the streamed side of broadcast joins, and stops at the first
+    * aggregate (true) or exchange or leaf (false). */
+  @annotation.tailrec
+  private def aboveAggregate(p: SparkPlan): Boolean = p match {
+    case _: BaseAggregateExec => true
+    case _: Exchange | _: LeafExecNode => false
+    case j: BroadcastHashJoinExec =>
+      aboveAggregate(if (j.buildSide == BuildLeft) j.right else j.left)
+    case j: BroadcastNestedLoopJoinExec =>
+      aboveAggregate(if (j.buildSide == BuildLeft) j.right else j.left)
+    case _ if p.children.size == 1 => aboveAggregate(p.children.head)
+    case _ => false
+  }
+
+  /** Asserts the query's shuffle and broadcast exchange counts and that
+    * every single-partition shuffle (a gather, or the exchange an
+    * unpartitioned window or global aggregate needs) reads an
+    * aggregate's output, never a scan of fact-sized input. */
+  private def assertExchangeBudget(name: String, shuffles: Int, broadcasts: Int): Unit = {
+    val ex = exchanges(name)
+    val sh = ex.collect { case e: ShuffleExchangeLike => e }
+    val bc = ex.collect { case e: BroadcastExchangeLike => e }
+    info(s"$name: ${sh.size} shuffles, ${bc.size} broadcasts")
+    assert(sh.size <= shuffles && bc.size <= broadcasts,
+      s"$name: ${sh.size} shuffles (budget $shuffles), ${bc.size} broadcasts " +
+        s"(budget $broadcasts):\n${ex.mkString("\n")}")
+    sh.filter(_.outputPartitioning.numPartitions == 1).foreach { e =>
+      assert(aboveAggregate(e.child), s"$name: single-partition exchange over " +
+        s"non-aggregated input:\n$e")
+    }
   }
 
   test("q01: filter pushdown + column pruning reach the scan") {
@@ -322,6 +374,26 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("Join") && !p.contains("Exchange"), p)
   }
 
+  test("q140: node-table broadcast hints hold only below the broadcast threshold") {
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, ResolvedHint}
+    val (edges, deg) = (Ext3.coEdges(spark, sf), Ext3.coDegrees(spark, sf))
+    def hints(threshold: String): Int = {
+      val key = "spark.sql.autoBroadcastJoinThreshold"
+      val prev = spark.conf.get(key)
+      spark.conf.set(key, threshold)
+      try Ext2.pagerankTop(spark, edges, deg).queryExecution.analyzed.collect {
+        case h: ResolvedHint if h.hints.strategy.contains(BROADCAST) => h
+      }.size
+      finally spark.conf.set(key, prev)
+    }
+    // deg and shares in each of the 3 rounds
+    assert(hints("64MB") === 6)
+    // the cached degree index is larger than 1 byte: the joins go to
+    // the planner, which may still broadcast by its own size estimate
+    assert(hints("1b") === 0)
+    assert(hints("-1") === 0)
+  }
+
   test("q141: skew audit is one scan fanned out + combined aggregates") {
     val p = plan("q141_key_skew_audit")
     assert(p.contains("Generate"), "map-side explode fan-out: " + p)
@@ -550,5 +622,17 @@ class PlanSpec extends SparkSpec {
     val p = df.queryExecution.executedPlan.toString
     // "*(n)" prefixes mark WholeStageCodegen stages in simpleString
     assert(p.contains("*("), p)
+  }
+
+  test("q198: one rollup pass; the <= 25-nation tail is gathered once") {
+    assertExchangeBudget("q198_theil_decomposition", shuffles = 3, broadcasts = 2)
+  }
+
+  test("q203: per-(type, bin) counts gathered once; probes need no join") {
+    assertExchangeBudget("q203_binned_quantiles", shuffles = 3, broadcasts = 1)
+  }
+
+  test("q218: the 10-decile tail is gathered once; no 1-row total broadcast") {
+    assertExchangeBudget("q218_gains_table", shuffles = 9, broadcasts = 3)
   }
 }
